@@ -733,21 +733,14 @@ def _q_events_busy_time_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the file source (``Trigger.AvailableNow``) into
     ``streaming.events.stream_interval_union``.
 
-    Engine (r18, same move as the burst gate): ``engine="jvm"`` — an
-    interval ``[s, e)`` is an event at ``s`` with a DYNAMIC session
-    gap of ``e − s``, and ``session_window`` merges
-    overlapping-or-touching sessions exactly like the operator's
-    island fusion, so the replay is one built-in streaming
-    session-window aggregation in complete mode (one row per ISLAND)
-    with no per-key Python group dispatch. The per-user rollup
-    (n_islands / covered / max_island) runs on the sink table — the
-    same numbers the pandas engine's final emission carries, same
-    oracle (the batch islands), order-independent by construction.
-
-    The pandas engine (``applyInPandasWithState`` island lists,
-    state bounded by the key's GAP structure) remains the
-    continuous-feed form; its prefix-equivalence contract is tested
-    in the operator suite."""
+    An interval ``[s, e)`` is an event at ``s`` with a DYNAMIC
+    session gap of ``e − s``, and ``session_window`` merges
+    overlapping-or-touching sessions exactly like the island fusion
+    rule, so the replay is one built-in streaming session-window
+    aggregation in complete mode (one row per ISLAND) with no Python
+    worker. The per-user rollup (n_islands / covered / max_island)
+    runs on the sink table; oracle = the batch islands,
+    order-independent by construction."""
     from omop_etl_spark.streaming.events import (
         read_events_stream,
         stream_interval_union,
@@ -763,7 +756,7 @@ def _q_events_busy_time_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("e"),
     )
     tbl = _run_available_now(
-        stream_interval_union(iv, "user_id", "s", "e", engine="jvm"),
+        stream_interval_union(iv, "user_id", "s", "e"),
         "busy_replay",
         output_mode="complete",
     )
@@ -961,27 +954,23 @@ def _q_events_burst_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the first event of every burst (chain with consecutive gaps
     < 10 min) survives.
 
-    Engine (r18, VERDICT r17 #1): ``engine="jvm"`` — a burst IS a
-    ``session_window(ts, 600s)`` group and the survivor its
-    ``min(struct(ts, id))``, so the replay is one built-in streaming
-    session-window aggregation in **complete** mode (an unwatermarked
-    streaming aggregate cannot append, and a finite replay's last
-    sessions never pass a watermark). No per-key Python group
-    dispatch remains — the ~90 µs/key/batch that made the pandas
-    replay superlinear on the growing (user, type) key set (128 s at
-    the sf10 tier, SCALEPROBE_stream_r17). Complete-mode state holds
-    every session of the bounded replay — the right trade for a
-    backfill gate; a continuous feed would run the same aggregation
-    in append mode behind a watermark (state then evicts as sessions
-    close) or keep ``engine="pandas"``'s one-timestamp-per-key state.
+    A burst IS a ``session_window(ts, 600s)`` group and the survivor
+    its ``min(struct(ts, id))``, so the replay is one built-in
+    streaming session-window aggregation in **complete** mode (an
+    unwatermarked streaming aggregate cannot append, and a finite
+    replay's last sessions never pass a watermark) with no Python
+    worker (VERDICT r17 #1: the per-key Python dispatch it replaced
+    took 128 s at the sf10 tier, SCALEPROBE_stream_r17). Complete-mode
+    state holds every session of the bounded replay — the right trade
+    for a backfill gate; a continuous feed would run the same
+    aggregation in append mode behind a watermark (state then evicts
+    as sessions close).
 
     Oracle = the batch twin's oracle VERBATIM
     (``ORACLE_EVENTS_BURST_DEDUP``): session merging is a pure
     function of the event SET, so the emitted survivors equal batch
-    ``burst_dedup`` for ANY arrival order — stronger than the pandas
-    path's per-key-ordered prefix contract (still asserted for that
-    engine in tests/test_incremental_replay.py; jvm==pandas==batch
-    parity pinned in the same suite). Survivors appear exactly once
+    ``burst_dedup`` for ANY arrival order (pinned in
+    tests/test_incremental_replay.py). Survivors appear exactly once
     in the final complete-mode table, so the per-type aggregation
     needs no dedup trick."""
     from omop_etl_spark.streaming.events import (
@@ -996,7 +985,6 @@ def _q_events_burst_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_col="ts",
         id_col="event_id",
         gap_seconds=600,
-        engine="jvm",
     )
     return (
         _run_available_now(kept, "burst_replay", output_mode="complete")
@@ -1209,10 +1197,7 @@ def _q_events_logq_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFram
     whose bucket id is a whole-stage-codegen integer expression), the
     bounded-state answer to "what is p50 of this metric so far, right
     now?" with NO Python worker anywhere: rows never leave the JVM
-    and state is one long per live (key, bucket) register. The
-    per-batch-inline-estimate convenience form
-    (``stream_logq_quantile``, applyInPandasWithState) remains in the
-    package; this gate runs the 100-TB path.
+    and state is one long per live (key, bucket) register.
 
     The registers are a pure function of the value MULTISET
     (order-independent counts), so the final sketch equals batch

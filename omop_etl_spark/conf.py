@@ -22,11 +22,11 @@ __all__ = [
 ]
 
 #: session conf for :func:`checkpoint_if_large`'s size gate (bytes).
-#: Frames whose Catalyst size ESTIMATE falls below it are returned
-#: un-checkpointed: at small tiers the duplicate subtree re-reads
-#: page-cached data for less than the materialization job costs, while
-#: at cluster tiers the estimate (driven by input file sizes) clears
-#: any sane threshold and the measured dedup-the-pass wins apply.
+#: Frames whose caller-supplied INPUT-bytes ``size_hint`` falls below
+#: it are returned un-checkpointed: at small tiers the duplicate
+#: subtree re-reads page-cached data for less than the materialization
+#: job costs, while at cluster tiers the input bytes clear any sane
+#: threshold and the measured dedup-the-pass wins apply.
 CHECKPOINT_MIN_BYTES_CONF = "spark.omop_etl.checkpoint.minBytes"
 DEFAULT_CHECKPOINT_MIN_BYTES = 64 * 1024 * 1024
 

@@ -39,13 +39,13 @@ __all__ = [
     "hourly_counts",
     "sliding_counts",
     "sessionize",
+    "sessionize_batch",
     "stream_dedup",
     "enrich_stream",
     "stream_interval_join",
     "stream_kmv_distinct",
     "stream_interval_union",
     "stream_logq_buckets",
-    "stream_logq_quantile",
     "dq_monitor_stream",
     "stream_latest_state",
     "stream_cdc_state",
@@ -237,7 +237,6 @@ def stream_dedup(
         return events.dropDuplicates(keys)
 
     schema = events.schema
-    use_ttl = True
 
     def dedup_fn(key, pdf_iter, state):
         if state.hasTimedOut:
@@ -252,19 +251,14 @@ def stream_dedup(
             n += len(pdf)
         prev = state.get[0] if state.exists else 0
         state.update((prev + n,))
-        if use_ttl:
-            state.setTimeoutDuration(ttl_minutes * 60 * 1000)
+        state.setTimeoutDuration(ttl_minutes * 60 * 1000)
 
     return events.groupBy(*keys).applyInPandasWithState(
         dedup_fn,
         outputStructType=schema,
         stateStructType="n_seen long",
         outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if use_ttl
-            else GroupStateTimeout.NoTimeout
-        ),
+        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
 
 
@@ -467,219 +461,58 @@ def stream_interval_union(
     key_col: str,
     start_col: str,
     end_col: str,
-    engine: str = "pandas",
 ) -> DataFrame:
-    """Streaming twin of ``operators.temporal.interval_union``: a
-    running merged-interval coverage (busy-time / uptime) per key over
-    an unbounded, possibly OUT-OF-ORDER stream of half-open intervals
-    ``[start, end)``. ``start_col`` / ``end_col`` are int64 epoch
-    MICROSECONDS.
+    """Streaming twin of ``operators.temporal.interval_union``: merged
+    interval coverage (busy-time / uptime) per key over an unbounded,
+    possibly OUT-OF-ORDER stream of half-open intervals ``[start,
+    end)``. ``start_col`` / ``end_col`` are int64 epoch MICROSECONDS
+    with ``end > start``; a row breaking that fails the query (a
+    session gap must be positive, and Spark would otherwise drop the
+    row silently).
 
-    ``engine="jvm"`` (r18): an interval ``[s, e)`` is an event at
-    ``s`` with a DYNAMIC session gap of ``e - s`` — Spark's
-    ``session_window`` merges overlapping-or-TOUCHING sessions
-    (break is strictly greater than the gap, probed r12), which is
-    exactly this operator's island fusion rule, so the merged islands
-    are one built-in streaming session-window aggregation with NO
-    per-key Python dispatch. Output here is one row per ISLAND —
-    ``(key, island_start, island_end)``, epoch-µs longs — because the
-    per-key rollup (count/covered/max) is a second aggregation a
-    single streaming query cannot chain; run it on the sink (the
-    replay gate does) or downstream. Run complete mode on a bounded
-    replay / append behind a watermark on a continuous feed (same
-    trade as :func:`stream_burst_dedup`). Requires ``e > s`` (a
-    session gap must be positive; the pandas engine also accepts
-    degenerate ``e == s`` points).
+    An interval ``[s, e)`` is an event at ``s`` with a DYNAMIC session
+    gap of ``e - s``. ``session_window`` merges overlapping-or-TOUCHING
+    sessions (its break is strictly greater than the gap), which is
+    exactly the island fusion rule, so the operator is one built-in
+    streaming session-window aggregation with no Python worker.
+    Session merging is a pure function of the interval SET, so after
+    any prefix of the stream the islands equal batch
+    ``interval_union``'s, whatever the arrival order.
 
-    ``engine="pandas"`` (default): state per key is the DISJOINT
-    ISLAND LIST (sorted start/end arrays): each arriving interval
-    binary-searches the islands it overlaps or touches and fuses them
-    in O(log I + merged). That state is bounded by the key's
-    merged-span structure — its GAPS — not by row count: overlapping
-    traffic collapses into existing islands, so a key with steady
-    activity holds O(1) islands forever (the property raw-event
-    buffering lacks). A watermark-eviction variant could additionally
-    retire islands older than the watermark; kept out deliberately so
-    the emitted numbers stay prefix-exact.
-
-    After ANY prefix of the stream the per-key emission EQUALS the
-    batch ``interval_union`` of the same prefix — out-of-order arrival
-    included, because island fusion is order-independent (set union of
-    covered points) — an exactly testable equivalence (both engines;
-    the jvm form is order-independent by construction). The pandas
-    engine emits one ``(key, n_islands, covered, max_island)`` row per
-    key per micro-batch in which that key received data (append mode).
+    Output is one row per ISLAND — ``(key, island_start,
+    island_end)``, epoch-µs longs. The per-key rollup (count / covered
+    / max) is a second aggregation a single streaming query cannot
+    chain; run it on the sink or downstream. Run **complete** mode on
+    a bounded replay (the last islands of a finite stream never pass a
+    watermark, so append mode would hold them back forever); on a
+    continuous feed, watermark the stream and run append mode so
+    state evicts as islands close — without a watermark, state holds
+    every island seen.
     """
-    if engine == "jvm":
-        ts = F.timestamp_micros(F.col(start_col))
-        gap = F.concat(
+    ok = F.col(end_col) > F.col(start_col)
+    gap = F.when(
+        ok,
+        F.concat(
             (F.col(end_col) - F.col(start_col)).cast("string"),
             F.lit(" microseconds"),
-        )
-        return (
-            stream.groupBy(F.col(key_col), F.session_window(ts, gap))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                key_col,
-                F.unix_micros(F.col("session_window.start")).alias(
-                    "island_start"
-                ),
-                F.unix_micros(F.col("session_window.end")).alias(
-                    "island_end"
-                ),
+        ),
+    ).otherwise(
+        F.raise_error(
+            F.lit(
+                f"stream_interval_union: requires {end_col} > {start_col} "
+                f"for every row (half-open [{start_col}, {end_col}))"
             )
         )
-    if engine != "pandas":
-        raise ValueError(f"unknown engine: {engine!r}")
-
-    import bisect
-
-    def fn(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:  # pragma: no cover - no timeout configured
-            state.remove()
-            return
-        starts, ends = (
-            (list(state.get[0]), list(state.get[1])) if state.exists else ([], [])
-        )
-        for pdf in pdf_iter:
-            for s, e in zip(pdf[start_col], pdf[end_col]):
-                s, e = int(s), int(e)
-                # islands overlapping-or-touching [s, e): the run with
-                # ends[j] >= s and starts[j] <= e (arrays co-sorted —
-                # islands are disjoint)
-                lo = bisect.bisect_left(ends, s)
-                hi = bisect.bisect_right(starts, e)
-                if lo < hi:
-                    s = min(s, starts[lo])
-                    e = max(e, ends[hi - 1])
-                    del starts[lo:hi]
-                    del ends[lo:hi]
-                idx = bisect.bisect_left(starts, s)
-                starts.insert(idx, s)
-                ends.insert(idx, e)
-        state.update((starts, ends))
-        lens = [b - a for a, b in zip(starts, ends)]
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "n_islands": [len(lens)],
-                "covered": [sum(lens)],
-                "max_island": [max(lens)],
-            }
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    key_type = dict(zip(stream.schema.names, stream.schema))[
-        key_col
-    ].dataType.simpleString()
-    return stream.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=(
-            f"{key_col} {key_type}, n_islands long, covered long, max_island long"
-        ),
-        stateStructType="starts array<long>, ends array<long>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def stream_logq_quantile(
-    events: DataFrame,
-    key_col: str,
-    value_col: str,
-    m: int = 5,
-    quantile: tuple[int, int] = (1, 2),
-) -> DataFrame:
-    """Streaming twin of ``operators.sketches.logq_buckets`` /
-    ``logq_quantiles``: a running quantile estimate per key over an
-    unbounded stream, state bounded to the log-linear bucket registers
-    (O(octaves * 2^m) counts per key — a few hundred longs) no matter
-    how many rows flow past.  The monitoring question this answers —
-    "what is p50/p99 of this metric so far, right now?" — is exactly
-    the one an unbounded exact quantile cannot, because its state is
-    the whole value multiset.
-
-    Uses the same pure-integer bucket index as the batch operator
-    (bit-length octave + 2^m linear sub-buckets) and the same
-    lower-quantile rank rule, so after any prefix of the stream the
-    per-key ``(n, q_est)`` EQUALS batch
-    ``logq_quantiles(logq_buckets(prefix))`` — an exactly testable
-    streaming/batch equivalence (the stream_kmv_distinct contract).
-
-    ``value_col`` must be integral and >= 1 to count (quantize floats
-    upstream, e.g. cents); non-positive values are ignored, mirroring
-    the batch operator's positivity filter.  Emits one
-    ``(key, n, q_est)`` row per key per micro-batch (append mode).
-    The register update is plain Python over Arrow batches — O(1)
-    dict bumps per row against register-bounded state.
-
-    SCALE NOTE (r17): prefer :func:`stream_logq_buckets` — the
-    pure-JVM register stream (no Python worker at all) — and read
-    quantiles off the registers with the batch
-    ``sketches.logq_quantiles``. This convenience form remains for
-    per-batch inline estimates at modest key cardinality; every row
-    and every key crosses the Python boundary here.
-    """
-    two_m = 1 << m
-    num, den = quantile
-
-    def _bucket(v: int) -> int:
-        bl = v.bit_length()
-        return bl * two_m + (v * two_m) // (1 << (bl - 1)) - two_m
-
-    def _lb(b: int) -> int:
-        bl, sub = divmod(b, two_m)
-        return ((1 << (bl - 1)) * (two_m + sub)) // two_m
-
-    def logq_fn(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:  # pragma: no cover - no timeout configured
-            state.remove()
-            return
-        cur = (
-            dict(zip(state.get[0], state.get[1])) if state.exists else {}
+    ts = F.timestamp_micros(F.col(start_col))
+    return (
+        stream.groupBy(F.col(key_col), F.session_window(ts, gap))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            key_col,
+            F.unix_micros(F.col("session_window.start")).alias("island_start"),
+            F.unix_micros(F.col("session_window.end")).alias("island_end"),
         )
-        for pdf in pdf_iter:
-            for v in pdf[value_col]:
-                # NULLs arrive as NaN after Arrow->pandas; skip BEFORE
-                # int() so a nullable value column degrades to the
-                # documented "non-positive values are ignored" behavior
-                # instead of crashing the state function
-                if pd.isna(v):
-                    continue
-                v = int(v)
-                if v >= 1:
-                    b = _bucket(v)
-                    cur[b] = cur.get(b, 0) + 1
-        items = sorted(cur.items())
-        state.update(([b for b, _ in items], [c for _, c in items]))
-        n = sum(c for _, c in items)
-        est = None
-        if n:
-            thr = (num * (n - 1)) // den + 1
-            run = 0
-            for b, c in items:
-                run += c
-                if run >= thr:
-                    est = _lb(b)
-                    break
-        yield pd.DataFrame({key_col: [key[0]], "n": [n], "q_est": [est]})
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    key_type = dict(zip(events.schema.names, events.schema))[
-        key_col
-    ].dataType.simpleString()
-    return events.groupBy(key_col).applyInPandasWithState(
-        logq_fn,
-        outputStructType=f"{key_col} {key_type}, n long, q_est long",
-        stateStructType="buckets array<long>, counts array<long>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -706,9 +539,8 @@ def stream_logq_buckets(
     cumulative counts, which are NONDECREASING — so the final sketch
     is recoverable from any emission log as ``max(c)`` per
     ``(key, bucket)``, and quantiles read off it with the batch
-    ``sketches.logq_quantiles`` (the exact streaming == batch
-    equivalence the pandas operator documents, now without the
-    per-row/per-key Python tax).
+    ``sketches.logq_quantiles`` — after any prefix of the stream they
+    equal batch ``logq_quantiles(logq_buckets(prefix))`` exactly.
 
     Output: ``(key_col, bucket, c)`` — the ``logq_buckets`` register
     schema. Rows with ``value < 1`` are ignored (positivity filter).
@@ -756,7 +588,6 @@ def stream_latest_state(
     key_col: str,
     ord_col: str,
     value_col: str,
-    engine: str = "jvm",
 ) -> DataFrame:
     """Streaming last-writer-wins state (the CDC/SCD1 'current value'
     table as a stream): per key, keep the value with the highest
@@ -769,90 +600,31 @@ def stream_latest_state(
     broken deterministically by the greater value string (NULL loses
     to any value), applied identically within a micro-batch and across
     batches — so the surviving value for duplicate ord keys is a pure
-    function of the data, independent of how rows were batched.  State
-    per key is one (ord, value) pair, so memory is bounded by the
-    live-key set.
+    function of the data, independent of how rows were batched.
 
-    ``engine="jvm"`` (default): the reduction is a monotone argmax
-    over the total order ``(ord, value)`` — with NULL sorting first,
-    Spark's struct ordering IS that order — so the whole operator is a
-    built-in streaming aggregation ``groupBy(key).agg(max(struct(ord,
-    value)))``. Run the sink in **update** mode (an aggregate without
-    a watermark cannot append). Everything stays JVM-side: state in
-    the state store (RocksDB on a real cluster), per-key cost is a
-    hash-agg probe — no per-key Python group dispatch (~90 µs/key/
-    batch), which is what dominated the pandas path at 5 M live keys
-    (SCALE.md: 453 s for the sf10 CDC replay, ~60 k rows/s).
-
-    ``engine="pandas"`` keeps the ``applyInPandasWithState``
-    formulation (append-mode emissions). Its per-batch reduction is
-    vectorized, but each live key still crosses the Python boundary
-    once per batch — use it only as the template for variants that
-    genuinely need custom state (TTL expiry, non-monotone reducers);
-    both paths emit identical rows per micro-batch.
+    The reduction is a monotone argmax over the total order ``(ord,
+    value)`` — with NULL sorting first, Spark's struct ordering IS that
+    order — so the operator is the built-in streaming aggregation
+    ``groupBy(key).agg(max(struct(ord, value)))``: state is one (ord,
+    value) pair per key in the state store, no Python worker. Run the
+    sink in **update** mode (an aggregate without a watermark cannot
+    append). No watermark is needed: state is bounded by the live-key
+    set, which an LWW table must keep anyway.
     """
-    if engine == "jvm":
-        w = F.max(
-            F.struct(
-                F.col(ord_col).cast("long").alias(ord_col),
-                F.col(value_col).cast("string").alias(value_col),
-            )
-        ).alias("__w")
-        return (
-            stream.groupBy(key_col)
-            .agg(w)
-            .select(
-                key_col,
-                F.col(f"__w.{ord_col}").alias(ord_col),
-                F.col(f"__w.{value_col}").alias(value_col),
-            )
+    w = F.max(
+        F.struct(
+            F.col(ord_col).cast("long").alias(ord_col),
+            F.col(value_col).cast("string").alias(value_col),
         )
-    if engine != "pandas":
-        raise ValueError(f"unknown engine: {engine!r}")
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    key_type = dict(zip(stream.schema.names, stream.schema))[key_col].dataType.simpleString()
-
-    def latest_fn(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:  # pragma: no cover - no timeout configured
-            state.remove()
-            return
-        def wins(o, v, bo, bv):
-            # deterministic total order on (ord, value): higher ord
-            # wins; on an ord tie the greater value string wins and
-            # NULL loses to any value — the same rule within a batch
-            # and across batches, so batching cannot change the result
-            if bo is None or o > bo:
-                return True
-            if o < bo:
-                return False
-            return v is not None and (bv is None or v > bv)
-
-        best_ord, best_val = state.get if state.exists else (None, None)
-        for pdf in pdf_iter:
-            if len(pdf) == 0:
-                continue
-            mo = pdf[ord_col].max()
-            sub = pdf.loc[pdf[ord_col] == mo, value_col]
-            vals = [None if pd.isna(x) else str(x) for x in sub]
-            nonnull = [x for x in vals if x is not None]
-            o, v = int(mo), (max(nonnull) if nonnull else None)
-            if wins(o, v, best_ord, best_val):
-                best_ord, best_val = o, v
-        state.update((best_ord, best_val))
-        yield pd.DataFrame(
-            {key_col: [key[0]], ord_col: [best_ord], value_col: [best_val]}
+    ).alias("__w")
+    return (
+        stream.groupBy(key_col)
+        .agg(w)
+        .select(
+            key_col,
+            F.col(f"__w.{ord_col}").alias(ord_col),
+            F.col(f"__w.{value_col}").alias(value_col),
         )
-
-    return stream.groupBy(key_col).applyInPandasWithState(
-        latest_fn,
-        outputStructType=f"{key_col} {key_type}, {ord_col} long, {value_col} string",
-        stateStructType="best_ord long, best_val string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -863,7 +635,6 @@ def stream_cdc_state(
     value_col: str,
     op_col: str = "op",
     delete_op: str = "D",
-    engine: str = "jvm",
 ) -> DataFrame:
     """Streaming CDC materialization WITH deletes — the streaming twin
     of ``temporal.apply_cdc`` (VERDICT r7 #6: ``stream_latest_state``
@@ -871,130 +642,52 @@ def stream_cdc_state(
 
     Per key, the change with the highest ``ord_col`` wins, whatever
     order batches arrive in; each micro-batch emits the winning
-    ``(ord, op, value)`` for every key that received data. An
-    append-mode stream cannot retract, so a delete is emitted as a row
-    with ``op = delete_op`` and NULL value — the consumer materializes
-    the current table as "last emission per key where op != delete_op"
-    (exactly what the replay test folds, and what a keyed sink's
-    tombstone write does).
+    ``(ord, op, value)`` for every key that received data. A stream
+    cannot retract, so a delete is emitted as a row with ``op =
+    delete_op`` and NULL value — the consumer materializes the current
+    table as "last emission per key where op != delete_op" (exactly
+    what the replay test folds, and what a keyed sink's tombstone
+    write does).
 
     Like ``apply_cdc``, results are a pure function of the change set
     only when ``ord_col`` totally orders each key's changes (a log
     sequence number); on an ord tie the greater ``(op, value)`` string
     pair wins (NULL loses), applied identically within and across
-    batches so batching still cannot change the outcome. State per key
-    is one (ord, op, value) triple — a deleted key keeps its tombstone
-    so late pre-delete changes cannot resurrect it (bound the live-key
-    set upstream with retention if keys churn forever).
+    batches so batching still cannot change the outcome.
 
-    ``engine="jvm"`` (default): the reducer is a monotone argmax over
-    the total order ``(ord, op, value)`` — the exact order the Python
-    path's ``pair()`` encodes, because struct comparison sorts NULL
-    first (None < "" < any string, same as ``(x is not None, x or
-    "")``) — so the operator is a built-in streaming aggregation
-    ``groupBy(key).agg(max(struct(ord, op, value)))`` with the
-    tombstone NULL applied in the output projection. Run the sink in
-    **update** mode. No Python worker: per-key cost is a JVM hash-agg
-    probe instead of the pandas path's ~90 µs/key/batch group
-    dispatch — on the sf10 replay (27.5 M changes, 5 M live keys)
-    that dispatch alone was ~450 s.
-
-    ``engine="pandas"`` keeps the ``applyInPandasWithState``
-    formulation (append mode, vectorized per-batch reduction) as the
-    template for variants needing genuinely custom state; both paths
-    emit identical rows per micro-batch.
+    The reducer is a monotone argmax over the total order ``(ord, op,
+    value)`` — struct comparison sorts NULL first — so the operator is
+    the built-in streaming aggregation ``groupBy(key).agg(max(struct(
+    ord, op, value)))`` with the tombstone NULL applied in the output
+    projection; no Python worker. Run the sink in **update** mode. No
+    watermark is needed: state is one (ord, op, value) triple per key,
+    and a deleted key keeps its tombstone so late pre-delete changes
+    cannot resurrect it (bound the live-key set upstream with
+    retention if keys churn forever).
     """
-    if engine == "jvm":
-        w = F.max(
-            F.struct(
-                F.col(ord_col).cast("long").alias(ord_col),
-                F.col(op_col).cast("string").alias(op_col),
-                F.col(value_col).cast("string").alias(value_col),
-            )
-        ).alias("__w")
-        return (
-            stream.groupBy(key_col)
-            .agg(w)
-            .select(
-                key_col,
-                F.col(f"__w.{ord_col}").alias(ord_col),
-                F.col(f"__w.{op_col}").alias(op_col),
-                # append-mode streams cannot retract: a winning delete
-                # emits op = delete_op with NULL value (the tombstone),
-                # exactly like the pandas path
-                F.when(
-                    F.col(f"__w.{op_col}") == delete_op,
-                    F.lit(None).cast("string"),
-                )
-                .otherwise(F.col(f"__w.{value_col}"))
-                .alias(value_col),
-            )
+    w = F.max(
+        F.struct(
+            F.col(ord_col).cast("long").alias(ord_col),
+            F.col(op_col).cast("string").alias(op_col),
+            F.col(value_col).cast("string").alias(value_col),
         )
-    if engine != "pandas":
-        raise ValueError(f"unknown engine: {engine!r}")
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    key_type = dict(zip(stream.schema.names, stream.schema))[key_col].dataType.simpleString()
-
-    def cdc_fn(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:  # pragma: no cover - no timeout configured
-            state.remove()
-            return
-
-        def pair(op, val):
-            # deterministic tie order on (op, value): encode None as
-            # the minimum so NULL loses to any value
-            return ((op is not None, op or ""), (val is not None, val or ""))
-
-        def wins(o, op, v, bo, bop, bv):
-            if bo is None or o > bo:
-                return True
-            if o < bo:
-                return False
-            return pair(op, v) > pair(bop, bv)
-
-        best_ord, best_op, best_val = (
-            state.get if state.exists else (None, None, None)
-        )
-        saw = False
-        for pdf in pdf_iter:
-            if len(pdf) == 0:
-                continue
-            saw = True
-            # the reduction is an associative argmax over the total
-            # order (ord, pair(op, value)), so each batch reduces
-            # vectorized to its single winner before one state compare
-            mo = int(pdf[ord_col].max())
-            sub = pdf.loc[pdf[ord_col] == mo, [op_col, value_col]]
-            ops = [None if pd.isna(x) else str(x) for x in sub[op_col]]
-            vals = [None if pd.isna(x) else str(x) for x in sub[value_col]]
-            op, v = max(zip(ops, vals), key=lambda t: pair(*t))
-            if wins(mo, op, v, best_ord, best_op, best_val):
-                best_ord, best_op, best_val = mo, op, v
-        state.update((best_ord, best_op, best_val))
-        if saw:
-            out_val = None if best_op == delete_op else best_val
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    ord_col: [best_ord],
-                    op_col: [best_op],
-                    value_col: [out_val],
-                }
+    ).alias("__w")
+    return (
+        stream.groupBy(key_col)
+        .agg(w)
+        .select(
+            key_col,
+            F.col(f"__w.{ord_col}").alias(ord_col),
+            F.col(f"__w.{op_col}").alias(op_col),
+            # a winning delete emits op = delete_op with NULL value
+            # (the tombstone)
+            F.when(
+                F.col(f"__w.{op_col}") == delete_op,
+                F.lit(None).cast("string"),
             )
-
-    return stream.groupBy(key_col).applyInPandasWithState(
-        cdc_fn,
-        outputStructType=(
-            f"{key_col} {key_type}, {ord_col} long, "
-            f"{op_col} string, {value_col} string"
-        ),
-        stateStructType="best_ord long, best_op string, best_val string",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+            .otherwise(F.col(f"__w.{value_col}"))
+            .alias(value_col),
+        )
     )
 
 
@@ -1004,138 +697,45 @@ def stream_burst_dedup(
     ts_col: str,
     id_col: str,
     gap_seconds: int = 300,
-    engine: str = "pandas",
 ) -> DataFrame:
     """Streaming twin of ``operators.temporal.burst_dedup``: emit only
     the first event of every burst (chain of same-key events with
     consecutive gaps < ``gap_seconds``), continuously.
 
-    ``engine="jvm"`` (r18): a burst IS a ``session_window(ts,
-    gap_seconds)`` group — Spark's gap-based session sessionizes
-    exactly the maximal chains whose consecutive gaps are < gap — and
-    the burst survivor is the session's ``min(struct(ts, id))``. The
-    whole operator is then one built-in streaming session-window
-    aggregation: state lives in the state store, sessions merge
-    JVM-side, and NO per-key Python group dispatch remains (the
-    ~90 µs/key/batch that made the pandas path superlinear on a
-    growing key set: 128 s at the sf10 replay tier, SCALEPROBE_stream
-    _r17). Because session merging is a pure function of the event
-    SET, the result is exactly batch ``burst_dedup`` for ANY arrival
-    order — stronger than the pandas path's per-key-ordered prefix
-    contract. Run it in **complete** mode for a bounded replay (an
-    unwatermarked aggregate cannot append; the final sessions of a
-    finite stream never pass a watermark, so append mode would hold
-    them back forever) or append mode behind ``withWatermark`` on a
-    continuous feed (state then evicts as sessions close).
+    A burst IS a ``session_window(ts, gap_seconds)`` group — Spark's
+    gap-based session sessionizes exactly the maximal chains whose
+    consecutive gaps are < gap — and the burst survivor is the
+    session's ``min(struct(ts, id))``. The operator is one built-in
+    streaming session-window aggregation: sessions merge in the state
+    store, no Python worker. Because session merging is a pure
+    function of the event SET, the result is exactly batch
+    ``burst_dedup`` for ANY arrival order.
 
-    ``engine="pandas"`` keeps the ``applyInPandasWithState`` chain
-    scan: state per key is ONE timestamp — the last event seen — so
-    memory is bounded by the live-key set forever with NO watermark
-    required (session-window state holds every open session; complete
-    mode holds all of them), and emissions are append-mode
-    exactly-once per survivor.  Within a micro-batch, rows sort by
-    ``(ts, id)`` before the chain scan; across batches the chain
-    extends from the stored last-seen timestamp.  For per-key-ordered
-    arrival the emitted set after any prefix of the stream EQUALS the
-    batch ``burst_dedup`` of the same prefix (asserted in
-    tests/test_incremental_replay.py); an event arriving LATE (behind
-    its key's last-seen ts) cannot retroactively split a burst — it is
-    judged against the chain as already materialized, the one semantic
-    a single-pass stream cannot replay.
+    Run it in **complete** mode for a bounded replay (an unwatermarked
+    aggregate cannot append; the final sessions of a finite stream
+    never pass a watermark, so append mode would hold them back
+    forever) or in append mode behind ``withWatermark`` on a
+    continuous feed — state then evicts as sessions close; without a
+    watermark it holds every session seen.
     """
     keys = list(keys)
-    if engine == "jvm":
-        w = F.min(F.struct(F.col(ts_col), F.col(id_col))).alias("__w")
-        # gap - 1 µs: session_window MERGES an event at exactly
-        # prev_ts + gap (its break is strictly greater — probed by the
-        # sessionize gate, r12), while the burst chain BREAKS at
-        # >= gap. Timestamps are µs-resolution, so shrinking the
-        # session gap by one microsecond makes the two definitions
-        # coincide exactly: merge iff delta <= gap-1µs iff delta < gap.
-        gap_us = int(gap_seconds) * 1_000_000 - 1
-        return (
-            stream.groupBy(
-                *[F.col(k) for k in keys],
-                F.session_window(F.col(ts_col), f"{gap_us} microseconds"),
-            )
-            .agg(w)
-            .select(
-                *keys,
-                F.col(f"__w.{ts_col}").alias(ts_col),
-                F.col(f"__w.{id_col}").alias(id_col),
-            )
+    w = F.min(F.struct(F.col(ts_col), F.col(id_col))).alias("__w")
+    # gap - 1 µs: session_window MERGES an event at exactly
+    # prev_ts + gap (its break is strictly greater — probed by the
+    # sessionize gate, r12), while the burst chain BREAKS at
+    # >= gap. Timestamps are µs-resolution, so shrinking the
+    # session gap by one microsecond makes the two definitions
+    # coincide exactly: merge iff delta <= gap-1µs iff delta < gap.
+    gap_us = int(gap_seconds) * 1_000_000 - 1
+    return (
+        stream.groupBy(
+            *[F.col(k) for k in keys],
+            F.session_window(F.col(ts_col), f"{gap_us} microseconds"),
         )
-    if engine != "pandas":
-        raise ValueError(f"unknown engine: {engine!r}")
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    schema = stream.schema
-    typ = {f.name: f.dataType.simpleString() for f in schema.fields}
-    out_type = ", ".join(
-        [f"{k} {typ[k]}" for k in keys]
-        + [f"{ts_col} timestamp", f"{id_col} {typ[id_col]}"]
-    )
-
-    def burst_fn(key, pdf_iter, state):
-        import numpy as np
-        import pandas as pd
-
-        if state.hasTimedOut:  # pragma: no cover - no timeout configured
-            state.remove()
-            return
-        last_us = state.get[0] if state.exists else None
-        kept_ts = None
-        # concatenate the key's whole micro-batch before sorting: the
-        # Arrow reader may hand one key's rows as SEVERAL chunks, and
-        # sorting each chunk independently would scan out of (ts, id)
-        # order whenever a key spans chunks
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        if chunks:
-            # vectorized chain scan on bare numpy arrays (r17, guide
-            # §4.2): the keep decision for row i depends only on row
-            # i-1's timestamp (the chain pointer advances on EVERY
-            # event, kept or not), so the whole scan is one shifted
-            # int64 compare. Bare arrays matter as much as the
-            # vectorization itself: per-key frames are ~10 rows, where
-            # pandas sort_values / boolean row-indexing cost hundreds
-            # of µs per CALL — an sf1 A/B of the pdf-indexing spelling
-            # measured 3.6x SLOWER than this one. Timestamps are
-            # non-null by the operator's event contract (a NaT would
-            # now sort first instead of sort_values' NaT-last).
-            if len(chunks) == 1:
-                ts_np = chunks[0][ts_col].to_numpy()
-                id_np = chunks[0][id_col].to_numpy()
-            else:
-                ts_np = np.concatenate([c[ts_col].to_numpy() for c in chunks])
-                id_np = np.concatenate([c[id_col].to_numpy() for c in chunks])
-            order = np.lexsort((id_np, ts_np))
-            ts_np = ts_np[order]
-            id_np = id_np[order]
-            us = ts_np.astype("int64") // 1000
-            gap_us = gap_seconds * 1_000_000
-            prev = np.empty_like(us)
-            # a None last_us (fresh key) must keep the first row:
-            # us[0] - gap_us makes the first compare trivially true
-            prev[0] = last_us if last_us is not None else us[0] - gap_us
-            prev[1:] = us[:-1]
-            keep = us >= prev + gap_us
-            kept_ts = ts_np[keep]
-            kept_id = id_np[keep]
-            last_us = int(us[-1])
-        state.update((last_us,))
-        if kept_ts is not None and len(kept_ts):  # no survivors -> no
-            # emission (an empty frame only feeds the serializer's
-            # concat a zero-row entry)
-            out = {k: [key[i]] * len(kept_ts) for i, k in enumerate(keys)}
-            out[ts_col] = kept_ts
-            out[id_col] = kept_id
-            yield pd.DataFrame(out)
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        burst_fn,
-        outputStructType=out_type,
-        stateStructType="last_us long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        .agg(w)
+        .select(
+            *keys,
+            F.col(f"__w.{ts_col}").alias(ts_col),
+            F.col(f"__w.{id_col}").alias(id_col),
+        )
     )

@@ -149,9 +149,9 @@ PROBE = {
     "one term-keyed join, map-side-combined source agg)",
     "docs_contamination_spans": "linear (positional gram explode; "
     "islands window over FLAGGED positions only)",
-    "events_busy_time_stream": "linear (AvailableNow replay into "
-    "applyInPandasWithState island lists; state bounded by gap "
-    "structure, not rows)",
+    "events_busy_time_stream": "linear (AvailableNow replay into the "
+    "pure-JVM dynamic-gap session_window aggregation; one state-store "
+    "session per island, no Python worker)",
     "agg_weighted_quantiles": "linear (weighted value-domain histogram; "
     "two-level bucketed cumsum over the distinct-price spine)",
     "docs_segment_pieces": "linear (distinct-word DP + backtrack, "

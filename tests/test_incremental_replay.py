@@ -17,7 +17,6 @@ Two surfaces:
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 DOCS = "/root/testdata/sf0.001/documents.parquet"
@@ -167,63 +166,9 @@ def test_curate_batch_incremental_prefix_equals_one_shot(spark):
     assert incr == one_shot == {10, 20, 30}
 
 
-def test_stream_burst_dedup_prefix_equals_batch(spark, tmp_path):
-    """Per-key-ordered micro-batches through stream_burst_dedup emit
-    exactly the batch burst_dedup survivors of every prefix."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from omop_etl_spark.operators.temporal import burst_dedup
-    from omop_etl_spark.streaming.events import stream_burst_dedup
-
-    t0 = dt.datetime(2024, 1, 1)
-    # key a: 0s, 2s | 4s, 900s | 902s  (burst boundaries at 0 and 900)
-    # key b: 0s | 1200s, 1201s         (boundaries at 0 and 1200)
-    batches = [
-        {"k": ["a", "a", "b"], "ts": [t0, t0 + dt.timedelta(seconds=2), t0], "eid": [1, 2, 10]},
-        {"k": ["a", "a"], "ts": [t0 + dt.timedelta(seconds=4), t0 + dt.timedelta(seconds=900)], "eid": [3, 4]},
-        {"k": ["a", "b", "b"], "ts": [t0 + dt.timedelta(seconds=902), t0 + dt.timedelta(seconds=1200), t0 + dt.timedelta(seconds=1201)], "eid": [5, 11, 12]},
-    ]
-    d = tmp_path / "burst_in"
-    d.mkdir()
-    import os
-
-    for i, b in enumerate(batches):
-        p = d / f"f{i}.parquet"
-        # write microsecond timestamps: ns-encoded INT64 would clash
-        # with the declared `timestamp` stream schema under the
-        # session's nanosAsLong compat conf
-        pd.DataFrame(b).astype({"ts": "datetime64[us]"}).to_parquet(p)
-        os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
-    stream = (
-        spark.readStream.schema("k string, ts timestamp, eid long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    q = (
-        stream_burst_dedup(stream, ["k"], "ts", "eid", gap_seconds=300)
-        .writeStream.format("memory")
-        .queryName("burst_s")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = sorted(r.eid for r in spark.table("burst_s").collect())
-
-    all_rows = pd.concat([pd.DataFrame(b) for b in batches])
-    df = spark.createDataFrame(all_rows)
-    want = sorted(
-        r.eid
-        for r in burst_dedup(df, ["k"], "ts", "300 seconds", tiebreak=["eid"]).collect()
-    )
-    assert got == want == [1, 4, 10, 11]
-
-
 def test_stream_burst_dedup_jvm_engine_equals_batch(spark, tmp_path):
-    """The r18 jvm engine (session_window aggregation, complete mode)
-    emits exactly the batch burst_dedup survivors — including the
+    """The session_window aggregation (complete mode) emits exactly
+    the batch burst_dedup survivors — including the
     exact-gap boundary (ts - prev == gap starts a NEW burst: Spark's
     half-open session [start, start+gap) must NOT merge a touching
     event) and same-timestamp ties (min id survives), across a
@@ -264,9 +209,7 @@ def test_stream_burst_dedup_jvm_engine_equals_batch(spark, tmp_path):
         .parquet(str(d))
     )
     q = (
-        stream_burst_dedup(
-            stream, ["k"], "ts", "eid", gap_seconds=300, engine="jvm"
-        )
+        stream_burst_dedup(stream, ["k"], "ts", "eid", gap_seconds=300)
         .writeStream.format("memory")
         .queryName("burst_jvm")
         .outputMode("complete")
@@ -353,17 +296,14 @@ def test_stream_interval_join_left_outer_emits_unmatched_after_watermark(
     assert (2, None) in got, f"unmatched left row never emitted: {got}"
 
 
-@pytest.mark.parametrize("engine", ["jvm", "pandas"])
 def test_stream_cdc_with_deletes_three_batch_prefix_equals_apply_cdc(
-    spark, tmp_path, engine
+    spark, tmp_path
 ):
     """VERDICT r7 #6: streaming CDC must handle DELETES. Feed a change
     log (unique per-key seq, interleaved I/U/D, out-of-order arrival)
     as 3 parquet micro-batches; after every prefix, the materialized
     state (last emission per key, tombstones dropped) must equal
-    temporal.apply_cdc run on the same prefix in batch. Parametrized
-    over both engines (r17): the pure-JVM max(struct) aggregation and
-    the pandas-state reducer must replay identically."""
+    temporal.apply_cdc run on the same prefix in batch."""
     import os
 
     import pandas as pd
@@ -422,9 +362,9 @@ def test_stream_cdc_with_deletes_three_batch_prefix_equals_apply_cdc(
             emitted.append((bid, r["k"], r["seq"], r["op"], r["v"]))
 
     q = (
-        stream_cdc_state(stream, "k", "seq", "v", engine=engine)
+        stream_cdc_state(stream, "k", "seq", "v")
         .writeStream.foreachBatch(capture)
-        .outputMode("update" if engine == "jvm" else "append")
+        .outputMode("update")
         .trigger(availableNow=True)
         .start()
     )

@@ -545,7 +545,7 @@ def test_no_row_wise_pandas_iteration_in_package():
             if pat.search(line) and not allowed:
                 hits.append(f"{rel}:{lineno}: {line.strip()}")
     assert not hits, (
-        "row-wise pandas iteration in package source (vectorize per the "
-        "stream_latest_state pattern, or allowlist with justification): "
+        "row-wise pandas iteration in package source (vectorize over "
+        "whole Arrow batches with numpy, or allowlist with justification): "
         f"{hits}"
     )

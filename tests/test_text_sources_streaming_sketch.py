@@ -204,8 +204,7 @@ def test_stream_latest_state_survives_out_of_order_batches(spark, tmp_path):
         stream_latest_state(stream, "k", "o", "v")
         .writeStream.format("memory")
         .queryName("lww_s")
-        # the JVM fast path is a streaming aggregation: update mode
-        # (same per-batch emission set as the pandas path's append)
+        # a streaming aggregation without a watermark: update mode
         .outputMode("update")
         .trigger(availableNow=True)
         .start()
@@ -310,17 +309,14 @@ rules:
 
 
 def test_stream_latest_state_tie_resolution_batching_independent(spark, tmp_path):
-    """ADVICE r6 (+ r17 engine parity): duplicate ord keys must resolve
-    to the same survivor whether they arrive in one micro-batch or
-    split across two — the (ord, value) lexicographic tiebreak, NULL
-    lowest — and the pure-JVM max(struct) path must agree with the
-    pandas-state path row-for-row (the two formulations of the same
-    monotone argmax)."""
+    """ADVICE r6: duplicate ord keys must resolve to the same survivor
+    whether they arrive in one micro-batch or split across two — the
+    (ord, value) lexicographic tiebreak, NULL lowest."""
     import pandas as pd
 
     from omop_etl_spark.streaming import stream_latest_state
 
-    def run(qname, frames, engine):
+    def run(qname, frames):
         d = tmp_path / qname
         d.mkdir()
         for i, f in enumerate(frames):
@@ -331,12 +327,10 @@ def test_stream_latest_state_tie_resolution_batching_independent(spark, tmp_path
             .parquet(str(d))
         )
         q = (
-            stream_latest_state(stream, "k", "o", "v", engine=engine)
+            stream_latest_state(stream, "k", "o", "v")
             .writeStream.format("memory")
             .queryName(qname)
-            # JVM path = streaming aggregation -> update; pandas path
-            # = applyInPandasWithState -> append
-            .outputMode("update" if engine == "jvm" else "append")
+            .outputMode("update")
             .trigger(availableNow=True)
             .start()
         )
@@ -351,15 +345,9 @@ def test_stream_latest_state_tie_resolution_batching_independent(spark, tmp_path
         {"k": ["a"], "o": [7], "v": ["apple"]},
         {"k": ["a", "a"], "o": [7, 7], "v": [None, "zebra"]},
     ]
-    results = {
-        eng: (
-            run(f"lww_tie_one_{eng}", [rows], eng),
-            run(f"lww_tie_split_{eng}", split_frames, eng),
-        )
-        for eng in ("jvm", "pandas")
-    }
-    for eng, (one_batch, split) in results.items():
-        assert one_batch == split == {"a": (7, "zebra")}, eng
+    one_batch = run("lww_tie_one", [rows])
+    split = run("lww_tie_split", split_frames)
+    assert one_batch == split == {"a": (7, "zebra")}
 
 
 def test_stream_cm_sketch_prefix_equals_batch(spark, tmp_path):
@@ -424,91 +412,6 @@ def test_stream_cm_sketch_prefix_equals_batch(spark, tmp_path):
         assert folded == want, f"prefix {upto}: stream != batch sketch"
 
 
-def test_stream_logq_matches_batch(spark):
-    """Streaming log-quantile sketch == batch logq_quantiles on the
-    same prefix: identical (n, p50 estimate) per event type."""
-    from pyspark.sql import functions as F
-
-    from omop_etl_spark.operators.sketches import logq_buckets, logq_quantiles
-    from omop_etl_spark.sources import read_parquet_table
-    from omop_etl_spark.streaming import read_events_stream, stream_logq_quantile
-
-    stream = read_events_stream(spark, EVENTS).select(
-        "event_type", F.floor(F.col("value") * 100).cast("long").alias("cents")
-    )
-    q = (
-        stream_logq_quantile(stream, "event_type", "cents", m=5)
-        .writeStream.format("memory")
-        .queryName("logq_t")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.table("logq_t").collect()
-    # keep the final (largest-n) emission per key across micro-batches
-    got = {}
-    for r in rows:
-        if r["event_type"] not in got or r["n"] > got[r["event_type"]][0]:
-            got[r["event_type"]] = (r["n"], r["q_est"])
-    batch = read_parquet_table(spark, EVENTS, ns_columns=["ts"]).select(
-        "event_type", F.floor(F.col("value") * 100).cast("long").alias("cents")
-    )
-    want = {
-        r["event_type"]: (r["n"], r["q1_2"])
-        for r in logq_quantiles(
-            logq_buckets(batch, ["event_type"], "cents", m=5),
-            ["event_type"],
-            [(1, 2)],
-            m=5,
-        ).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_stream_logq_state_carries_across_batches(spark, tmp_path):
-    """Two files as separate micro-batches: the final estimate equals
-    the batch sketch over the union (registers accumulate in state),
-    and nonpositive values are ignored like the batch operator."""
-    import pandas as pd
-
-    from omop_etl_spark.operators.sketches import logq_buckets, logq_quantiles
-    from omop_etl_spark.streaming import stream_logq_quantile
-
-    d = tmp_path / "logq_in"
-    d.mkdir()
-    pd.DataFrame({"k": ["a"] * 51, "v": list(range(-25, 26))}).to_parquet(
-        d / "f1.parquet"
-    )
-    pd.DataFrame({"k": ["a"] * 50, "v": list(range(100, 150))}).to_parquet(
-        d / "f2.parquet"
-    )
-    stream = (
-        spark.readStream.schema("k string, v long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    q = (
-        stream_logq_quantile(stream, "k", "v", m=5, quantile=(9, 10))
-        .writeStream.format("memory")
-        .queryName("logq_multi")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = sorted(spark.table("logq_multi").collect(), key=lambda r: r["n"])
-    assert len(rows) >= 2 and rows[-1]["n"] == 75  # 25 positive + 50
-    both = spark.createDataFrame(
-        [("a", v) for v in list(range(-25, 26)) + list(range(100, 150))],
-        "k string, v long",
-    )
-    want = logq_quantiles(
-        logq_buckets(both, ["k"], "v", m=5), ["k"], [(9, 10)], m=5
-    ).collect()[0]
-    assert (rows[-1]["n"], rows[-1]["q_est"]) == (want["n"], want["q9_10"])
-
-
 def test_no_ttl_streaming_reducers_are_pure_jvm_plans(spark, tmp_path):
     """r17 plan guard: the no-TTL reducers must compile to built-in
     streaming operators (Aggregate / Deduplicate) with NO Python node
@@ -546,11 +449,6 @@ def test_no_ttl_streaming_reducers_are_pure_jvm_plans(spark, tmp_path):
         assert "pythonudf" not in plan.lower(), name
         want = "Deduplicate" if name == "dedup" else "Aggregate"
         assert want in plan, (name, plan[:500])
-    # the pandas formulations are still available where asked for
-    pandas_plan = stream_latest_state(
-        stream, "k", "o", "v", engine="pandas"
-    )._jdf.queryExecution().analyzed().toString()
-    assert "FlatMapGroupsInPandasWithState" in pandas_plan
 
 
 def test_stream_logq_buckets_jvm_registers_match_batch(spark, tmp_path):
@@ -615,71 +513,14 @@ def test_stream_logq_buckets_jvm_registers_match_batch(spark, tmp_path):
     assert got_q == want_q
 
 
-def test_stream_interval_union_matches_batch(spark, tmp_path):
-    """Prefix-exact streaming/batch equivalence for busy-time islands,
-    with OUT-OF-ORDER arrival across micro-batches (round 11)."""
-    import pandas as pd
-
-    from omop_etl_spark.operators.temporal import interval_union
-    from omop_etl_spark.streaming import stream_interval_union
-
-    rng = random.Random(23)
-    rows = []
-    for k in ("a", "b"):
-        for _ in range(120):
-            s = rng.randrange(0, 5_000)
-            rows.append((k, s, s + rng.randrange(1, 400)))
-    rng.shuffle(rows)  # out of order everywhere
-    d = tmp_path / "iv_stream"
-    d.mkdir()
-    pd.DataFrame(rows[:120], columns=["k", "s", "e"]).to_parquet(d / "f1.parquet")
-    pd.DataFrame(rows[120:], columns=["k", "s", "e"]).to_parquet(d / "f2.parquet")
-
-    stream = (
-        spark.readStream.schema("k string, s long, e long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    q = (
-        stream_interval_union(stream, "k", "s", "e")
-        .writeStream.format("memory")
-        .queryName("iv_t")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    emissions = spark.table("iv_t").collect()
-    assert len(emissions) == 4  # 2 keys x 2 micro-batches
-
-    batch_df = spark.createDataFrame(rows, "k string, s long, e long")
-    want_full = {
-        r.k: (r.n_islands, r.covered, r.max_island)
-        for r in interval_union(batch_df, "k", "s", "e").collect()
-    }
-    # each key emits exactly the batch answers of the two prefixes
-    # (memory-sink row order across batches is not guaranteed, so
-    # compare as sets): prefix exactness, not just final convergence
-    prefix_df = spark.createDataFrame(rows[:120], "k string, s long, e long")
-    want_prefix = {
-        r.k: (r.n_islands, r.covered, r.max_island)
-        for r in interval_union(prefix_df, "k", "s", "e").collect()
-    }
-    got = {}
-    for r in emissions:
-        got.setdefault(r.k, set()).add((r.n_islands, r.covered, r.max_island))
-    for k in want_full:
-        assert got[k] == {want_prefix[k], want_full[k]}, k
-
-
 def test_stream_interval_union_jvm_engine_matches_batch(spark, tmp_path):
-    """The r18 jvm engine (dynamic-gap session_window, one row per
-    island, complete mode) rolls up to exactly the batch
-    interval_union — including TOUCHING intervals (end == next start
-    must fuse: session merge-at-touch equals the island rule) and
-    out-of-order multi-batch arrival."""
+    """The dynamic-gap session_window (one row per island, complete
+    mode) is prefix-exact: after each micro-batch the per-key rollup
+    equals batch interval_union of the rows seen so far — including
+    TOUCHING intervals (end == next start must fuse: session
+    merge-at-touch equals the island rule) and out-of-order arrival
+    across batches."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from omop_etl_spark.operators.temporal import interval_union
     from omop_etl_spark.streaming import stream_interval_union
@@ -694,39 +535,74 @@ def test_stream_interval_union_jvm_engine_matches_batch(spark, tmp_path):
     rows += [("a", 9_000, 9_010), ("a", 9_010, 9_020), ("a", 20_000, 20_001),
              ("b", 9_005, 9_010), ("b", 9_010, 9_011)]
     rng.shuffle(rows)
+    files = [rows[:120], rows[120:]]
     d = tmp_path / "iv_jvm"
     d.mkdir()
-    pd.DataFrame(rows[:120], columns=["k", "s", "e"]).to_parquet(d / "f1.parquet")
-    pd.DataFrame(rows[120:], columns=["k", "s", "e"]).to_parquet(d / "f2.parquet")
+    for i, part in enumerate(files):
+        p = d / f"f{i}.parquet"
+        pd.DataFrame(part, columns=["k", "s", "e"]).to_parquet(p)
+        os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
     stream = (
         spark.readStream.schema("k string, s long, e long")
         .option("maxFilesPerTrigger", 1)
         .parquet(str(d))
     )
+    ln = F.col("island_end") - F.col("island_start")
+    rollups = {}
+
+    def capture(bdf, bid):
+        rollups[bid] = {
+            r.k: (r.n_islands, r.covered, r.max_island)
+            for r in bdf.groupBy("k")
+            .agg(
+                F.count(F.lit(1)).alias("n_islands"),
+                F.sum(ln).alias("covered"),
+                F.max(ln).alias("max_island"),
+            )
+            .collect()
+        }
+
     q = (
-        stream_interval_union(stream, "k", "s", "e", engine="jvm")
-        .writeStream.format("memory")
-        .queryName("iv_jvm_t")
+        stream_interval_union(stream, "k", "s", "e")
+        .writeStream.foreachBatch(capture)
         .outputMode("complete")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(120)
-    ln = F.col("island_end") - F.col("island_start")
-    got = {
-        r.k: (r.n_islands, r.covered, r.max_island)
-        for r in spark.table("iv_jvm_t")
-        .groupBy("k")
-        .agg(
-            F.count(F.lit(1)).alias("n_islands"),
-            F.sum(ln).alias("covered"),
-            F.max(ln).alias("max_island"),
-        )
-        .collect()
-    }
-    batch_df = spark.createDataFrame(rows, "k string, s long, e long")
-    want = {
-        r.k: (r.n_islands, r.covered, r.max_island)
-        for r in interval_union(batch_df, "k", "s", "e").collect()
-    }
-    assert got == want
+    assert sorted(rollups) == [0, 1]
+    for bid in rollups:
+        prefix = [r for part in files[: bid + 1] for r in part]
+        batch_df = spark.createDataFrame(prefix, "k string, s long, e long")
+        want = {
+            r.k: (r.n_islands, r.covered, r.max_island)
+            for r in interval_union(batch_df, "k", "s", "e").collect()
+        }
+        assert rollups[bid] == want, f"prefix {bid}: stream != batch"
+
+
+def test_stream_interval_union_rejects_degenerate_interval(spark, tmp_path):
+    """An interval with end <= start is not a valid half-open interval
+    (and would be a non-positive session gap, which Spark silently
+    drops): the query must fail, naming the operator and columns."""
+    import pandas as pd
+    import pytest
+
+    from omop_etl_spark.streaming import stream_interval_union
+
+    d = tmp_path / "iv_bad"
+    d.mkdir()
+    pd.DataFrame(
+        {"k": ["a", "b"], "s": [1, 5], "e": [3, 5]}
+    ).to_parquet(d / "f.parquet")
+    stream = spark.readStream.schema("k string, s long, e long").parquet(str(d))
+    q = (
+        stream_interval_union(stream, "k", "s", "e")
+        .writeStream.format("memory")
+        .queryName("iv_bad_t")
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match=r"stream_interval_union: requires e > s"):
+        q.awaitTermination(120)
