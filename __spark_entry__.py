@@ -17,6 +17,7 @@ replicating the engine's deterministic surrogate ids (SURVEY §4.3).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -38,23 +39,57 @@ TPCH_TABLES = (
 )
 
 
-_ENGINE_CACHE: dict[tuple[int, str], object] = {}
-
-
 def _engine(spark: SparkSession, sf_dir: str, tables=TPCH_TABLES):
+    """The registry's source catalog: each ``<t>.parquet`` found in
+    ``sf_dir`` is registered as ``cerner.<t>`` (schema inferred once, at
+    registration). Registers again whenever the session catalog does not
+    point at ``sf_dir`` — after another directory, a ``DROP DATABASE`` or
+    a second instance of this module — and drops a ``cerner.<t>`` that
+    ``sf_dir`` lacks. The check reads the catalog and starts no job."""
     from omop_etl_spark import Engine
     from omop_etl_spark.sources import enable_nanos_compat
 
-    key = (id(spark), sf_dir)
-    cached = _ENGINE_CACHE.get(key)
-    if cached is not None:
-        return cached
     enable_nanos_compat(spark)  # events.parquet carries ns timestamps
-    eng = Engine(spark)
-    for t in tables:
-        eng.register_parquet(f"cerner.{t}", f"{sf_dir}/{t}.parquet")
-    _ENGINE_CACHE[key] = eng
+    eng = Engine(spark, schemas=())  # run() ensures the schemas it writes
+    want = {t: p for t in tables if os.path.exists(p := _source_path(sf_dir, t))}
+    ext = spark._jsparkSession.sharedState().externalCatalog()
+    have = {
+        t: ext.getTable("cerner", t).location().getPath()
+        for t in tables
+        if ext.tableExists("cerner", t)
+    }
+    if have != want:
+        for t in have.keys() - want.keys():
+            spark.sql(f"DROP TABLE cerner.{t}")
+        for t, path in want.items():
+            eng.register_parquet(f"cerner.{t}", path)
     return eng
+
+
+def _source_path(sf_dir: str, t: str) -> str:
+    return os.path.abspath(f"{sf_dir}/{t}.parquet")
+
+
+def _source(spark: SparkSession, sf_dir: str, t: str) -> DataFrame:
+    """Source table ``t`` of ``sf_dir``, read by name as ``cerner.<t>``
+    (:func:`_engine`) with the timestamp normalization of
+    ``EVENTS_NS_COLUMNS`` applied."""
+    from omop_etl_spark.sources import EVENTS_NS_COLUMNS, normalize_timestamps
+
+    if not os.path.exists(_source_path(sf_dir, t)):
+        raise FileNotFoundError(f"source table cerner.{t}: no {t}.parquet in {sf_dir}")
+    _engine(spark, sf_dir)
+    return normalize_timestamps(spark.table(f"cerner.{t}"), EVENTS_NS_COLUMNS.get(t))
+
+
+def _spread_read(spark: SparkSession, sf_dir: str, t: str):
+    """Source scan (:func:`_source`) spread to defaultParallelism
+    partitions: the small single-row-group test files otherwise arrive
+    as ONE partition and serialize every per-row stage (tokenize/score)
+    on a single core."""
+    from omop_etl_spark.operators.util import spread
+
+    return spread(_source(spark, sf_dir, t))
 
 
 def _run_etl(spark: SparkSession, sf_dir: str, yaml_texts: list[str], out: str,
@@ -442,7 +477,7 @@ def _sql_query(sql: str) -> Callable[[SparkSession, str], DataFrame]:
 
 
 def _q_agg_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = _source(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -474,8 +509,8 @@ GROUP BY l_returnflag, l_linestatus
 
 
 def _q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    o = _source(spark, sf_dir, "orders")
+    c = _source(spark, sf_dir, "customer")
     return (
         # customer scales linearly with SF — no broadcast hint; AQE picks
         # broadcast-hash only when the side actually fits (safe at 100x).
@@ -512,7 +547,7 @@ LIMIT 10
 def _q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = _source(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), "o_orderkey")
     return (
         o.withColumn("price_rank", F.row_number().over(w))
@@ -543,8 +578,8 @@ WHERE price_rank <= 3
 # still-registered agg_cube gate.
 def _q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # INTERSECT/EXCEPT as DataFrame operators (distinct set semantics)
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    o = _source(spark, sf_dir, "orders")
+    c = _source(spark, sf_dir, "customer")
     yr = lambda y: (  # noqa: E731
         o.filter(F.year("o_orderdate") == y)
         .select(F.col("o_custkey").cast("bigint").alias("custkey"))
@@ -568,7 +603,7 @@ def _q_agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # EXACT percentiles (linear interpolation — same estimator as
     # DuckDB quantile_cont); approx_percentile is the sketch sibling
     # for the 100 TB path where exact sort-based percentiles don't pay
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = _source(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         *[
             F.round(F.expr(f"percentile(l_quantity, {p})"), 6).alias(name)
@@ -590,7 +625,7 @@ GROUP BY l_returnflag
 def _q_agg_multi_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # several COUNT(DISTINCT) over one scan — Expand + two-stage agg;
     # partial aggregation keeps the shuffle narrow at scale
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = _source(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("n_parts"),
         F.countDistinct("l_suppkey").alias("n_supps"),
@@ -609,9 +644,7 @@ GROUP BY l_returnflag
 
 
 def _q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from omop_etl_spark.sources import read_parquet_table
-
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     return (
         ev.groupBy(
             F.date_trunc("hour", F.col("ts")).cast("string").alias("hour_ts"),
@@ -636,10 +669,9 @@ GROUP BY 1, 2
 
 
 def _q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from omop_etl_spark.sources import read_parquet_table
     from omop_etl_spark.streaming import sessionize_batch
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     return sessionize_batch(ev, gap_minutes=30)
 
 
@@ -1275,7 +1307,6 @@ def _q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     recent order at event time (union-window plan: one shuffle, no
     join node — operators/temporal.py)."""
     from omop_etl_spark.operators.temporal import asof_join
-    from omop_etl_spark.sources import read_parquet_table
 
     # orders.o_orderdate is TIMESTAMP_NTZ in the parquet; pin the
     # session to UTC so the NTZ->LTZ cast is epoch-identical to the
@@ -1283,8 +1314,8 @@ def _q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unchanged conf.set still invalidates cached plan state).
     if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    ev = _source(spark, sf_dir, "events")
+    orders = _source(spark, sf_dir, "orders")
     out = asof_join(
         ev.select("event_id", "user_id", "ts"),
         orders.select(
@@ -1346,9 +1377,8 @@ def _q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     BroadcastNestedLoopJoin): all events landing inside the 30-minute
     window opened by each purchase event, aggregated per window."""
     from omop_etl_spark.operators.temporal import range_join
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     iv = (
         ev.filter(F.col("event_type") == "purchase")
         .select(
@@ -1400,7 +1430,7 @@ def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.functions.text import token_signature
     from omop_etl_spark.operators.dedup import dedup_groups
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     groups = dedup_groups(
         docs.withColumn("sig", token_signature("text")), ["sig"], id_col="doc_id"
     )
@@ -1423,7 +1453,7 @@ GROUP BY sig
 def _q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.functions.text import token_count
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return (
         docs.withColumn("n_tokens", token_count("text"))
         .groupBy("lang")
@@ -1458,7 +1488,7 @@ def _q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     side streams map-only."""
     from omop_etl_spark.operators.similarity import cosine_topk
 
-    emb = _spread_read(spark, f"{sf_dir}/embeddings.parquet")
+    emb = _spread_read(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 16)
     return cosine_topk(q, emb, k=5).select(
         F.col("query_id").cast("bigint").alias("query_id"),
@@ -1492,7 +1522,7 @@ def _q_sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hyperplanes, so the driver value-checks this query like any other
     from omop_etl_spark.operators.similarity import lsh_topk
 
-    emb = _spread_read(spark, f"{sf_dir}/embeddings.parquet")
+    emb = _spread_read(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 16)
     # multi-probe + 2 hash tables: sparse home buckets no longer starve
     # queries below k (VERDICT r1 #4); recall gated in test_operators
@@ -1583,7 +1613,7 @@ _DUCK_SHINGLES = _duck_shingles()
 def _q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.operators.dedup import jaccard_pairs
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return jaccard_pairs(docs, n=3, threshold=0.8).select(
         F.col("id_a").cast("bigint").alias("id_a"),
         F.col("id_b").cast("bigint").alias("id_b"),
@@ -1626,7 +1656,7 @@ def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.operators.cluster import assign_clusters
     from omop_etl_spark.operators.dedup import jaccard_pairs
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     pairs = jaccard_pairs(docs, n=3, threshold=0.8)
     return assign_clusters(docs, pairs, id_col="doc_id").select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -1678,7 +1708,7 @@ def _q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signatures, so the oracle reproduces the exact same pair set.
     from omop_etl_spark.operators.dedup import minhash_lsh_pairs
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return minhash_lsh_pairs(
         docs, n=3, num_hashes=16, bands=8, threshold=0.8, base_hash="md5"
     ).select(
@@ -1763,7 +1793,7 @@ def _q_dedup_near_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.operators.cluster import assign_clusters
     from omop_etl_spark.operators.dedup import minhash_lsh_pairs
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(
         docs, n=3, num_hashes=16, bands=8, threshold=0.8, base_hash="md5"
     )
@@ -1779,7 +1809,7 @@ def _q_docs_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only first stage of an embedding/pre-tokenization pipeline."""
     from omop_etl_spark.operators.chunking import chunk_documents
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return chunk_documents(
         docs, chunk_tokens=64, overlap=16, keep_cols=("lang",)
     ).select(
@@ -1813,7 +1843,7 @@ def _q_docs_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break) — keyword extraction over the corpus."""
     from omop_etl_spark.operators.chunking import tfidf_topk
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return tfidf_topk(docs, k=5).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "term",
@@ -1868,7 +1898,7 @@ FROM reach GROUP BY id
 def _q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.functions.text import quality_score
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return docs.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         F.round(quality_score("text"), 4).alias("quality"),
@@ -1904,7 +1934,7 @@ def _q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle) and verifies the scrub + counts byte-for-byte."""
     from omop_etl_spark.functions.text import pii_counts, pii_scrub
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     pii_text = F.concat(
         F.col("text"),
         F.when(
@@ -1959,7 +1989,7 @@ FROM staged
 def _q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.functions.text import lang_id
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return (
         docs.withColumn("predicted_lang", lang_id("text"))
         .groupBy(F.col("lang").alias("actual_lang"), "predicted_lang")
@@ -2000,7 +2030,7 @@ FROM t GROUP BY 1, 2
 def _q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.functions.text import fingerprint
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return docs.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         fingerprint("text").alias("fp"),
@@ -2019,7 +2049,7 @@ def _q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fully oracle-checkable because the fingerprint is md5-derived
     from omop_etl_spark.operators.dedup import simhash_pairs
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     out = simhash_pairs(docs, num_bits=32, n=3, max_hamming=3)
     return out.select(
         F.col("id_a").cast("bigint").alias("id_a"),
@@ -2054,7 +2084,7 @@ def _q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # synthetic corpus (max pairwise cosine ~0.5 — no planted dups)
     from omop_etl_spark.operators.similarity import cosine_pairs
 
-    emb = _spread_read(spark, f"{sf_dir}/embeddings.parquet")
+    emb = _spread_read(spark, sf_dir, "embeddings")
     # 4 blocks -> 10 block-pair tasks: enough parallelism for the test
     # corpora while amortizing python-worker spin-up per task.
     # max_rows=250_000 encodes the gate's bounded-input contract at the
@@ -2095,7 +2125,7 @@ def _q_embed_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.operators.cluster import assign_clusters
     from omop_etl_spark.operators.similarity import scoped_cosine_pairs
 
-    emb = _spread_read(spark, f"{sf_dir}/embeddings.parquet")
+    emb = _spread_read(spark, sf_dir, "embeddings")
     pairs = scoped_cosine_pairs(emb, threshold=0.4)
     return assign_clusters(emb, pairs, id_col="vec_id").select(
         F.col("vec_id").cast("bigint").alias("vec_id"),
@@ -2143,7 +2173,7 @@ def _q_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg; fixed-point mode for engine-exact determinism)."""
     from omop_etl_spark.operators.similarity import label_centroids
 
-    emb = _spread_read(spark, f"{sf_dir}/embeddings.parquet")
+    emb = _spread_read(spark, sf_dir, "embeddings")
     return label_centroids(emb, fixed_point=6).select(
         F.col("label").cast("bigint").alias("label"),
         F.col("pos").cast("bigint").alias("pos"),
@@ -2171,7 +2201,7 @@ def _q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic given the seed; value-oracled via _oracle_sim_topk_ivf
     from omop_etl_spark.operators.similarity import ivf_topk
 
-    emb = _spread_read(spark, f"{sf_dir}/embeddings.parquet")
+    emb = _spread_read(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 16)
     return ivf_topk(q, emb, **_IVF_PARAMS)
 
@@ -2226,7 +2256,7 @@ WHERE rn <= {p["k"]}
 def _q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.functions.text import bpe_token_count, token_count
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return docs.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         token_count("text").cast("int").alias("ws_tokens"),
@@ -2244,7 +2274,7 @@ def _q_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_media_metadata,
     )
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     media = with_media_metadata(
         docs.select(
             F.col("doc_id").cast("bigint").alias("media_id"),
@@ -2309,7 +2339,7 @@ def _q_multimodal_real_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     SW = SH = 16
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet").filter(
+    docs = _spread_read(spark, sf_dir, "documents").filter(
         F.col("doc_id") < 64
     ).select(
         F.col("doc_id").cast("bigint").alias("media_id"),
@@ -2403,7 +2433,7 @@ def _q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-free, reproducible across engines."""
     from omop_etl_spark.operators.sampling import hash_split
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _source(spark, sf_dir, "documents")
     return hash_split(
         docs, id_col="doc_id", splits={"train": 0.9, "val": 0.05, "test": 0.05}
     ).select(F.col("doc_id").cast("bigint").alias("doc_id"), "split")
@@ -2431,7 +2461,7 @@ def _q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     the curation move that rebalances a multilingual corpus."""
     from omop_etl_spark.operators.sampling import stratified_sample
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _source(spark, sf_dir, "documents")
     return stratified_sample(
         docs,
         strata_col="lang",
@@ -2461,7 +2491,7 @@ def _q_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline."""
     from omop_etl_spark.operators.sampling import pack_sequences
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _source(spark, sf_dir, "documents")
     packed = pack_sequences(
         docs, cost_col="n_chars", order_col="doc_id", budget=8192
     )
@@ -2501,9 +2531,8 @@ def _q_events_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     passed explicitly, which skips the eager distinct-values job Spark
     otherwise runs — at 100 TB the schema must never depend on a full
     scan."""
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     wide = (
         ev.groupBy("user_id")
         .pivot("event_type", _EVENT_TYPES)
@@ -2535,11 +2564,10 @@ def _q_events_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly per-type series regularized onto a gap-free grid with
     forward-fill (operators/temporal.resample_ffill)."""
     from omop_etl_spark.operators.temporal import resample_ffill
-    from omop_etl_spark.sources import read_parquet_table
 
     from omop_etl_spark.conf import checkpoint as _ckpt
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     # r17: resample_ffill consumes its input series three times
     # (bounds, key set, grid join); hourly is (types x hours)-bounded,
     # so checkpoint it once instead of re-running the full event scan
@@ -2587,9 +2615,8 @@ def _q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/temporal.scd2_from_changes): each user's event_type
     change points become versioned validity intervals."""
     from omop_etl_spark.operators.temporal import scd2_from_changes
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     out = scd2_from_changes(
         ev, ["user_id"], "ts", ["event_type"], tiebreak=["event_id"]
     )
@@ -2629,9 +2656,8 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 def _q_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured surface: extract a typed field from the JSON
     props payload (JVM get_json_object, no UDF) and aggregate on it."""
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     k = F.get_json_object(F.col("props"), "$.k").cast("bigint")
     return (
         ev.withColumn("k", k)
@@ -2665,7 +2691,7 @@ def _q_fuzzy_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1s at sf0.1)."""
     from omop_etl_spark.operators.fuzzy import fuzzy_self_match
 
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").select(
+    part = _source(spark, sf_dir, "part").select(
         F.col("p_partkey").cast("bigint").alias("pid"),
         F.col("p_name").alias("name"),
         F.col("p_brand").alias("brand"),
@@ -2704,9 +2730,8 @@ def _q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/temporal.funnel): later stages must strictly follow the
     previous stage's first occurrence."""
     from omop_etl_spark.operators.temporal import funnel
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     out = funnel(
         ev, ["user_id"], "ts", "event_type", ["view", "click", "purchase"]
     )
@@ -2746,7 +2771,7 @@ def _q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (orderstatus, orderpriority): all 2^2 grouping-set
     combinations in one Expand-based pass, grouping() flags
     disambiguating genuine NULLs from subtotal rows."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = _source(spark, sf_dir, "orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(F.floor(F.col("o_totalprice")).cast("bigint"))
@@ -2778,9 +2803,8 @@ def _q_events_multigrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — the timeseries-db 'continuous aggregate at multiple
     granularities' materialization without scanning the fact table
     twice."""
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     ev.createOrReplaceTempView("__mg_events")
     return spark.sql(
         """
@@ -2827,9 +2851,8 @@ def _q_events_top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     window shuffle carries at most k rows per group per task instead of
     the full aggregate — the property that keeps per-group top-k
     viable when a group spans billions of rows."""
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     counts = ev.groupBy("event_type", "user_id").agg(
         F.count(F.lit(1)).alias("n_events")
     )
@@ -2874,9 +2897,8 @@ def _q_events_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     OPTIMIZE ZORDER BY — pure JVM bit arithmetic, lazy 1-row range
     stats, bit-exact against the integer-arithmetic oracle."""
     from omop_etl_spark.operators.layout import zorder_key
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     return zorder_key(ev, ["user_id", "ts"], bits=16).select(
         F.col("event_id").cast("bigint").alias("event_id"), "zkey"
     )
@@ -2919,7 +2941,7 @@ def _q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruction error hash-match the oracle."""
     from omop_etl_spark.operators.similarity import quantize_embeddings
 
-    emb = _spread_read(spark, f"{sf_dir}/embeddings.parquet")
+    emb = _spread_read(spark, sf_dir, "embeddings")
     out = quantize_embeddings(emb, num_bits=8)
     return out.select(
         F.col("vec_id").cast("bigint").alias("vec_id"),
@@ -2966,12 +2988,12 @@ def _q_regional_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushes the region/date filters to the scans. Revenue is summed as
     per-row-floored BIGINT so the result is order-independent and
     hash-comparable across engines."""
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
+    c = _source(spark, sf_dir, "customer")
+    o = _source(spark, sf_dir, "orders")
+    l = _source(spark, sf_dir, "lineitem")
+    s = _source(spark, sf_dir, "supplier")
+    n = _source(spark, sf_dir, "nation")
+    r = _source(spark, sf_dir, "region")
     rev = F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
         "bigint"
     )
@@ -3026,7 +3048,7 @@ def _q_embed_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     computation stays inside whole-stage codegen (F.aggregate for the
     L2 norm, array min/max/mean), no Python, no shuffle at all:
     a map-only scan at any corpus size."""
-    emb = _spread_read(spark, f"{sf_dir}/embeddings.parquet")
+    emb = _spread_read(spark, sf_dir, "embeddings")
     v = F.col("embedding")
     sq = F.aggregate(
         v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
@@ -3055,7 +3077,7 @@ def _q_orders_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer order cadence: lead/lag windows give the gap to the
     previous order and an ntile cohort — one hash exchange on custkey
     serves all three window functions (single Window spec)."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = _source(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return o.select(
         F.col("o_orderkey").cast("bigint").alias("orderkey"),
@@ -3087,10 +3109,10 @@ def _q_cust_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     (RewritePredicateSubquery -> left-anti hash join) is exercised —
     the plan must show no correlated subquery left, just an anti join
     that AQE can broadcast."""
-    spark.read.parquet(f"{sf_dir}/customer.parquet").createOrReplaceTempView(
+    _source(spark, sf_dir, "customer").createOrReplaceTempView(
         "__sq_customer"
     )
-    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
+    _source(spark, sf_dir, "orders").createOrReplaceTempView(
         "__sq_orders"
     )
     return spark.sql(
@@ -3124,7 +3146,7 @@ def _q_orders_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     average. Catalyst decorrelates the scalar subquery into an
     aggregate + equi-join; the oracle keeps the correlated form, so a
     hash match proves the rewrite is semantics-preserving."""
-    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
+    _source(spark, sf_dir, "orders").createOrReplaceTempView(
         "__sq_orders"
     )
     return spark.sql(
@@ -3163,7 +3185,7 @@ def _q_docs_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     suite would pass broadcast_benchmark=True)."""
     from omop_etl_spark.operators.contamination import decontaminate
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 17 == 0)
     out = decontaminate(docs, bench, n=5)
     return out.select(
@@ -3195,7 +3217,7 @@ def _q_docs_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     this strips exact-duplicate documents to empty)."""
     from omop_etl_spark.operators.contamination import strip_boilerplate
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return strip_boilerplate(docs, min_docs=2).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "text_clean",
@@ -3232,7 +3254,7 @@ def _q_corpus_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vocabulary-training / frequency-filter primitive."""
     from omop_etl_spark.operators.chunking import corpus_ngram_counts
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return corpus_ngram_counts(docs, n=2, top_k=200).select(
         "ngram",
         F.col("count").cast("bigint").alias("count"),
@@ -3272,7 +3294,7 @@ def _q_docs_curate_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays every stage in one DuckDB SQL."""
     from omop_etl_spark.pipelines import curate_corpus
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 97 == 0).select("doc_id", "text")
     return curate_corpus(
         docs,
@@ -3338,7 +3360,7 @@ def _q_docs_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams."""
     from omop_etl_spark.operators.contamination import repetition_stats
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     out = repetition_stats(docs, n=2)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -3371,7 +3393,7 @@ def _q_docs_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized as independently-ordered shards."""
     from omop_etl_spark.operators.sampling import shuffle_shards
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _source(spark, sf_dir, "documents")
     return shuffle_shards(docs, num_shards=8).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "shard", "pos"
     )
@@ -3398,7 +3420,7 @@ def _q_docs_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     first (doc_id, position) occurrence."""
     from omop_etl_spark.operators.contamination import dedup_lines
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return dedup_lines(docs, min_chars=20).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "text_clean",
@@ -3437,7 +3459,7 @@ def _q_docs_cross_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     of its distinct 13-gram shingles that occur in other docs too."""
     from omop_etl_spark.operators.contamination import cross_doc_dup_stats
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return cross_doc_dup_stats(docs, n=13).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "n_grams",
@@ -3471,7 +3493,7 @@ def _q_corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix consulted before mixing sources into a training run."""
     from omop_etl_spark.operators.contamination import source_overlap
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return source_overlap(docs, strata_col="source", n=3)
 
 
@@ -3512,7 +3534,7 @@ def _q_docs_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 function of the id."""
     from omop_etl_spark.operators.sampling import mixture_sample
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _source(spark, sf_dir, "documents")
     return mixture_sample(
         docs, "source", _MIXTURE_WEIGHTS, target_frac=0.1
     ).select(F.col("doc_id").cast("bigint").alias("doc_id"), "source")
@@ -3541,7 +3563,7 @@ def _q_docs_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.functions.text import quality_score
     from omop_etl_spark.operators.sampling import rank_filter
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     scored = docs.select(
         F.col("doc_id"), F.round(quality_score("text"), 4).alias("quality")
     )
@@ -3592,7 +3614,7 @@ def _q_embed_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix; map-only, whole-stage codegen."""
     from omop_etl_spark.operators.similarity import random_projection
 
-    emb = _spread_read(spark, f"{sf_dir}/embeddings.parquet")
+    emb = _spread_read(spark, sf_dir, "embeddings")
     return random_projection(emb, k=16, dim=64, seed=42).select(
         F.col("vec_id").cast("bigint").alias("vec_id"),
         F.posexplode("proj").alias("pos", "proj_val"),
@@ -3628,7 +3650,7 @@ def _q_embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's chained CTEs."""
     from omop_etl_spark.operators.kmeans import kmeans_assign
 
-    emb = _spread_read(spark, f"{sf_dir}/embeddings.parquet")
+    emb = _spread_read(spark, sf_dir, "embeddings")
     return kmeans_assign(emb, k=8, iters=2)
 
 
@@ -3748,7 +3770,7 @@ def _q_embed_kmeans2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_kmeans2_oracle_ctes``)."""
     from omop_etl_spark.operators.kmeans import kmeans_assign_two_level
 
-    emb = _spread_read(spark, f"{sf_dir}/embeddings.parquet")
+    emb = _spread_read(spark, sf_dir, "embeddings")
     return kmeans_assign_two_level(emb, k1=8, k2=4, iters=2)
 
 
@@ -3776,13 +3798,13 @@ def _q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject — no global sort. Deterministic tiebreak
     (revenue DESC, o_orderkey ASC) keeps the limit hash-stable across
     engines."""
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet").filter(
+    c = _source(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
+    o = _source(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-07-01").cast("timestamp")
     )
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
+    l = _source(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-07-01").cast("timestamp")
     )
     rev = F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("bigint")
@@ -3822,11 +3844,11 @@ def _q_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the equi part (orderkey) as the shuffle key and evaluates the
     date residual as a join filter — no cross product, one shuffle, and
     the semi-join short-circuits per order."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
+    o = _source(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp"))
     )
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    l = _source(spark, sf_dir, "lineitem")
     late = o.join(
         l,
         (F.col("o_orderkey") == F.col("l_orderkey"))
@@ -3885,7 +3907,7 @@ def _q_events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact scan (no second shuffle of events), and the flag is a pure
     JVM expression. At 100 TB the stats frame stays |event_type|-sized,
     so the broadcast never grows with the data."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _source(spark, sf_dir, "events")
     stats = ev.groupBy("event_type").agg(
         F.avg("value").alias("__mu"),
         F.stddev_samp("value").alias("__sigma"),
@@ -3927,7 +3949,7 @@ def _q_docs_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a global sort. Spark's `percentile` and DuckDB's
     `quantile_cont` share linear-interpolation semantics, so the median
     is hash-comparable."""
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return (
         docs.groupBy("source")
         .agg(
@@ -3963,7 +3985,7 @@ def _q_docs_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay bit-for-bit in the DuckDB oracle."""
     from omop_etl_spark.operators.dedup import minhash_lsh_join
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     incoming = docs.filter(F.col("doc_id") % 7 == 0)
     existing = docs.filter(F.col("doc_id") % 7 != 0)
     return minhash_lsh_join(
@@ -4067,7 +4089,7 @@ def _q_docs_curate_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the batch, not the corpus; the oracle replays every stage."""
     from omop_etl_spark.pipelines import curate_batch_incremental
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 7 == 0)
     corpus = docs.filter(F.col("doc_id") % 7 != 0)
     return curate_batch_incremental(
@@ -4112,7 +4134,7 @@ def _q_docs_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one window on the doc key)."""
     from omop_etl_spark.operators.contamination import dup_span_stats
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return dup_span_stats(docs, n=13).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "n_grams",
@@ -4174,7 +4196,7 @@ def _q_events_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     state per partition is bounded regardless of history length."""
     from pyspark.sql import Window
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _source(spark, sf_dir, "events")
     cents = F.floor(F.col("value") * 100).cast("bigint")
     w = (
         Window.partitionBy("user_id")
@@ -4221,7 +4243,7 @@ def _q_docs_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     without the single-reducer global window."""
     from omop_etl_spark.operators.sampling import ntile_by
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _source(spark, sf_dir, "documents")
     return (
         ntile_by(docs, "n_chars", "doc_id", tiles=10)
         .groupBy(F.col("tile").alias("decile"))
@@ -4259,7 +4281,7 @@ def _q_events_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pregel pattern expressed relationally, AQE-skew-safe)."""
     from omop_etl_spark.operators.graph import pagerank
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _source(spark, sf_dir, "events")
     fwd = ev.select(
         F.concat(F.lit("u"), F.col("user_id").cast("string")).alias("src"),
         F.concat(F.lit("t"), F.col("event_type")).alias("dst"),
@@ -4318,7 +4340,7 @@ def _q_events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     (datediff/7 between Monday-truncated weeks), no float date math."""
     from omop_etl_spark.conf import checkpoint as _ckpt
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _source(spark, sf_dir, "events")
     # r17: first feeds BOTH the retention join and the cohort-size
     # aggregate; without the checkpoint each consumer re-runs the full
     # event scan + per-user aggregate (3 event scans in the r17 audit
@@ -4389,7 +4411,7 @@ def _q_docs_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning-independent)."""
     from omop_etl_spark.operators.chunking import unigram_logprob_scores
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return unigram_logprob_scores(docs).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "n_tokens",
@@ -4422,7 +4444,7 @@ def _q_docs_rare_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     except the final rounded ratio."""
     from omop_etl_spark.operators.chunking import rare_token_stats
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return rare_token_stats(docs, rare_max_count=2).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "n_tokens",
@@ -4463,21 +4485,21 @@ def _q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-join, and the fact table shuffles only on its join keys. At
     scale the supplier/customer joins shuffle on the fact's natural
     keys; nation never shuffles."""
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    nation = _source(spark, sf_dir, "nation")
     supp = (
-        spark.read.parquet(f"{sf_dir}/supplier.parquet")
+        _source(spark, sf_dir, "supplier")
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
     cust = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        _source(spark, sf_dir, "customer")
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .select("c_custkey", F.col("n_name").alias("cust_nation"))
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = _source(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
+    li = _source(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
@@ -4529,29 +4551,29 @@ def _q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     it hashes identically across engines — no float division. Part is
     filtered before the join (predicate reaches the scan) and the
     dimension chain customer→nation→region collapses to a broadcast."""
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    region = spark.read.parquet(f"{sf_dir}/region.parquet").filter(
+    nation = _source(spark, sf_dir, "nation")
+    region = _source(spark, sf_dir, "region").filter(
         F.col("r_name") == "ASIA"
     )
     cust = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        _source(spark, sf_dir, "customer")
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .select("c_custkey")
     )
     supp = (
-        spark.read.parquet(f"{sf_dir}/supplier.parquet")
+        _source(spark, sf_dir, "supplier")
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").filter(
+    part = _source(spark, sf_dir, "part").filter(
         F.col("p_type") == "PROMO"
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
+    orders = _source(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = _source(spark, sf_dir, "lineitem")
     rev = F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast(
         "bigint"
     )
@@ -4616,8 +4638,8 @@ def _q_cust_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     inner join silently drops the empty bucket). Two aggregations, both
     map-side combined; the second one's input is |customers| rows and
     its output |distinct counts| rows."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select("c_custkey")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    cust = _source(spark, sf_dir, "customer").select("c_custkey")
+    orders = _source(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
     per_cust = (
@@ -4650,10 +4672,10 @@ def _q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast hint — AQE broadcasts only when the side actually fits.
     Quantities are integral doubles so ``avg = sum/count`` is exactly
     rounded and the 0.5x threshold compare is engine-stable."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").filter(
+    part = _source(spark, sf_dir, "part").filter(
         F.col("p_brand") == "Brand#1"
     )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = _source(spark, sf_dir, "lineitem")
     branded = li.join(
         part.select("p_partkey"),
         F.col("l_partkey") == F.col("p_partkey"),
@@ -4689,8 +4711,8 @@ def _q_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the part-only / lineitem-only conjuncts implied by the OR down to
     each scan (constraint propagation) — the classic test that a
     planner doesn't fall back to a cross product on disjunctions."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    part = _source(spark, sf_dir, "part")
+    li = _source(spark, sf_dir, "lineitem")
     # part is SF-linear — no broadcast hint; AQE chooses the strategy.
     j = li.join(part, F.col("l_partkey") == F.col("p_partkey"))
     p1 = (
@@ -4742,10 +4764,10 @@ def _q_shipped_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the same fact. Both joins share the l_orderkey shuffle key,
     so AQE reuses one exchange of the fact; the date comparison rides
     as a non-equi residual."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = _source(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
+    orders = _source(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F"
     )
     l1 = li.join(
@@ -4770,7 +4792,7 @@ def _q_shipped_last(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("d2") > F.col("l_shipdate")),
         "left_anti",
     )
-    supp = spark.read.parquet(f"{sf_dir}/supplier.parquet").select(
+    supp = _source(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name"
     )
     return (
@@ -4820,7 +4842,7 @@ def _q_sketch_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     group, so exchange volume is O(groups*k) at any corpus size."""
     from omop_etl_spark.operators.sketches import kmv_distinct
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _source(spark, sf_dir, "events")
     return kmv_distinct(ev, ["event_type"], "user_id", k=64).select(
         "event_type", "n_kept", "kth_hash_q", "est_distinct"
     )
@@ -4857,9 +4879,9 @@ def _q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.operators.quality import DQRule, dq_profile
 
     tables = {
-        "orders": spark.read.parquet(f"{sf_dir}/orders.parquet"),
-        "lineitem": spark.read.parquet(f"{sf_dir}/lineitem.parquet"),
-        "customer": spark.read.parquet(f"{sf_dir}/customer.parquet"),
+        "orders": _source(spark, sf_dir, "orders"),
+        "lineitem": _source(spark, sf_dir, "lineitem"),
+        "customer": _source(spark, sf_dir, "customer"),
     }
     rules = [
         DQRule("orders_custkey_not_null", "orders", "not_null", "o_custkey"),
@@ -4963,7 +4985,7 @@ def _q_docs_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject: no shuffle, no RNG state."""
     from omop_etl_spark.operators.sampling import weighted_sample
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _source(spark, sf_dir, "documents")
     return weighted_sample(docs, 200, "n_chars", "doc_id").select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "source",
@@ -4994,9 +5016,8 @@ def _q_events_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-window form; both agree because the running MAX is
     permutation-invariant within tie blocks."""
     from omop_etl_spark.operators.temporal import interval_concurrency
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     return interval_concurrency(ev, "event_type", "ts", "30 MINUTES").select(
         "event_type", "n_intervals", "max_concurrent"
     )
@@ -5029,7 +5050,7 @@ def _q_embed_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes identically in DuckDB's double-posexplode replay."""
     from omop_etl_spark.operators.stats import quantized_covariance
 
-    emb = _spread_read(spark, f"{sf_dir}/embeddings.parquet")
+    emb = _spread_read(spark, sf_dir, "embeddings")
     return quantized_covariance(emb, "embedding", shift=14).select(
         F.col("i").cast("bigint").alias("i"),
         F.col("j").cast("bigint").alias("j"),
@@ -5071,7 +5092,7 @@ def _q_docs_length_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a sequence cross to emit zero-count bins) — the profiling
     primitive for chunk-size planning. One hash aggregate; the bin
     spine is a range() literal, never the corpus."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _source(spark, sf_dir, "documents")
     width = 500
     n_bins = 20
     binned = docs.select(
@@ -5116,7 +5137,7 @@ def _q_events_skew_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle runs."""
     from omop_etl_spark.operators.skew import two_stage_agg
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _source(spark, sf_dir, "events")
     micros = F.floor(F.col("value") * 1000000).cast("bigint")
     staged = two_stage_agg(
         ev.withColumn("__micros", micros),
@@ -5153,9 +5174,8 @@ def _q_events_hourly_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct users report exact counts (the sketch's small-group
     degeneracy is exactness, not error)."""
     from omop_etl_spark.operators.sketches import kmv_distinct
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     ev = ev.withColumn("hour", F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:00"))
     return kmv_distinct(ev, ["event_type", "hour"], "user_id", k=16).select(
         "event_type", "hour", "n_kept", "est_distinct"
@@ -5194,7 +5214,7 @@ def _q_orders_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     is integer-stable across engines."""
     from omop_etl_spark.operators.reconcile import table_checksum
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    o = _source(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
         "o_orderstatus",
@@ -5240,7 +5260,7 @@ def _q_orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     per row; classification is a null-pattern CASE on the hashes."""
     from omop_etl_spark.operators.reconcile import snapshot_diff
 
-    base = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    base = _source(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
         "o_orderstatus",
@@ -5305,9 +5325,8 @@ def _q_events_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the plain inequality join. Every pair is id+id rows, so
     the shuffle never carries payloads."""
     from omop_etl_spark.operators.temporal import overlap_join
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     mk = lambda t, pfx: (
         ev.filter(F.col("event_type") == t).select(
             F.col("user_id").alias(f"{pfx}_user"),
@@ -5363,11 +5382,11 @@ def _q_events_salted_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     and AQE skew split)."""
     from omop_etl_spark.operators.skew import salted_join
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = _source(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
     dim = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        _source(spark, sf_dir, "events")
         .groupBy(F.col("user_id").alias("d_user"))
         .agg(
             F.count(F.lit(1)).alias("user_events"),
@@ -5413,9 +5432,8 @@ def _q_events_partition_checksums(spark: SparkSession, sf_dir: str) -> DataFrame
     checksum moved. Commutative md5-sum per partition, so the value is
     independent of file layout and engine."""
     from omop_etl_spark.operators.reconcile import partition_checksums
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"]).select(
+    ev = _source(spark, sf_dir, "events").select(
         "event_type",
         F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day"),
         "event_id",
@@ -5457,7 +5475,7 @@ def _q_docs_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.operators.dedup import jaccard_pairs
     from omop_etl_spark.operators.sampling import hash_split
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     pairs = jaccard_pairs(docs, n=3, threshold=0.8)
     clustered = assign_clusters(docs, pairs, id_col="doc_id")
     split = hash_split(
@@ -5525,7 +5543,7 @@ def _q_docs_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     count compiles to TakeOrderedAndProject."""
     from omop_etl_spark.operators.chunking import token_cooccurrence
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return token_cooccurrence(docs, min_support=10, top_k=100).select(
         "term_a", "term_b", "pair_count", "df_a", "df_b", "lift_ppm"
     )
@@ -5572,9 +5590,8 @@ def _q_events_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide intermediate products computed in decimal(38) — so the result
     hashes identically in any engine. The streaming-friendly shape:
     the same 5 sums are mergeable monoid state."""
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     x = F.datediff(F.col("ts").cast("date"), F.lit("1995-01-01").cast("date")).cast(
         "bigint"
     )
@@ -5637,7 +5654,7 @@ def _q_docs_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     the equivalent single window."""
     from omop_etl_spark.operators.sampling import token_budget_sample
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _source(spark, sf_dir, "documents")
     budgets = {"src0": 4000, "src1": 2500}
     out = token_budget_sample(
         docs, "source", "n_chars", budgets, default_budget=1500, buckets=16
@@ -5684,7 +5701,7 @@ def _q_docs_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership, without comparing array formats across engines."""
     from omop_etl_spark.operators.chunking import build_vocab, encode_tokens
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     vocab = build_vocab(docs, vocab_size=512)
     enc = encode_tokens(docs, vocab)
     pos_weighted = F.aggregate(
@@ -5753,7 +5770,7 @@ def _q_docs_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.operators.cluster import assign_clusters
     from omop_etl_spark.operators.dedup import jaccard_pairs
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     pairs = jaccard_pairs(docs, n=3, threshold=0.8)
     clustered = assign_clusters(docs, pairs, id_col="doc_id")
     sizes = clustered.groupBy("cluster_id").agg(
@@ -5822,7 +5839,7 @@ def _q_docs_per_source_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, the same bounded-exchange shape as the KMV sketch."""
     from omop_etl_spark.operators.sampling import unit_hash
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _source(spark, sf_dir, "documents")
     u = unit_hash("doc_id", "persrc")
     w = Window.partitionBy("source").orderBy(u.asc(), F.col("doc_id").asc())
     return (
@@ -5872,7 +5889,7 @@ def _q_docs_training_export(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from omop_etl_spark.conf import checkpoint as _ckpt
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     gated = docs.filter(token_count("text") >= 10)
     deduped = exact_dedup(gated, keys=["text"], tiebreak=["doc_id"])
     picked = token_budget_sample(
@@ -5985,9 +6002,8 @@ def _q_events_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode. The oracle replays the literal interval predicate — the
     equivalence is the thing being verified."""
     from omop_etl_spark.operators.temporal import scd2_from_changes, scd2_lookup
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     dim = scd2_from_changes(
         ev.filter(F.col("event_type") != "purchase"),
         ["user_id"],
@@ -6047,11 +6063,10 @@ def _q_events_missing_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row min/max aggregate (never the fact table), exploded to
     |types| x |hours| rows and anti-joined against observed hours;
     hour ids are integer epoch-hours so the frame is engine-exact."""
-    from omop_etl_spark.sources import read_parquet_table
 
     from omop_etl_spark.conf import checkpoint as _ckpt
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     hour_idx = F.floor(F.unix_timestamp(F.col("ts")) / 3600).cast("bigint")
     # r17: the hour bounds and the type set are exact functions of the
     # distinct (type, hour) frame (distinct preserves min/max and the
@@ -6109,7 +6124,7 @@ def _q_events_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     and its application."""
     from omop_etl_spark.operators.stats import exact_quantile_cuts
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = _source(spark, sf_dir, "events").select(
         "event_type", F.floor(F.col("value") * 1000000).cast("bigint").alias("vm")
     )
     # r17: both the cut selection and the clamped sum are functions of
@@ -6216,7 +6231,7 @@ def _q_part_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.operators.cluster import assign_clusters
     from omop_etl_spark.operators.fuzzy import fuzzy_self_match
 
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").select(
+    part = _source(spark, sf_dir, "part").select(
         F.col("p_partkey").cast("bigint").alias("pid"),
         F.col("p_name").alias("name"),
         F.col("p_brand").alias("brand"),
@@ -6299,10 +6314,10 @@ def _q_orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     part and the support-filtered item set both scale with the data, so
     neither join is hinted — AQE broadcasts them only while they fit;
     the (order, brand) distinct collapses line items map-side."""
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").select(
+    part = _source(spark, sf_dir, "part").select(
         "p_partkey", "p_brand"
     )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = _source(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
     from omop_etl_spark.conf import checkpoint_if_large, path_bytes
@@ -6402,7 +6417,7 @@ def _q_corpus_source_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabularies are billions of terms."""
     from omop_etl_spark.operators.sketches import kmv_set_similarity
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     terms = docs.select(
         "source",
         F.explode(
@@ -6470,7 +6485,7 @@ def _q_events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed by the oracle's window cumsums."""
     from omop_etl_spark.operators.stats import exact_quantile_cuts
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = _source(spark, sf_dir, "events").select(
         "event_type", F.floor(F.col("value") * 1000000).cast("bigint").alias("vm")
     )
     # r17: every downstream step is a function of the per-(type, value)
@@ -6579,9 +6594,8 @@ def _q_events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-ppm transition probabilities. One lead() window per user
     (user partitions scale out), one hash aggregate; probabilities are
     div-truncated integers so the matrix hashes across engines."""
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     steps = (
         ev.select(
@@ -6630,7 +6644,7 @@ def _q_docs_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     First-occurrence attribution is a min(doc_id)-per-term aggregate
     joined back (never a window over the corpus); the fraction is
     integer ppm."""
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     terms = docs.select(
         F.col("doc_id"),
         F.explode(
@@ -6693,7 +6707,7 @@ def _q_supplier_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     total revenue passes ~9e12 cents (~sf0.5)."""
     from omop_etl_spark.operators.rank import ranked_running_sum
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = _source(spark, sf_dir, "lineitem")
     rev = F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast(
         "bigint"
     )
@@ -6745,12 +6759,12 @@ def _q_nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bigint product overflowed under ANSI mode (caught by the r16
     sf10 value sweep; DuckDB escaped via HUGEINT). The share itself
     always fits bigint (<= 1e6)."""
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    nation = _source(spark, sf_dir, "nation")
+    region = _source(spark, sf_dir, "region")
+    cust = _source(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = _source(spark, sf_dir, "orders")
     per_nation = (
         orders.join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("c_nationkey")
@@ -6797,7 +6811,7 @@ def _q_docs_char_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitespace / other, integer ppm) — the cheapest corpus-health
     profile there is: four regexp_replace length subtractions, pure
     JVM, one dimension-sized aggregate."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _source(spark, sf_dir, "documents")
     n = F.length("text").cast("bigint")
     alpha = (n - F.length(F.regexp_replace(F.col("text"), "[A-Za-z]", ""))).cast(
         "bigint"
@@ -6844,15 +6858,6 @@ FROM agg
 # contract
 
 
-
-def _spread_read(spark: SparkSession, path: str):
-    """Parquet scan spread to defaultParallelism partitions: the small
-    single-row-group test files otherwise arrive as ONE partition and
-    serialize every per-row stage (tokenize/score) on a single core."""
-    from omop_etl_spark.operators.util import spread
-
-    return spread(spark.read.parquet(path))
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the full ETL pipeline (mapping phase + wide select with
     joins) over sf0.001."""
@@ -6877,20 +6882,20 @@ def _q_part_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-reductions before the aggregate; nation/region are bounded
     dims (broadcast-safe by construction, left to AQE anyway)."""
     sup = (
-        spark.read.parquet(f"{sf_dir}/supplier.parquet")
+        _source(spark, sf_dir, "supplier")
         .join(
-            spark.read.parquet(f"{sf_dir}/nation.parquet"),
+            _source(spark, sf_dir, "nation"),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .join(
-            spark.read.parquet(f"{sf_dir}/region.parquet").filter(
+            _source(spark, sf_dir, "region").filter(
                 F.col("r_name") == "EUROPE"
             ),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .select("s_suppkey", "s_name", "n_name")
     )
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = _source(spark, sf_dir, "lineitem")
     offers = (
         li.groupBy("l_partkey", "l_suppkey")
         .agg(
@@ -6904,7 +6909,7 @@ def _q_part_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("__sum_c") / F.col("__cnt")).cast("bigint"),
         )
     )
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").filter(
+    part = _source(spark, sf_dir, "part").filter(
         F.col("p_name").like("%bolt%")
     )
     w = Window.partitionBy("l_partkey").orderBy(
@@ -6964,11 +6969,11 @@ def _q_part_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     The global total is a 1-row frame — the one broadcast that stays
     correct at any SF. The threshold compare is integer arithmetic
     (value * 1000 > total): no division, bit-identical everywhere."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = _source(spark, sf_dir, "lineitem")
     sup = (
-        spark.read.parquet(f"{sf_dir}/supplier.parquet")
+        _source(spark, sf_dir, "supplier")
         .join(
-            spark.read.parquet(f"{sf_dir}/nation.parquet").filter(
+            _source(spark, sf_dir, "nation").filter(
                 F.col("n_name") == "NATION_1"
             ),
             F.col("s_nationkey") == F.col("n_nationkey"),
@@ -7017,7 +7022,7 @@ def _q_top_supplier_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast-safe at any SF); the revenue agg shuffles once on
     l_suppkey and is consumed by both the max and the equality join
     without a second scan of lineitem."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
+    li = _source(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
@@ -7028,7 +7033,7 @@ def _q_top_supplier_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(rev).cast("bigint").alias("total_cents")
     )
     mx = per_supp.agg(F.max("total_cents").alias("__mx"))
-    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet").select(
+    sup = _source(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name"
     )
     return (
@@ -7068,14 +7073,14 @@ def _q_orders_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem to |orders| rows BEFORE any join (quantities are integral
     doubles, so the sum is exact); the join-back is agg-to-orders on
     the same key the aggregate shuffled on."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = _source(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").cast("bigint").alias("sum_qty"))
         .filter(F.col("sum_qty") > 300)
     )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    o = _source(spark, sf_dir, "orders")
+    c = _source(spark, sf_dir, "customer").select(
         "c_custkey", "c_name"
     )
     return (
@@ -7119,7 +7124,7 @@ def _q_supplier_dominant_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg-to-agg with integer arithmetic (qty*10 > total*3 — no
     division), and only suppliers surviving the count filter join the
     dimension chain."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
+    li = _source(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
@@ -7136,13 +7141,13 @@ def _q_supplier_dominant_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_dominated")
     )
     sup = (
-        spark.read.parquet(f"{sf_dir}/supplier.parquet")
+        _source(spark, sf_dir, "supplier")
         .join(
-            spark.read.parquet(f"{sf_dir}/nation.parquet"),
+            _source(spark, sf_dir, "nation"),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .join(
-            spark.read.parquet(f"{sf_dir}/region.parquet").filter(
+            _source(spark, sf_dir, "region").filter(
                 F.col("r_name") == "EUROPE"
             ),
             F.col("n_regionkey") == F.col("r_regionkey"),
@@ -7203,7 +7208,7 @@ def _q_cust_dormant_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical in every engine. The anti-join probes the
     date-filtered orders on o_custkey (filter pushed to the scan);
     the threshold frame is one row."""
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    c = _source(spark, sf_dir, "customer")
     cents = F.floor(F.col("c_acctbal") * 100).cast("bigint")
     pos = c.filter(F.col("c_acctbal") > 0)
     thr = pos.agg(
@@ -7211,7 +7216,7 @@ def _q_cust_dormant_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("__cnt"),
     )
     o = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        _source(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= F.lit("1999-01-01").cast("timestamp"))
         .select("o_custkey")
     )
@@ -7270,7 +7275,7 @@ def _q_docs_containment_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle sets; the oracle replays the brute-force definition."""
     from omop_etl_spark.operators.dedup import containment_pairs
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return containment_pairs(docs, n=3, threshold=0.8).select(
         F.col("contained_id").cast("bigint").alias("contained_id"),
         F.col("container_id").cast("bigint").alias("container_id"),
@@ -7313,7 +7318,7 @@ def _q_docs_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-500 cut is engine-stable; the OOV rate is integer ppm. The
     vocab frame is 500 rows by construction (broadcast-safe at any
     SF); token counts aggregate map-side before either join."""
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
         F.explode(
@@ -7380,7 +7385,7 @@ def _q_docs_quality_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE-exactly-rounded — floor() of the result is bit-identical in
     every engine, no libm dependence. The per-source moment frame is
     |sources| rows (bounded); docs join it broadcast."""
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     x = F.col("n_chars").cast("bigint")
     mom = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("__n"),
@@ -7440,7 +7445,7 @@ def _copurchase_pairs(
     sf0.1; cold 4.4s -> 3.0s and one fewer exchange — the part that
     matters at 100 TB). Per-order expansion is basket-size-squared,
     the same bounded contract the self-join had."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = _source(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p")
     )
     baskets = li.groupBy("ok").agg(F.sort_array(F.collect_set("p")).alias("bk"))
@@ -7502,9 +7507,8 @@ def _q_events_burst_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is row-heavy; counts prove the same rows survived in both
     engines together with min/max id checksums)."""
     from omop_etl_spark.operators.temporal import burst_dedup
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     kept = burst_dedup(
         ev, ["user_id", "event_type"], "ts", "10 minutes", tiebreak=["event_id"]
     )
@@ -7545,7 +7549,7 @@ def _q_docs_weighted_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     size."""
     from omop_etl_spark.operators.sampling import weighted_sample_per_group
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _source(spark, sf_dir, "documents")
     return (
         weighted_sample_per_group(docs, "source", 8, "n_chars")
         .select(
@@ -7588,7 +7592,7 @@ def _q_orders_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents) so the oracle hash covers every surviving row."""
     from omop_etl_spark.operators.temporal import apply_cdc
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = _source(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100).cast("bigint")
     base = o.filter(F.col("o_orderkey") % 3 == 0).select(
         F.col("o_orderkey").alias("k"),
@@ -7649,13 +7653,13 @@ def _q_cust_balance_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     null folding."""
     from omop_etl_spark.operators.temporal import upsert
 
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    c = _source(spark, sf_dir, "customer")
     target = c.select(
         F.col("c_custkey").alias("k"),
         F.floor(F.col("c_acctbal") * 100).cast("bigint").alias("bal_cents"),
         F.lit("base").alias("src"),
     )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
+    o = _source(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("1999-01-01").cast("timestamp")
     )
     updates = (
@@ -7707,7 +7711,7 @@ def _q_sketch_term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe join broadcasts a 1024-row frame."""
     from omop_etl_spark.operators.sketches import cm_estimate, cm_sketch_counts
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     terms = docs.select(
         F.explode(
             F.filter(
@@ -7788,7 +7792,7 @@ def _q_docs_contamination_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     islands trick over only the FLAGGED positions."""
     from omop_etl_spark.operators.contamination import contamination_spans
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 17 == 0)
     return contamination_spans(docs, bench, n=5).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -7830,7 +7834,7 @@ def _q_docs_source_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise blow-up."""
     from omop_etl_spark.operators.contamination import source_influence
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return source_influence(docs)
 
 
@@ -7882,7 +7886,7 @@ def _q_corpus_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     products to decimal(38,0) (same arithmetic, exact)."""
     from omop_etl_spark.conf import checkpoint as _ckpt
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     # r17: tc feeds the totals frame and BOTH self-join sides (3
     # consumers); the explode upstream defeats ReuseExchange, so
     # without the eager checkpoint each consumer re-runs the corpus
@@ -8004,7 +8008,7 @@ def _q_docs_top_terms_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(sources * k) over the ALREADY-aggregated frame, never the
     corpus. Rank order (count DESC, term ASC) is total, so the cut is
     engine-stable."""
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     tc = (
         docs.select(
             "source",
@@ -8061,7 +8065,7 @@ def _q_orders_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     generate — one aggregate per side, no row_number over the fact.
     The result aggregates to per-customer surplus counts so the gate
     stays value-dense."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = _source(spark, sf_dir, "orders")
     yr = lambda y: (  # noqa: E731
         o.filter(F.year("o_orderdate") == y).select(
             F.col("o_custkey").cast("bigint").alias("custkey")
@@ -8100,9 +8104,8 @@ def _q_events_latest_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowGroupLimit partial top-k — every map task keeps <= 3 rows
     per key before the exchange. Summarized per type (count + id sum)
     to keep the gate row-light while hashing every survivor."""
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "event_type").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
     )
@@ -8151,7 +8154,7 @@ def _q_docs_encode_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     order) pins sequence ORDER; n_tokens/ids_sum pin the multiset."""
     from omop_etl_spark.operators.bpe import encode_documents
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     enc = encode_documents(docs)
     flat = F.flatten(
         F.transform(
@@ -8246,7 +8249,7 @@ def _q_docs_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_encode_bpe, so Python cost is vocabulary-sized."""
     from omop_etl_spark.operators.bpe import encode_documents
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     enc = encode_documents(docs)
     j = enc.join(docs.select("doc_id", "source"), "doc_id")
     return (
@@ -8342,7 +8345,7 @@ def _q_events_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cliff the global-window ban exists for, partitioned edition. Rank
     indices are pure integer arithmetic (floor(p*(n-1))+1 as
     (k*(n-1))//d + 1), so both engines pick the identical element."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _source(spark, sf_dir, "events")
     vc = F.floor(F.col("value") * 100).cast("bigint")
     hist = ev.groupBy("event_type", vc.alias("v")).agg(
         F.count(F.lit(1)).alias("c")
@@ -8416,7 +8419,7 @@ def _q_docs_pack_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.operators.bpe import encode_documents
     from omop_etl_spark.operators.sampling import pack_sequences
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     per_doc = (
         encode_documents(docs)
         .groupBy("doc_id")
@@ -8502,7 +8505,7 @@ def _q_events_reset_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents keep the running sum engine-exact."""
     from omop_etl_spark.operators.temporal import segmented_cumsum
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _source(spark, sf_dir, "events")
     base = ev.select(
         "event_id",
         "user_id",
@@ -8558,7 +8561,7 @@ def _q_events_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     all hash equi-joins."""
     from omop_etl_spark.operators.graph import kcore_peel
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _source(spark, sf_dir, "events")
     fwd = ev.select(
         F.concat(F.lit("u"), F.col("user_id").cast("string")).alias("src"),
         F.concat(F.lit("t"), F.col("event_type")).alias("dst"),
@@ -8612,7 +8615,7 @@ def _q_events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # invalidates cached plan state).
     if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _source(spark, sf_dir, "events")
     base = ev.filter(F.col("event_type").isin("click", "purchase")).select(
         "event_id",
         "user_id",
@@ -8682,7 +8685,7 @@ def _q_sketch_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle replays sketch AND estimate bit-for-bit."""
     from omop_etl_spark.operators.sketches import hll_estimate, hll_registers
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _source(spark, sf_dir, "events")
     regs = hll_registers(ev, ["event_type"], "user_id")
     return hll_estimate(regs, ["event_type"])
 
@@ -8749,7 +8752,7 @@ def _q_docs_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an exact integer sum."""
     from omop_etl_spark.operators.chunking import bigram_surprisal_scores
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return bigram_surprisal_scores(docs).select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
         "n_bigrams",
@@ -8794,7 +8797,7 @@ def _q_events_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     `n*prefix - t*total` is pure int64, bit-identical in any engine."""
     from omop_etl_spark.operators.temporal import cusum_changepoints
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _source(spark, sf_dir, "events")
     daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -8846,7 +8849,7 @@ def _q_orders_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from omop_etl_spark.conf import checkpoint as _ckpt
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = _source(spark, sf_dir, "orders")
     od = F.to_date("o_orderdate")
     # r17: per_c feeds BOTH the customer-count 1-row frame and the
     # ranked base; without the checkpoint each consumer re-runs the
@@ -8944,7 +8947,7 @@ def _q_cust_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, one fact join back on the customer key (hash, SF-linear both
     sides), one bounded (months x months) aggregate. All-integer
     outputs."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = _source(spark, sf_dir, "orders")
     od = F.to_date("o_orderdate")
     cohort = orders.groupBy("o_custkey").agg(
         F.trunc(F.min(od), "month").alias("cohort_month")
@@ -9006,7 +9009,7 @@ def _q_part_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     iff the exclusive running min <= my size."""
     from omop_etl_spark.operators.rank import running_extreme
 
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    part = _source(spark, sf_dir, "part")
     pts = part.groupBy(
         F.floor(F.col("p_retailprice") * 100).cast("bigint").alias("price_cents"),
         "p_size",
@@ -9049,8 +9052,8 @@ def _q_orders_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     round: members ALWAYS pass; only false POSITIVES are possible."""
     from omop_etl_spark.operators.sketches import bloom_build, bloom_probe
 
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    cust = _source(spark, sf_dir, "customer")
+    orders = _source(spark, sf_dir, "orders")
     members = cust.filter(F.col("c_acctbal") < 0).select("c_custkey").distinct()
     bits = bloom_build(members, "c_custkey", m=4096, k=3)
     probes = orders.select("o_custkey").distinct()
@@ -9122,7 +9125,7 @@ def _q_orders_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     is two exact integer divisions, bit-identical in both engines."""
     from omop_etl_spark.operators.rank import ranked_running_sum
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = _source(spark, sf_dir, "orders")
     per_c = orders.groupBy("o_custkey").agg(
         F.sum(F.floor(F.col("o_totalprice") * 100)).cast("bigint").alias("v")
     )
@@ -9184,7 +9187,7 @@ def _q_events_sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle replays everything bit-for-bit."""
     from omop_etl_spark.operators.sketches import kmv_sliding_distinct
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _source(spark, sf_dir, "events")
     return kmv_sliding_distinct(ev, "ts", "user_id", window_days=7, k=64)
 
 
@@ -9235,7 +9238,7 @@ def _q_events_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-rounded identically)."""
     from omop_etl_spark.operators.temporal import ema_smooth
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = _source(spark, sf_dir, "events")
     daily = ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -9278,7 +9281,7 @@ def _q_corpus_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-less window over an unbounded frame."""
     from omop_etl_spark.operators.chunking import vocab_coverage
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return vocab_coverage(docs)
 
 
@@ -9312,7 +9315,7 @@ def _q_docs_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     row; the over-representation filter runs in decimal(38,0)."""
     from omop_etl_spark.operators.chunking import distinctive_terms
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     return distinctive_terms(docs, "source", top_k=5)
 
 
@@ -9417,7 +9420,7 @@ def _q_embed_top_eigen(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantized_covariance,
     )
 
-    emb = _spread_read(spark, f"{sf_dir}/embeddings.parquet")
+    emb = _spread_read(spark, sf_dir, "embeddings")
     cov = quantized_covariance(emb, "embedding", shift=14).select(
         "i", "j", F.col("cov_scaled").alias("m")
     )
@@ -9482,9 +9485,8 @@ def _q_events_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     lead()-per-user edge extraction as the transition-matrix gate; the
     loop itself touches only state/edge-bounded frames."""
     from omop_etl_spark.operators.graph import markov_stationary
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     steps = ev.select(
         F.col("event_type").alias("src"),
@@ -9541,7 +9543,7 @@ def _q_docs_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical int64 polynomial hash per position."""
     from omop_etl_spark.operators.chunking import content_defined_chunks
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     ch = content_defined_chunks(
         docs, window=_CDC_W, base=_CDC_B, modulus=_CDC_M, divisor=_CDC_D,
         keep_cols=("source",),
@@ -9621,7 +9623,7 @@ def _q_orders_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     no per-column rescans."""
     from omop_etl_spark.operators.profile import profile_table
 
-    orders = _spread_read(spark, f"{sf_dir}/orders.parquet")
+    orders = _spread_read(spark, sf_dir, "orders")
     return profile_table(orders, [c for c, _ in _PROFILE_ORDERS_COLS])
 
 
@@ -9653,9 +9655,8 @@ def _q_events_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``count * 7e6 div total`` — 1e6 means "an average day"). Two
     group-bys on bounded keys (type x 7, then type); the totals frame
     is type-bounded, so its broadcast back is scale-safe."""
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     per = ev.groupBy(
         "event_type", F.expr("weekday(ts) + 1").cast("int").alias("isodow")
     ).agg(F.count(F.lit(1)).alias("n_events"))
@@ -9703,7 +9704,7 @@ def _q_docs_encode_unigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         unigram_segment_words,
     )
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     toks = docs.select(
         "source", F.explode(_term_tokens("text")).alias("word")
     ).filter(F.length("word") <= _UNI_WMAX)
@@ -9821,7 +9822,7 @@ def _q_docs_segment_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
         unigram_segment_pieces,
     )
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     toks = docs.select(F.explode(_term_tokens("text")).alias("word")).filter(
         F.length("word") <= _UNI_WMAX
     )
@@ -9967,7 +9968,7 @@ def _q_docs_learn_unigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         learn_unigram_vocab,
     )
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     toks = docs.select(F.explode(_term_tokens("text")).alias("word")).filter(
         F.length("word") <= _UNI_WMAX
     )
@@ -10034,7 +10035,7 @@ def _q_orders_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     1997 orders) copies survive. Spark plans intersectAll as a
     count-min generate (one aggregate per side, no row_number over
     the fact); the gate re-aggregates to per-customer match counts."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = _source(spark, sf_dir, "orders")
     yr = lambda y: (  # noqa: E731
         o.filter(F.year("o_orderdate") == y).select(
             F.col("o_custkey").cast("bigint").alias("custkey")
@@ -10075,9 +10076,8 @@ def _q_events_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the gate reports sign(num)*num^2*1e6 div (var_a*var_b), exact
     in decimal(38) while |num| < ~3e15 (num^2 * 1e6 must fit 38
     digits; daily counts beyond ~1e6/day need a pre-scale)."""
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
     ).agg(F.count(F.lit(1)).alias("n"))
@@ -10154,7 +10154,7 @@ def _q_orders_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     ppm. The expected ppm are Python-precomputed integer literals
     shared verbatim by both engines (log10 at query time would be
     engine-private float). One aggregate over a digit-bounded key."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = _source(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100).cast("bigint")
     digit = F.substring(cents.cast("string"), 1, 1).cast("int")
     per = (
@@ -10213,7 +10213,7 @@ def _q_orders_fd_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     output."""
     from omop_etl_spark.operators.profile import functional_dependencies
 
-    orders = _spread_read(spark, f"{sf_dir}/orders.parquet")
+    orders = _spread_read(spark, sf_dir, "orders")
     return functional_dependencies(orders, _FD_PAIRS)
 
 
@@ -10237,9 +10237,8 @@ def _q_events_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct users per contribution day (shuffle volume = 7x the
     user-day frame, independent of raw event count). Days outside the
     observed spine drop via the inner join back to the DAU frame."""
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     from omop_etl_spark.conf import checkpoint as _ckpt
 
     # r17: ud feeds both the DAU aggregate and the 7-day contribution
@@ -10290,9 +10289,8 @@ def _q_events_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     every window PARTITIONED by group; floor division via pmod so
     negative sums floor identically on both engines)."""
     from omop_etl_spark.operators.stats import robust_group_stats
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     vals = ev.select(
         "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
@@ -10371,7 +10369,7 @@ def _q_parts_item_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-item top-k is a PARTITIONED window (WindowGroupLimit)."""
     from omop_etl_spark.operators.graph import cooccurrence_topk_similar
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = _source(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
     )
     out = cooccurrence_topk_similar(li, "basket", "item", k=5, min_pairs=2)
@@ -10428,7 +10426,7 @@ def _q_events_multitouch(spark: SparkSession, sf_dir: str) -> DataFrame:
     is-last flags ride ONE window PARTITIONED by purchase id."""
     if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = _source(spark, sf_dir, "events").select(
         "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts"),
         "event_type",
     )
@@ -10518,7 +10516,7 @@ def _q_events_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     key is the only row dropped (no next reading to bound it)."""
     if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = _source(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         "event_type",
@@ -10592,7 +10590,7 @@ def _q_cust_ab_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle); the variant bucket is computed map-side from the hash,
     so the whole query is two hash aggregates, the second over 2
     rows."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = _source(spark, sf_dir, "events").select(
         "user_id", "event_type"
     )
     per_user = ev.groupBy("user_id").agg(
@@ -10664,7 +10662,7 @@ def _q_parts_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BOTH the operator's edge frame and the seed node-set below —
     # pin it once (edge-bounded) so it executes exactly once
     pairs = _copurchase_pairs(spark, sf_dir).localCheckpoint(eager=True)
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").filter(
+    part = _source(spark, sf_dir, "part").filter(
         F.col("p_size") == 1
     )
     nodes = (
@@ -10751,7 +10749,7 @@ def _q_parts_sssp_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=True
     )
     weighted = pairs.select("u", "v", F.expr("1000000 div n").alias("w"))
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").filter(
+    part = _source(spark, sf_dir, "part").filter(
         F.col("p_size") == 1
     )
     nodes = (
@@ -10829,7 +10827,7 @@ def _q_events_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     values), independent of the row count per day."""
     if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = _source(spark, sf_dir, "events").select(
         "event_type",
         F.to_date("ts").alias("day"),
         F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
@@ -10919,7 +10917,7 @@ def _q_orders_diff_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     column count never widens the shuffle."""
     from omop_etl_spark.operators.reconcile import diff_column_counts
 
-    base = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    base = _source(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
         "o_orderstatus",
@@ -10998,7 +10996,7 @@ def _q_docs_greedy_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     step joins the sources-bounded current frame and takes argmax via
     a per-source PARTITIONED window over that word's out-neighbors.
     Python never touches a row."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = _source(spark, sf_dir, "documents").select(
         "source",
         F.expr(
             "filter(split(lower(text), '[^a-z0-9]+'), t -> t <> '')"
@@ -11113,7 +11111,7 @@ def _q_docs_exact_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed rank path, never a partition-less window over data."""
     from omop_etl_spark.operators.sampling import exact_allocation_sample
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = _source(spark, sf_dir, "documents").select(
         "doc_id", "source"
     )
     out = exact_allocation_sample(docs, ["source"], "doc_id", 100)
@@ -11183,7 +11181,7 @@ def _q_sketch_logq_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop at 100 TB."""
     from omop_etl_spark.operators.sketches import logq_buckets, logq_quantiles
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = _source(spark, sf_dir, "events").select(
         "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
     )
@@ -11297,10 +11295,10 @@ def _q_cust_recs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (WindowGroupLimit), never a global sort."""
     from omop_etl_spark.operators.graph import cooccurrence_topk_similar
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+    li = _source(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("basket"), F.col("l_partkey").alias("item")
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = _source(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("basket"), F.col("o_custkey").alias("cust")
     )
     # owned feeds BOTH the scoring join and the already-purchased
@@ -11413,7 +11411,7 @@ def _q_sketch_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.operators.sketches import hll_estimate, hll_registers
 
     ev = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        _source(spark, sf_dir, "events")
         .filter(F.col("event_type").isin("click", "purchase"))
         .select("event_type", "user_id")
     )
@@ -11559,7 +11557,7 @@ def _q_embed_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays train, encode, and search bit-for-bit."""
     from omop_etl_spark.operators.similarity import pq_topk
 
-    emb = _spread_read(spark, f"{sf_dir}/embeddings.parquet")
+    emb = _spread_read(spark, sf_dir, "embeddings")
     return pq_topk(emb, dim=64, m=4, k=8, train_iters=1, topk=10)
 
 
@@ -11663,7 +11661,7 @@ def _q_events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort of paths."""
     if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = _source(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
         "event_type",
@@ -11739,8 +11737,8 @@ def _q_embed_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # count the RAW scan (Catalyst serves count(*) from parquet footer
     # metadata); counting after spread() would pay a read + shuffle
-    k1, k2 = two_level_k(spark.read.parquet(f"{sf_dir}/embeddings.parquet").count())
-    emb = _spread_read(spark, f"{sf_dir}/embeddings.parquet")
+    k1, k2 = two_level_k(_source(spark, sf_dir, "embeddings").count())
+    emb = _spread_read(spark, sf_dir, "embeddings")
     asn = kmeans_assign_two_level(emb, k1=k1, k2=k2, iters=2).select(
         "vec_id", "cluster_id"
     )
@@ -11873,7 +11871,7 @@ def _q_embed_semdedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.operators.cluster import assign_clusters
     from omop_etl_spark.operators.similarity import scoped_cosine_pairs
 
-    emb = _spread_read(spark, f"{sf_dir}/embeddings.parquet")
+    emb = _spread_read(spark, sf_dir, "embeddings")
     pairs = scoped_cosine_pairs(emb, threshold=0.2, k=8, iters=2, max_cell=62)
     return assign_clusters(emb, pairs, id_col="vec_id").select(
         F.col("vec_id").cast("bigint").alias("vec_id"),
@@ -11968,9 +11966,8 @@ def _q_events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     One sequence-explode grid per user + two running windows on the
     user hash partitioning — no self-join, no global window."""
     from omop_etl_spark.operators.temporal import resample_interp
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     daily = ev.groupBy(
         F.col("user_id"), F.col("ts").cast("date").alias("day")
     ).agg(
@@ -12044,7 +12041,7 @@ def _q_docs_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side, so the shuffled tf frame is query-bounded per doc."""
     from omop_etl_spark.operators.chunking import bm25_topk
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     out = bm25_topk(docs, list(BM25_QUERY_TERMS), k=20)
     return out.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -12119,8 +12116,8 @@ def _q_docs_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.operators.chunking import bm25_topk
     from omop_etl_spark.operators.similarity import cosine_topk, rrf_fuse
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
-    emb = _spread_read(spark, f"{sf_dir}/embeddings.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
+    emb = _spread_read(spark, sf_dir, "embeddings")
     bm = bm25_topk(docs, list(BM25_QUERY_TERMS), k=HYBRID_RRF_K_EACH).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), "rank"
     )
@@ -12198,7 +12195,7 @@ def _q_orders_trailing_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64, so the result is fully deterministic. Scale: hash
     partition on custkey, no global window, no self-join (the naive
     range self-join would shuffle orders x orders)."""
-    orders = _spread_read(spark, f"{sf_dir}/orders.parquet")
+    orders = _spread_read(spark, sf_dir, "orders")
     od = F.to_date("o_orderdate")
     base = orders.select(
         F.col("o_orderkey").cast("bigint").alias("orderkey"),
@@ -12260,7 +12257,7 @@ def _q_docs_learn_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-bar encoding, which needs iterated replace)."""
     from omop_etl_spark.operators.bpe import learn_merges
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     wc = (
         docs.select(
             F.explode(
@@ -12339,7 +12336,7 @@ def _q_agg_weighted_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from omop_etl_spark.conf import checkpoint as _ckpt
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = _source(spark, sf_dir, "lineitem")
     # r17: the bucketed quantile path reads its input three times
     # (local cumsum, carry offsets, totals) and each read re-ran the
     # full lineitem scan + aggregate (3 scans in the r17 audit). The
@@ -12410,7 +12407,7 @@ def _q_docs_waterfill_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from omop_etl_spark.conf import checkpoint as _ckpt
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     # r17: the waterfill arithmetic references the avail frame several
     # times (rank, totals, breakpoint scan — 4 source scans in the r17
     # audit), and each reference re-ran the corpus tokenize + explode.
@@ -12479,7 +12476,7 @@ def _q_sketch_vocab_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omop_etl_spark.operators.chunking import _term_tokens
     from omop_etl_spark.operators.sketches import kmv_difference
 
-    docs = _spread_read(spark, f"{sf_dir}/documents.parquet")
+    docs = _spread_read(spark, sf_dir, "documents")
     toks = docs.select(
         "source", F.explode(_term_tokens("text")).alias("term")
     )
@@ -12538,9 +12535,8 @@ def _q_events_busy_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``bucket_width`` decomposes them for skewed keys — equivalence
     unit-tested)."""
     from omop_etl_spark.operators.temporal import interval_union
-    from omop_etl_spark.sources import read_parquet_table
 
-    ev = read_parquet_table(spark, f"{sf_dir}/events.parquet", ns_columns=["ts"])
+    ev = _source(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts"))
     iv = ev.select(
         F.col("user_id").cast("bigint").alias("user_id"),

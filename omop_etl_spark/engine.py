@@ -80,23 +80,8 @@ class Engine:
 
     def register_parquet(self, qualified_name: str, path: str | Path) -> None:
         """Register an existing parquet file/dir as ``schema.table``
-        without copying data.
-
-        A relative local path is resolved against the CALLER's working
-        directory before the DDL: Spark resolves a relative ``LOCATION``
-        URI against the database directory under the warehouse, so
-        without this an existing ``./data/t.parquet`` registers as the
-        nonexistent ``<warehouse>/<schema>.db/data/t.parquet`` and every
-        read fails with UNABLE_TO_INFER_SCHEMA (found by the r15 sf1
-        harness run). Paths with an explicit URI scheme (``s3a://``,
-        ``hdfs://``) pass through untouched."""
-        schema, _, _ = qualified_name.partition(".")
-        self._ensure_schema(schema)
-        self.spark.sql(f"DROP TABLE IF EXISTS {qualified_name}")
-        self.spark.sql(
-            f"CREATE TABLE {qualified_name} USING parquet "
-            f"LOCATION '{self._resolve_location(path)}'"
-        )
+        without copying data (:meth:`register_source`)."""
+        self.register_source(qualified_name, path)
 
     def register_df(self, qualified_name: str, df: DataFrame) -> None:
         """Materialize a DataFrame as ``schema.table`` (test fixtures,
@@ -134,20 +119,27 @@ class Engine:
         """Register any Spark-readable location as ``schema.table``.
 
         ``parquet``/``orc`` register by LOCATION (no copy, scans prune
-        columns and push filters); row-oriented formats (``json``,
-        ``csv``) are materialized to parquet once so repeated rule
-        joins never re-parse text.
+        columns and push filters; the catalog keeps the schema inferred
+        here, so later reads start no inference job); row-oriented
+        formats (``json``, ``csv``) are materialized to parquet once so
+        repeated rule joins never re-parse text.
+
+        A relative local path is resolved against the CALLER's working
+        directory before the DDL: Spark resolves a relative ``LOCATION``
+        URI against the database directory under the warehouse, so
+        without this an existing ``./data/t.parquet`` registers as the
+        nonexistent ``<warehouse>/<schema>.db/data/t.parquet`` and every
+        read fails with UNABLE_TO_INFER_SCHEMA (found by the r15 sf1
+        harness run). Paths with an explicit URI scheme (``s3a://``,
+        ``hdfs://``) pass through untouched.
         """
         fmt = fmt.lower()
-        if fmt == "parquet":
-            self.register_parquet(qualified_name, path)
-            return
-        if fmt == "orc":
+        if fmt in ("parquet", "orc"):
             schema, _, _ = qualified_name.partition(".")
             self._ensure_schema(schema)
             self.spark.sql(f"DROP TABLE IF EXISTS {qualified_name}")
             self.spark.sql(
-                f"CREATE TABLE {qualified_name} USING orc "
+                f"CREATE TABLE {qualified_name} USING {fmt} "
                 f"LOCATION '{self._resolve_location(path)}'"
             )
             return

@@ -1,4 +1,9 @@
-from .reader import enable_nanos_compat, read_parquet_table, EVENTS_NS_COLUMNS
+from .reader import (
+    enable_nanos_compat,
+    normalize_timestamps,
+    read_parquet_table,
+    EVENTS_NS_COLUMNS,
+)
 from .text import (
     DOCS_JSONL_SCHEMA,
     ingest_stats,
@@ -10,6 +15,7 @@ from .text import (
 
 __all__ = [
     "enable_nanos_compat",
+    "normalize_timestamps",
     "read_parquet_table",
     "EVENTS_NS_COLUMNS",
     "DOCS_JSONL_SCHEMA",

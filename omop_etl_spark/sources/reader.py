@@ -1,7 +1,8 @@
 """Source readers: parquet with timestamp-encoding compatibility.
 
 Pandas/pyarrow writers emit timestamps in encodings Spark handles
-awkwardly; this reader normalizes the known ones to plain ``timestamp``:
+awkwardly; :func:`normalize_timestamps` turns the known ones into plain
+``timestamp`` for every reader (batch path, catalog table or stream):
 
 * ``TIMESTAMP(NANOS)`` — Spark's vectorized reader rejects it
   (``PARQUET_TYPE_ILLEGAL``).  With
@@ -20,7 +21,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["enable_nanos_compat", "read_parquet_table", "EVENTS_NS_COLUMNS"]
+__all__ = [
+    "enable_nanos_compat",
+    "normalize_timestamps",
+    "read_parquet_table",
+    "EVENTS_NS_COLUMNS",
+]
 
 #: known nanosecond-timestamp columns in the driver testdata
 EVENTS_NS_COLUMNS = {"events": ["ts"]}
@@ -49,19 +55,24 @@ def enable_nanos_compat(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def normalize_timestamps(df: DataFrame, columns: list[str] | None) -> DataFrame:
+    """Convert each named column that arrives as epoch-nanos ``bigint``
+    or as ``timestamp_ntz`` to plain ``timestamp``; other columns, and
+    names the frame lacks, pass through. Works on batch and streaming
+    frames alike (it reads only the schema)."""
+    dtypes = dict(df.dtypes)
+    for c in columns or ():
+        if dtypes.get(c) == "bigint":  # legacy nanos-as-long encoding
+            df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))
+        elif dtypes.get(c) == "timestamp_ntz":  # pandas timestamp[us] without tz
+            df = df.withColumn(c, F.col(c).cast("timestamp"))
+    return df
+
+
 def read_parquet_table(
     spark: SparkSession, path: str, ns_columns: list[str] | None = None
 ) -> DataFrame:
     """Read parquet; convert the named epoch-nanos long columns to
     microsecond timestamps."""
     enable_nanos_compat(spark)
-    df = spark.read.parquet(path)
-    for c in ns_columns or ():
-        if c not in df.columns:
-            continue
-        dtype = dict(df.dtypes)[c]
-        if dtype == "bigint":  # legacy nanos-as-long encoding
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))
-        elif dtype == "timestamp_ntz":  # pandas timestamp[us] without tz
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
+    return normalize_timestamps(spark.read.parquet(path), ns_columns)

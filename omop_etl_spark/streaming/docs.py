@@ -38,24 +38,16 @@ from ..operators.dedup import (
     minhash_signature,
     token_shingles,
 )
+from .events import read_table_stream
 
 __all__ = ["read_docs_stream", "flag_stream_neardups"]
 
 
 def read_docs_stream(spark: SparkSession, path: str) -> DataFrame:
-    """File-source stream over a documents parquet directory (or single
-    file — streamed via a glob filter on its parent). Schema comes from
-    a batch footer read, same as ``streaming.events.read_events_stream``.
-    """
-    from pathlib import Path
-
-    on_disk = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(on_disk).format("parquet")
-    p = Path(path)
-    if p.is_file():
-        reader = reader.option("pathGlobFilter", p.name)
-        path = str(p.parent)
-    return reader.load(path)
+    """File-source stream over a documents parquet directory or single
+    file: :func:`~omop_etl_spark.streaming.events.read_table_stream`,
+    which takes the schema from a batch read of the same path."""
+    return read_table_stream(spark, path)
 
 
 def flag_stream_neardups(

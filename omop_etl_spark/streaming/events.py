@@ -21,6 +21,7 @@ windows per key.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +32,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..sources.reader import EVENTS_NS_COLUMNS, enable_nanos_compat, normalize_timestamps
 
 __all__ = [
     "EVENTS_SCHEMA",
@@ -71,17 +74,14 @@ def read_table_stream(spark: SparkSession, path: str) -> DataFrame:
     file source requires a directory).
 
     The file source needs a user-supplied schema; it is taken from a
-    batch footer read of the same path (footer-only, cheap) so the
-    stream always matches what's on disk. Table-specific column
+    batch read of the same path, whose schema inference runs one Spark
+    job over the parquet footers, so the stream always matches what's
+    on disk. Table-specific column
     normalization stays with the callers — :func:`read_events_stream`
     layers the ``ts`` timestamp-encoding shim on top of this.
     """
-    from pathlib import Path
-
-    from ..sources.reader import enable_nanos_compat
-
     enable_nanos_compat(spark)
-    on_disk = spark.read.parquet(path).schema  # footer-only, cheap
+    on_disk = spark.read.parquet(path).schema  # one schema-inference job
     reader = spark.readStream.schema(on_disk).format("parquet")
     p = Path(path)
     if p.is_file():
@@ -92,19 +92,16 @@ def read_table_stream(spark: SparkSession, path: str) -> DataFrame:
 
 def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream over an events parquet path
-    (:func:`read_table_stream`) with the ``ts`` column normalized the
-    same way :func:`~omop_etl_spark.sources.read_parquet_table` does —
-    rather than hard-code one timestamp encoding (the round-4 outage:
-    the testdata moved from ``timestamp[ns]`` to
-    ``timestamp[us]``-no-tz), the shim adapts to the footer schema.
+    (:func:`read_table_stream`) with the ``ts`` column normalized by
+    :func:`~omop_etl_spark.sources.reader.normalize_timestamps`, the
+    function every batch reader uses — rather than hard-code one
+    timestamp encoding (the round-4 outage: the testdata moved from
+    ``timestamp[ns]`` to ``timestamp[us]``-no-tz), the shim adapts to
+    the footer schema.
     """
-    raw = read_table_stream(spark, path)
-    dtype = dict(raw.dtypes).get("ts")
-    if dtype == "bigint":  # epoch nanos via nanosAsLong
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dtype == "timestamp_ntz":  # pandas timestamp[us] without tz
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return normalize_timestamps(
+        read_table_stream(spark, path), EVENTS_NS_COLUMNS["events"]
+    )
 
 
 def hourly_counts(

@@ -30,12 +30,21 @@ def _queries(e):
     return list(e.queries().items())
 
 
-def test_no_cartesian_or_rowwise_python_anywhere(spark, entry):
-    import __spark_entry__ as e
+@pytest.fixture(scope="module")
+def registry_plans(spark, entry):
+    """Every registry gate built once under the default conf:
+    ``name -> (analyzed plan, executed plan)``. The strings are taken
+    as each gate is built, because the streaming gates drop earlier
+    gates' sink views."""
+    plans = {}
+    for name, fn in _queries(entry):
+        qe = fn(spark, SF_DIR)._jdf.queryExecution()
+        plans[name] = (qe.analyzed().toString(), qe.executedPlan().toString())
+    return plans
 
-    for name, fn in _queries(e):
-        df = fn(spark, SF_DIR)
-        plan = _plan(df)
+
+def test_no_cartesian_or_rowwise_python_anywhere(registry_plans):
+    for name, (_, plan) in registry_plans.items():
         assert "CartesianProduct" not in plan, name
         # BatchEvalPython = pickled row-at-a-time UDF; every python op
         # must be ArrowEvalPython / FlatMapGroupsInPandas / MapInPandas
@@ -45,7 +54,7 @@ def test_no_cartesian_or_rowwise_python_anywhere(spark, entry):
 def test_agg_scans_are_column_pruned(spark, entry):
     # lineitem has 11 columns; the pricing aggregate needs 6
     plan = _plan(entry.queries()["agg_pricing_summary"](spark, SF_DIR))
-    m = re.search(r"FileScan parquet \[([^\]]*)\]", plan)
+    m = re.search(r"FileScan parquet [\w.]*\[([^\]]*)\]", plan)
     assert m, plan
     cols = [c for c in m.group(1).split(",") if c]
     assert len(cols) <= 6, m.group(1)
@@ -255,24 +264,34 @@ def _unbounded_hinted_scans(plan):
     return bad
 
 
-def test_no_hint_on_unbounded_frame_anywhere(spark, entry):
+def test_no_hint_on_unbounded_frame_anywhere(registry_plans):
     """VERDICT r6 #1: walk every registry query and assert no broadcast
     hint targets a frame derived from an SF-linear table without a
     row-collapsing node in between. The 8 r6 offenders (customer /
     supplier / part / cluster-size broadcasts) fail this test if
     reintroduced."""
-    import __spark_entry__ as e
-
     offenders = {}
-    for name, fn in _queries(e):
+    for name, (plan, _) in registry_plans.items():
         if name in _HINT_EXEMPT:
             continue
-        df = fn(spark, SF_DIR)
-        plan = df._jdf.queryExecution().analyzed().toString()
         bad = _unbounded_hinted_scans(plan)
         if bad:
             offenders[name] = bad
     assert not offenders, offenders
+
+
+def test_hint_scanner_sees_catalog_scans(spark, entry):
+    # gates read sources as catalog tables, so each Relation line reads
+    # spark_catalog.cerner.<t>; the scanner must still flag them
+    from pyspark.sql import functions as F
+
+    entry._engine(spark, SF_DIR)
+    df = spark.table("cerner.customer").join(
+        F.broadcast(spark.table("cerner.orders")),
+        F.col("c_custkey") == F.col("o_custkey"),
+    )
+    bad = _unbounded_hinted_scans(df._jdf.queryExecution().analyzed().toString())
+    assert [b for b in bad if "spark_catalog.cerner.orders" in b], bad
 
 
 def test_hint_exemptions_do_not_grow_silently(spark, entry):
@@ -430,6 +449,29 @@ def _sf_linear_scans_under(n):
     return out
 
 
+def _partitionless_window_scans(plan):
+    """SF-linear scans under any partition-less Window of ``plan``."""
+    hits, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        stack.extend(_children(node))
+        if node.nodeName() == "Window" and node.partitionSpec().isEmpty():
+            hits.extend(_sf_linear_scans_under(node))
+    return hits
+
+
+def test_window_scanner_sees_catalog_scans(spark, entry):
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    entry._engine(spark, SF_DIR)
+    df = spark.table("cerner.lineitem").withColumn(
+        "rn", F.row_number().over(Window.orderBy("l_orderkey", "l_linenumber"))
+    )
+    hits = _partitionless_window_scans(df._jdf.queryExecution().optimizedPlan())
+    assert [h for h in hits if "spark_catalog.cerner.lineitem" in h], hits
+
+
 def test_no_partitionless_window_over_sf_linear_scan(spark, entry):
     from omop_etl_spark.planner.surrogate import FORCE_DISTRIBUTED_CONF
 
@@ -442,17 +484,9 @@ def test_no_partitionless_window_over_sf_linear_scan(spark, entry):
             if name in _GLOBAL_WINDOW_EXEMPT:
                 continue
             plan = fn(spark, SF_DIR)._jdf.queryExecution().optimizedPlan()
-            stack = [plan]
-            while stack:
-                node = stack.pop()
-                stack.extend(_children(node))
-                if (
-                    node.nodeName() == "Window"
-                    and node.partitionSpec().isEmpty()
-                ):
-                    hits = _sf_linear_scans_under(node)
-                    if hits:
-                        offenders.setdefault(name, []).extend(hits)
+            hits = _partitionless_window_scans(plan)
+            if hits:
+                offenders[name] = hits
     finally:
         spark.conf.unset(FORCE_DISTRIBUTED_CONF)
     assert not offenders, offenders
