@@ -70,16 +70,34 @@ def _source_path(sf_dir: str, t: str) -> str:
     return os.path.abspath(f"{sf_dir}/{t}.parquet")
 
 
-def _source(spark: SparkSession, sf_dir: str, t: str) -> DataFrame:
-    """Source table ``t`` of ``sf_dir``, read by name as ``cerner.<t>``
-    (:func:`_engine`) with the timestamp normalization of
-    ``EVENTS_NS_COLUMNS`` applied."""
-    from omop_etl_spark.sources import EVENTS_NS_COLUMNS, normalize_timestamps
-
+def _table(spark: SparkSession, sf_dir: str, t: str) -> DataFrame:
+    """``cerner.<t>`` as the catalog stores it, registered from
+    ``sf_dir`` by :func:`_engine`."""
     if not os.path.exists(_source_path(sf_dir, t)):
         raise FileNotFoundError(f"source table cerner.{t}: no {t}.parquet in {sf_dir}")
     _engine(spark, sf_dir)
-    return normalize_timestamps(spark.table(f"cerner.{t}"), EVENTS_NS_COLUMNS.get(t))
+    return spark.table(f"cerner.{t}")
+
+
+def _source(spark: SparkSession, sf_dir: str, t: str) -> DataFrame:
+    """Source table ``t`` of ``sf_dir``, read by name as ``cerner.<t>``
+    (:func:`_table`) with the timestamp normalization of
+    ``EVENTS_NS_COLUMNS`` applied."""
+    from omop_etl_spark.sources import EVENTS_NS_COLUMNS, normalize_timestamps
+
+    return normalize_timestamps(_table(spark, sf_dir, t), EVENTS_NS_COLUMNS.get(t))
+
+
+def _stream_source(spark: SparkSession, sf_dir: str, t: str) -> DataFrame:
+    """File-source stream over ``<t>.parquet`` in ``sf_dir`` with the
+    schema the catalog stored for ``cerner.<t>`` (no schema-inference
+    job) and the timestamp normalization of :func:`_source`."""
+    from omop_etl_spark.sources import EVENTS_NS_COLUMNS, normalize_timestamps
+    from omop_etl_spark.streaming.events import read_table_stream
+
+    schema = _table(spark, sf_dir, t).schema
+    stream = read_table_stream(spark, f"{sf_dir}/{t}.parquet", schema)
+    return normalize_timestamps(stream, EVENTS_NS_COLUMNS.get(t))
 
 
 def _spread_read(spark: SparkSession, sf_dir: str, t: str):
@@ -715,9 +733,9 @@ def _q_events_sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     real sink with the 2 h watermark bounding state. The
     session_window aggregation itself shuffles once on (user_id,
     session) and its state is per-OPEN-session, not per-event."""
-    from omop_etl_spark.streaming.events import read_events_stream, sessionize
+    from omop_etl_spark.streaming.events import sessionize
 
-    src = read_events_stream(spark, f"{sf_dir}/events.parquet")
+    src = _stream_source(spark, sf_dir, "events")
     tbl = _run_available_now(
         sessionize(src, gap="30 minutes", watermark="2 hours"),
         "sess_replay",
@@ -773,12 +791,9 @@ def _q_events_busy_time_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     worker. The per-user rollup (n_islands / covered / max_island)
     runs on the sink table; oracle = the batch islands,
     order-independent by construction."""
-    from omop_etl_spark.streaming.events import (
-        read_events_stream,
-        stream_interval_union,
-    )
+    from omop_etl_spark.streaming.events import stream_interval_union
 
-    src = read_events_stream(spark, f"{sf_dir}/events.parquet")
+    src = _stream_source(spark, sf_dir, "events")
     us = F.unix_micros(F.col("ts"))
     iv = src.select(
         F.col("user_id").cast("bigint").alias("user_id"),
@@ -831,12 +846,9 @@ def _q_events_latest_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     order, so ``max(struct(ord, value))`` over the sink IS the last
     emission (struct comparison sorts NULL first, the same NULL-loses
     rule)."""
-    from omop_etl_spark.streaming.events import (
-        read_events_stream,
-        stream_latest_state,
-    )
+    from omop_etl_spark.streaming.events import stream_latest_state
 
-    src = read_events_stream(spark, f"{sf_dir}/events.parquet")
+    src = _stream_source(spark, sf_dir, "events")
     lww = src.select(
         F.col("user_id").cast("bigint").alias("user_id"),
         F.unix_micros(F.col("ts")).alias("last_ts_us"),
@@ -900,12 +912,9 @@ def _q_orders_cdc_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the busy-time recovery pattern; the tombstone's NULL value sorts
     first, and a tombstone only wins at the key's max seq, so the
     NULL-value row still carries the winning (seq, op))."""
-    from omop_etl_spark.streaming.events import (
-        read_table_stream,
-        stream_cdc_state,
-    )
+    from omop_etl_spark.streaming.events import stream_cdc_state
 
-    o = read_table_stream(spark, f"{sf_dir}/orders.parquet")
+    o = _stream_source(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100).cast("bigint")
     base = o.filter(F.col("o_orderkey") % 3 == 0).select(
         F.col("o_orderkey").alias("k"),
@@ -1005,12 +1014,9 @@ def _q_events_burst_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_incremental_replay.py). Survivors appear exactly once
     in the final complete-mode table, so the per-type aggregation
     needs no dedup trick."""
-    from omop_etl_spark.streaming.events import (
-        read_events_stream,
-        stream_burst_dedup,
-    )
+    from omop_etl_spark.streaming.events import stream_burst_dedup
 
-    src = read_events_stream(spark, f"{sf_dir}/events.parquet")
+    src = _stream_source(spark, sf_dir, "events")
     kept = stream_burst_dedup(
         src.select("user_id", "event_type", "ts", "event_id"),
         keys=["user_id", "event_type"],
@@ -1119,9 +1125,9 @@ def _q_events_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-insensitive user-id checksum) value-checks WHICH keys
     emitted and that each emitted once — the exactly-once-per-key
     semantics itself."""
-    from omop_etl_spark.streaming.events import read_events_stream, stream_dedup
+    from omop_etl_spark.streaming.events import stream_dedup
 
-    src = read_events_stream(spark, f"{sf_dir}/events.parquet")
+    src = _stream_source(spark, sf_dir, "events")
     kept = stream_dedup(
         src.select("user_id", "event_type"),
         keys=["user_id", "event_type"],
@@ -1177,12 +1183,9 @@ def _q_events_kmv_distinct_stream(spark: SparkSession, sf_dir: str) -> DataFrame
     Python remains; the per-KEY group dispatch that does remain is
     this operator's documented modest-key-cardinality contract (five
     event types here)."""
-    from omop_etl_spark.streaming.events import (
-        read_events_stream,
-        stream_kmv_distinct,
-    )
+    from omop_etl_spark.streaming.events import stream_kmv_distinct
 
-    src = read_events_stream(spark, f"{sf_dir}/events.parquet")
+    src = _stream_source(spark, sf_dir, "events")
     est = stream_kmv_distinct(
         src.select("event_type", "user_id"),
         key_col="event_type",
@@ -1245,12 +1248,9 @@ def _q_events_logq_quantile_stream(spark: SparkSession, sf_dir: str) -> DataFram
     produce no registers at all, mirroring the oracle's positivity
     filter."""
     from omop_etl_spark.operators.sketches import logq_quantiles
-    from omop_etl_spark.streaming.events import (
-        read_events_stream,
-        stream_logq_buckets,
-    )
+    from omop_etl_spark.streaming.events import stream_logq_buckets
 
-    src = read_events_stream(spark, f"{sf_dir}/events.parquet")
+    src = _stream_source(spark, sf_dir, "events")
     vals = src.select(
         "event_type",
         F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
@@ -9421,14 +9421,19 @@ def _q_embed_top_eigen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _spread_read(spark, sf_dir, "embeddings")
-    cov = quantized_covariance(emb, "embedding", shift=14).select(
-        "i", "j", F.col("cov_scaled").alias("m")
+    cov = quantized_covariance(emb, "embedding", shift=14)
+    # the upper triangle plus each off-diagonal cell mirrored, in one
+    # pass over the covariance (a union would run its upstream twice)
+    cell = F.struct("i", "j", F.col("cov_scaled").alias("m"))
+    mirror = F.struct(
+        F.col("j").alias("i"), F.col("i").alias("j"), F.col("cov_scaled").alias("m")
     )
-    full = cov.unionByName(
-        cov.filter(F.col("i") < F.col("j")).select(
-            F.col("j").alias("i"), F.col("i").alias("j"), "m"
-        )
-    )
+    full = cov.select(
+        F.explode(
+            F.when(F.col("i") < F.col("j"), F.array(cell, mirror))
+            .otherwise(F.array(cell))
+        ).alias("c")
+    ).select("c.*")
     v = power_iteration_top_eigen(full, "i", "j", "m", rounds=8)
     return v.select(F.col("i").cast("bigint").alias("i"), "v")
 

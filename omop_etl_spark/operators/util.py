@@ -2,9 +2,28 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
-__all__ = ["ppm_div_sql", "spread"]
+__all__ = [
+    "DRIVER_LOOP_MAX_ROWS",
+    "collect_bounded",
+    "literal_frame",
+    "ppm_div_sql",
+    "spread",
+    "sql_div",
+    "sql_fit",
+]
+
+#: The most rows :func:`collect_bounded` brings to the driver: a
+#: 256 x 256 matrix, or that many transition-count edges.
+DRIVER_LOOP_MAX_ROWS = 65_536
+
+_SQL_RANGES = {
+    "BIGINT": (-(1 << 63), (1 << 63) - 1),
+    "DECIMAL(38,0)": (1 - 10**38, 10**38 - 1),
+}
 
 
 def ppm_div_sql(numerator: str, denominator: str) -> str:
@@ -55,3 +74,54 @@ def spread(df: DataFrame, min_factor: int = 1) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def collect_bounded(df: DataFrame, op: str) -> list[Row]:
+    """Collect a loop-invariant frame that an operator iterates on the
+    driver: one ``limit(cap + 1)`` collect, capped at
+    :data:`DRIVER_LOOP_MAX_ROWS`. A larger frame is not a tiny domain,
+    so it raises a ``ValueError`` naming ``op`` and the cap; there is
+    no distributed fallback.
+    """
+    cap = DRIVER_LOOP_MAX_ROWS
+    rows = df.limit(cap + 1).collect()
+    if len(rows) > cap:
+        raise ValueError(
+            f"{op}: the input frame has more than {cap:,} rows "
+            f"(DRIVER_LOOP_MAX_ROWS); it iterates on the driver and takes "
+            f"state- or dimension-bounded frames only"
+        )
+    return rows
+
+
+def sql_fit(x: int, sql_type: str, op: str) -> int:
+    """``x`` unchanged if it fits ``sql_type`` (``"BIGINT"`` or
+    ``"DECIMAL(38,0)"``); else raise ``ArithmeticError`` naming ``op``,
+    where ANSI Spark would raise on the same value."""
+    lo, hi = _SQL_RANGES[sql_type]
+    if not lo <= x <= hi:
+        raise ArithmeticError(f"{op}: {x} overflows {sql_type}")
+    return x
+
+
+def sql_div(a: int, b: int, op: str) -> int:
+    """SQL integral ``a div b``: truncates toward zero (Python ``//``
+    floors), and a zero divisor raises as it does under ANSI."""
+    if b == 0:
+        raise ArithmeticError(f"{op}: division by zero")
+    q = abs(a) // abs(b)
+    return q if (a < 0) == (b < 0) else -q
+
+
+def literal_frame(
+    spark: SparkSession, schema: StructType, rows: list[tuple]
+) -> DataFrame:
+    """A small frame of driver-side ``rows`` as one JVM literal: an
+    inlined array of structs over a one-row range. Unlike
+    ``createDataFrame`` on a list, its plan holds no RDD of pickled
+    rows, so running it starts no Python worker. Building it takes
+    three py4j calls per row (about 0.6 ms), so it suits small results.
+    """
+    structs = [F.struct(*[F.lit(v) for v in row]) for row in rows]
+    arr = F.array(*structs).cast(ArrayType(schema))
+    return spark.range(1, numPartitions=1).select(F.inline(arr))

@@ -68,21 +68,25 @@ EVENTS_SCHEMA = StructType(
 )
 
 
-def read_table_stream(spark: SparkSession, path: str) -> DataFrame:
+def read_table_stream(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
     """File-source stream over ANY parquet table directory (or a single
     parquet file — streamed via a glob filter on its parent, since the
     file source requires a directory).
 
-    The file source needs a user-supplied schema; it is taken from a
-    batch read of the same path, whose schema inference runs one Spark
-    job over the parquet footers, so the stream always matches what's
-    on disk. Table-specific column
+    The file source needs a user-supplied schema. A caller whose table
+    is in the catalog passes the schema stored there
+    (``spark.table(name).schema`` starts no job); without one it is
+    taken from a batch read of the same path, whose schema inference
+    runs one Spark job over the parquet footers. Table-specific column
     normalization stays with the callers — :func:`read_events_stream`
     layers the ``ts`` timestamp-encoding shim on top of this.
     """
     enable_nanos_compat(spark)
-    on_disk = spark.read.parquet(path).schema  # one schema-inference job
-    reader = spark.readStream.schema(on_disk).format("parquet")
+    if schema is None:
+        schema = spark.read.parquet(path).schema  # one schema-inference job
+    reader = spark.readStream.schema(schema).format("parquet")
     p = Path(path)
     if p.is_file():
         reader = reader.option("pathGlobFilter", p.name)

@@ -102,8 +102,8 @@ PROBE = {
     "events_kcore": "linear-ish (3 rounds of degree agg + semi-joins)",
     # round-9 additions (VERDICT r8 #5): the heavies that landed after
     # the r8 probe, plus the two post-persistence-fix iterators
-    "embed_top_eigen": "linear (one covariance pass; loop is d^2-bounded)",
-    "events_stationary": "linear (one lead() pass; loop is state-bounded)",
+    "embed_top_eigen": "linear (one covariance pass; driver loop, cap 65,536)",
+    "events_stationary": "linear (one lead() pass; driver loop, cap 65,536)",
     "parts_communities": "linear-ish (per-order pair fan-out bounded; 3 LPA rounds)",
     "docs_cdc_chunks": "linear (map-only rolling hash)",
     "docs_encode_unigram": "linear (distinct-word DP, vocab broadcast)",

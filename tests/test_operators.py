@@ -766,9 +766,11 @@ def test_rolling_median_matches_bruteforce(spark):
     brute-force formulation (range join day-6..day, sorted-list
     lower median in Python) on the real sf0.001 events."""
     import importlib.util
+    from pathlib import Path
 
     spec = importlib.util.spec_from_file_location(
-        "entrymod_rm", "/root/repo/__spark_entry__.py"
+        "entrymod_rm",
+        Path(__file__).resolve().parents[1] / "__spark_entry__.py",
     )
     em = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(em)

@@ -75,3 +75,23 @@ def test_gate_construction_starts_no_job(spark, entry):
         entry.queries()[gate](spark, SF001)
         started[gate] = sched.nextJobId() - before
     assert started == {"agg_pricing_summary": 0, "text_langid": 0}
+
+
+@pytest.mark.parametrize("t", ["events", "documents"])
+def test_stream_schema_from_catalog_equals_inferred_schema(spark, entry, t):
+    from omop_etl_spark.sources import EVENTS_NS_COLUMNS, normalize_timestamps
+    from omop_etl_spark.streaming.events import read_table_stream
+
+    inferred = read_table_stream(spark, f"{SF001}/{t}.parquet")
+    want = normalize_timestamps(inferred, EVENTS_NS_COLUMNS.get(t)).schema
+    assert entry._stream_source(spark, SF001, t).schema == want
+
+
+def test_stream_gate_starts_no_schema_inference_job(spark, entry):
+    """Building events_dedup_stream runs its replay in one job; the
+    batch schema read it used to start first is gone (2 jobs before)."""
+    entry._engine(spark, SF001)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.nextJobId()
+    entry.queries()["events_dedup_stream"](spark, SF001)
+    assert sched.nextJobId() - before == 1
