@@ -25,15 +25,13 @@ from typing import Callable, Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from .dialect import is_plpgsql_script, translate
-from .planner.compiler import MAPPING_SCHEMA, TARGET_SCHEMA, TableCompiler
+from .planner.compiler import TARGET_SCHEMA, TableCompiler
 from .rules.loader import load_rules_dir, resolve_default_schemas, topo_sort
 from .rules.model import DependencySpec, TableSpec
 
 __all__ = ["Engine"]
 
 log = logging.getLogger(__name__)
-
-_CORE_SCHEMAS = ("cerner", TARGET_SCHEMA, MAPPING_SCHEMA, "external")
 
 
 class Engine:
@@ -48,7 +46,6 @@ class Engine:
     def __init__(
         self,
         spark: SparkSession,
-        schemas: Sequence[str] = _CORE_SCHEMAS,
         strict_scripts: bool = True,
     ):
         self.spark = spark
@@ -58,8 +55,6 @@ class Engine:
         # missing/empty lookup — fail fast like the reference's psql run
         # would; pass strict_scripts=False for the old warn-and-continue
         self.strict_scripts = strict_scripts
-        for s in schemas:
-            self._ensure_schema(s)
 
     # -- catalog ------------------------------------------------------------
 

@@ -56,24 +56,10 @@ def _estimated_bytes(df: DataFrame) -> int:
         return 1 << 62
 
 
-#: Session conf that pins every stats-gated prefix-sum/rank operator to
-#: its distributed path regardless of the size estimate. Set by the
-#: plan-quality scanner (tests/test_plan_quality.py) so the plans it
-#: audits are the plans a large SF would produce; never set in
-#: production (the gate exists because the single-partition window IS
-#: cheaper below _SMALL_FRAME_BYTES).
-FORCE_DISTRIBUTED_CONF = "spark.omop_etl.prefixsum.forceDistributed"
-
-
 def use_small_frame_path(df: DataFrame) -> bool:
     """Shared strategy gate for the three prefix-sum consumers
     (with_surrogate_id, sampling.pack_sequences, rank.ranked_running_sum):
     True -> single-partition window, False -> distributed range path."""
-    try:
-        if df.sparkSession.conf.get(FORCE_DISTRIBUTED_CONF, "false") == "true":
-            return False
-    except Exception:  # noqa: BLE001 - conf layer hiccup: size decides
-        pass
     return _estimated_bytes(df) < _SMALL_FRAME_BYTES
 
 

@@ -168,15 +168,6 @@ def main() -> int:
     for name, fn in queries.items():
         if only and name not in only:
             continue
-        if name not in oracles:
-            try:
-                n_rows = fn(spark, sf_dir).count()
-            except Exception as e:  # noqa: BLE001
-                failures.append((name, f"spark error: {e}"))
-                print(f"FAIL {name}: spark error: {str(e).splitlines()[0][:200]}")
-                continue
-            print(f"OK?  {name}: rows={n_rows} (no oracle — rows-only check)")
-            continue
         try:
             sdf = fn(spark, sf_dir)
         except Exception as e:  # noqa: BLE001

@@ -9,7 +9,7 @@ Usage:
     python scripts/explain_query.py <query> [sf_dir] [--force-distributed]
 
 ``--force-distributed`` pins the stats-gated prefix-sum/rank operators
-to their at-scale path (same conf the plan scanner uses), so you can
+to their at-scale path (as the plan scanner does), so you can
 audit the plan a large SF would produce while pointing at small data.
 """
 
@@ -45,9 +45,9 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     if force:
-        from omop_etl_spark.planner.surrogate import FORCE_DISTRIBUTED_CONF
+        from omop_etl_spark.planner import surrogate
 
-        spark.conf.set(FORCE_DISTRIBUTED_CONF, "true")
+        surrogate._SMALL_FRAME_BYTES = 0
 
     df = entrymod.queries()[name](spark, sf_dir)
     df.explain("formatted")

@@ -472,23 +472,22 @@ def test_window_scanner_sees_catalog_scans(spark, entry):
     assert [h for h in hits if "spark_catalog.cerner.lineitem" in h], hits
 
 
-def test_no_partitionless_window_over_sf_linear_scan(spark, entry):
-    from omop_etl_spark.planner.surrogate import FORCE_DISTRIBUTED_CONF
+def test_no_partitionless_window_over_sf_linear_scan(spark, entry, monkeypatch):
+    from omop_etl_spark.planner import surrogate
 
     import __spark_entry__ as e
 
+    # every prefix-sum consumer takes its at-scale path: the plans
+    # audited are the plans a large SF would produce
+    monkeypatch.setattr(surrogate, "_SMALL_FRAME_BYTES", 0)
     offenders = {}
-    try:
-        spark.conf.set(FORCE_DISTRIBUTED_CONF, "true")
-        for name, fn in _queries(e):
-            if name in _GLOBAL_WINDOW_EXEMPT:
-                continue
-            plan = fn(spark, SF_DIR)._jdf.queryExecution().optimizedPlan()
-            hits = _partitionless_window_scans(plan)
-            if hits:
-                offenders[name] = hits
-    finally:
-        spark.conf.unset(FORCE_DISTRIBUTED_CONF)
+    for name, fn in _queries(e):
+        if name in _GLOBAL_WINDOW_EXEMPT:
+            continue
+        plan = fn(spark, SF_DIR)._jdf.queryExecution().optimizedPlan()
+        hits = _partitionless_window_scans(plan)
+        if hits:
+            offenders[name] = hits
     assert not offenders, offenders
 
 
@@ -583,3 +582,59 @@ def test_no_row_wise_pandas_iteration_in_package():
         "whole Arrow batches with numpy, or allowlist with justification): "
         f"{hits}"
     )
+
+
+# --- source-level guard: every checkpoint goes through conf.checkpoint ---
+#
+# conf.RELIABLE_CHECKPOINT_CONF switches every checkpoint between
+# executor-local blocks and the reliable checkpoint dir; a direct
+# `.localCheckpoint()` or DataFrame `.checkpoint()` call silently stays
+# local. Walks the AST, so docstrings that name ``.checkpoint()`` pass.
+def test_checkpoints_route_through_conf():
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    files = sorted((root / "omop_etl_spark").rglob("*.py"))
+    files.append(root / "__spark_entry__.py")
+    hits = []
+    for path in files:
+        rel = path.relative_to(root).as_posix()
+        if rel == "omop_etl_spark/conf.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "checkpoint")
+            ):
+                continue
+            recv = node.func.value
+            if isinstance(recv, ast.Name) and recv.id == "conf":
+                continue  # conf.checkpoint(df)
+            hits.append(f"{rel}:{node.lineno}: .{node.func.attr}(...)")
+    assert not hits, (
+        "direct checkpoint call bypasses conf.RELIABLE_CHECKPOINT_CONF "
+        f"(use omop_etl_spark.conf.checkpoint): {hits}"
+    )
+
+
+def test_registry_gate_checkpoints_follow_the_conf_switch(spark, entry, tmp_path):
+    """The behaviour behind the guard above, after
+    test_layout.py::test_checkpoint_conf_switch: ``sketch_hll_union``
+    checkpoints its register frame, and in reliable mode the files land
+    under the checkpoint dir."""
+    import warnings
+
+    from omop_etl_spark.conf import RELIABLE_CHECKPOINT_CONF
+
+    ckdir = tmp_path / "ck"
+    spark.sparkContext.setCheckpointDir(str(ckdir))
+    try:
+        spark.conf.set(RELIABLE_CHECKPOINT_CONF, "true")
+        with warnings.catch_warnings():
+            warnings.simplefilter("ignore", RuntimeWarning)  # cleanCheckpoints
+            entry.queries()["sketch_hll_union"](spark, SF_DIR)
+    finally:
+        spark.conf.set(RELIABLE_CHECKPOINT_CONF, "false")
+    assert any(p.is_file() for p in ckdir.rglob("*")), "gate checkpoint stayed local"

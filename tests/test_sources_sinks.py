@@ -46,6 +46,16 @@ def test_register_source_formats(engine, spark, tmp_path, fmt):
     assert rows == [(1, "a"), (2, "b"), (3, "c")]
 
 
+def test_engine_construction_creates_no_database(engine, spark):
+    """A schema is created where a table is registered or written, not
+    when an Engine is built: the ``engine`` fixture leaves only
+    ``default``, and a new Engine adds nothing to it."""
+    from omop_etl_spark import Engine
+
+    Engine(spark)
+    assert [r[0] for r in spark.sql("SHOW DATABASES").collect()] == ["default"]
+
+
 def test_register_source_rejects_unknown(engine):
     with pytest.raises(ValueError, match="unsupported source format"):
         engine.register_source("src.t", "/nope", fmt="avroesque")
