@@ -31,6 +31,7 @@ from .rules.model import TableSpec, parse_spec
 __all__ = [
     "translate_rule",
     "load_required_columns_csv",
+    "missing_required_columns",
     "create_app",
     "create_wsgi_app",
 ]
@@ -46,6 +47,17 @@ def load_required_columns_csv(path: str | Path) -> dict[str, set[str]]:
                 row["column"].strip().lower()
             )
     return required
+
+
+def missing_required_columns(
+    spec: TableSpec, required_columns: Mapping[str, set[str]]
+) -> list[str]:
+    """Sorted required columns of ``spec``'s table that no enabled rule
+    populates (reference api.py:19-40). The surrogate pk is always
+    populated by the skeleton phase, so it is never missing."""
+    populated = {c.lower() for c in spec.column_order}
+    populated.add(spec.primary_key.name.lower())
+    return sorted(required_columns.get(spec.name.lower(), set()) - populated)
 
 
 def _render_script(spec) -> str:
@@ -73,12 +85,10 @@ def translate_rule(
             + _render_script(spec),
             "warnings": [],
         }
-    warnings = []
-    if required_columns:
-        populated = {c.lower() for c in spec.column_order}
-        populated.add(spec.primary_key.name.lower())
-        for col in sorted(required_columns.get(spec.name.lower(), set()) - populated):
-            warnings.append(f"required column '{col}' of '{spec.name}' is not populated")
+    warnings = [
+        f"required column '{col}' of '{spec.name}' is not populated"
+        for col in missing_required_columns(spec, required_columns or {})
+    ]
     return {"script": _render_script(spec), "warnings": warnings}
 
 

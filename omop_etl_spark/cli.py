@@ -167,31 +167,23 @@ def _cmd_compile(args) -> int:
 
 
 def _cmd_validate(args) -> int:
-    from .engine import Engine
+    from .api import load_required_columns_csv, missing_required_columns
     from .rules.loader import load_rules_dir
     from .rules.model import TableSpec
 
     specs = load_rules_dir(args.rules)
-    required: dict[str, set[str]] = {}
-    if args.required_columns:
-        import csv
-
-        with open(args.required_columns, newline="") as f:
-            for row in csv.DictReader(f):
-                required.setdefault(row["table"].strip().lower(), set()).add(
-                    row["column"].strip().lower()
-                )
+    required = (
+        load_required_columns_csv(args.required_columns) if args.required_columns else {}
+    )
     status = 0
     for spec in specs:
         if not isinstance(spec, TableSpec):
             print(f"{spec.name or '<anonymous>'}: dependency OK")
             continue
-        missing = required.get(spec.name.lower(), set()) - {
-            c.lower() for c in spec.column_order
-        } - {spec.primary_key.name.lower()}
+        missing = missing_required_columns(spec, required)
         if missing:
             status = 1
-            print(f"{spec.name}: WARNING missing required columns: {sorted(missing)}")
+            print(f"{spec.name}: WARNING missing required columns: {missing}")
         else:
             print(f"{spec.name}: OK ({len(spec.columns)} column rules)")
     return status

@@ -24,6 +24,7 @@ from typing import Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .api import load_required_columns_csv
 from .dialect import is_plpgsql_script, translate
 from .planner.compiler import TARGET_SCHEMA, TableCompiler
 from .rules.loader import load_rules_dir, resolve_default_schemas, topo_sort
@@ -283,19 +284,8 @@ class Engine:
         not-null finalization filter — the live version of the
         reference's dead DELETE phase (schema.py:426-428, SURVEY §2.1
         #22)."""
-        import csv
-
-        with open(csv_path, newline="") as f:
-            for row in csv.DictReader(f):
-                self.required_columns.setdefault(
-                    row["table"].strip().lower(), set()
-                ).add(row["column"].strip().lower())
-
-    def missing_required_columns(self, spec: TableSpec) -> set[str]:
-        """Required OMOP columns this spec never populates (the API's
-        warning check, reference api.py:19-40)."""
-        required = self.required_columns.get(spec.name.lower(), set())
-        return required - {c.lower() for c in spec.column_order}
+        for table, cols in load_required_columns_csv(csv_path).items():
+            self.required_columns.setdefault(table, set()).update(cols)
 
     # -- execution ----------------------------------------------------------
 

@@ -3,26 +3,10 @@
 The anti-pattern this module exists to kill: ``Window.orderBy(...)``
 with no ``partitionBy`` funnels EVERY row into one reducer — fine on a
 bounded frame (a 25-row dimension), a scale cliff on anything
-SF-linear.  ``ranked_running_sum`` computes the same
-``row_number() + SUM() OVER (ORDER BY ...)`` pair with the classic
-distributed decomposition (same machinery as
-``planner/surrogate.with_surrogate_id`` and
-``operators/sampling.pack_sequences``):
-
-1. ``repartitionByRange`` on the order key — partition ids ascend with
-   the global order, each partition holds a contiguous rank range;
-2. one tiny per-partition aggregate (count + sum) — ≤ one row per
-   partition, prefix-summed with a window whose input is
-   partition-COUNT-sized (bounded by config, not by data);
-3. broadcast the offsets back and finish with a window PARTITIONED BY
-   the range-partition id — per-reducer work is one partition, never
-   the whole frame.
-
-Strategy choice is stats-gated exactly like ``with_surrogate_id``:
-below ``_SMALL_FRAME_BYTES`` the single-partition window is cheaper
-(saves the range-sampling job and an exchange); above it the
-distributed path is mandatory.  Pass ``num_partitions`` to pin the
-distributed path (tests do).
+SF-linear.  Both running aggregates here state their aggregates and
+hand the rest to ``planner/surrogate._prefix_scan``, the one ordered
+prefix scan of the package (stats-gated single-partition window, or
+range partitions plus broadcast prefix offsets).
 
 Reference parity note: the reference (omop-etl) delegates all ranking
 to PostgreSQL window functions; this module is the Spark-side scale
@@ -31,10 +15,10 @@ strategy for the same semantics, not a port.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..planner.surrogate import use_small_frame_path
+from ..planner.surrogate import _prefix_scan
 
 __all__ = ["ranked_running_sum", "ntile_from_rank", "running_extreme"]
 
@@ -45,11 +29,10 @@ def ranked_running_sum(
     value_col: str,
     rank_col: str = "rank",
     cum_col: str = "cum_sum",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Add ``rank_col`` = global 1-based ``row_number`` and ``cum_col``
     = inclusive running ``SUM(value_col)`` under ``ORDER BY
-    order_cols``.
+    order_cols`` (NULL values are skipped, as in SQL).
 
     ``order_cols`` should be a UNIQUE ordering (include a tiebreaker
     key) — with ties, rank assignment within the tie group is
@@ -60,65 +43,17 @@ def ranked_running_sum(
     (the running sum is exact int64 — callers needing wider headroom
     cast to decimal downstream).
 
-    The distributed path persists the range-partitioned frame
-    (load-bearing — see the inline comment) and does NOT unpersist
-    it: the result is returned lazily, so the operator can't know
-    when the caller has materialized it.  Callers chaining many
-    invocations in one session own cleanup
-    (``spark.catalog.clearCache()`` or ``df.unpersist()`` on the
-    input after collect) — the same contract as
-    ``dedup.containment_pairs``; MEMORY_AND_DISK evicts under
-    pressure, so the leak is bounded-cost, never a correctness risk.
+    The distributed path leaves its range frame persisted (the result
+    is lazy); callers chaining many invocations in one session own
+    cleanup (``spark.catalog.clearCache()``) — MEMORY_AND_DISK evicts
+    under pressure, so the leak is bounded-cost, never a correctness
+    risk.
     """
-    from pyspark import StorageLevel
-
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-
-    if num_partitions is None and use_small_frame_path(df):
-        w = Window.orderBy(*cols)
-        wf = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        return df.withColumn(
-            rank_col, F.row_number().over(w).cast("bigint")
-        ).withColumn(cum_col, F.sum(value_col).over(wf).cast("bigint"))
-
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    # persist is load-bearing, not a cache hint: repartitionByRange
-    # SAMPLES its boundaries per plan instantiation, so the offsets
-    # branch and the assign branch must observe one partitioner or rows
-    # silently land in different partitions between the two.
-    ranged = df.repartitionByRange(num_partitions, *cols).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    pid = ranged.withColumn("__rk_pid", F.spark_partition_id())
-    totals = pid.groupBy("__rk_pid").agg(
-        F.count(F.lit(1)).alias("__rk_cnt"),
-        F.sum(value_col).alias("__rk_sum"),
-    )
-    # exclusive prefix sums over ≤ num_partitions rows: the ONLY
-    # partition-less window here, and its frame is bounded by the
-    # partition count, never the data.
-    w_off = Window.orderBy("__rk_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "__rk_pid",
-        F.coalesce(F.sum("__rk_cnt").over(w_off), F.lit(0)).alias("__rk_cnt_off"),
-        F.coalesce(F.sum("__rk_sum").over(w_off), F.lit(0)).alias("__rk_sum_off"),
-    )
-    w_in = Window.partitionBy("__rk_pid").orderBy(*cols)
-    w_in_f = w_in.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return (
-        pid.join(F.broadcast(offsets), "__rk_pid")
-        .withColumn(
-            rank_col,
-            (F.row_number().over(w_in) + F.col("__rk_cnt_off")).cast("bigint"),
-        )
-        .withColumn(
-            cum_col,
-            (F.sum(value_col).over(w_in_f) + F.col("__rk_sum_off")).cast("bigint"),
-        )
-        .drop("__rk_pid", "__rk_cnt_off", "__rk_sum_off")
+    return _prefix_scan(
+        df,
+        order_cols,
+        [("count", None, True), ("sum", value_col, True)],
+        lambda n, s: {rank_col: n.cast("bigint"), cum_col: s.cast("bigint")},
     )
 
 
@@ -158,16 +93,11 @@ def running_extreme(
     out_col: str = "run_min",
     agg: str = "min",
     inclusive: bool = True,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Global running MIN/MAX of ``value_col`` under ``ORDER BY
-    order_cols`` — the same distributed decomposition as
-    :func:`ranked_running_sum` (range-repartition, per-partition
-    extreme, broadcast prefix extremes, finishing window PARTITIONED
-    by the range-partition id), for the running-aggregate shapes SUM
-    can't express: Pareto frontiers / skyline pruning ("is anything
-    before me already smaller?"), record-to-date series, monotone
-    envelope checks.
+    order_cols`` — the running-aggregate shapes SUM can't express:
+    Pareto frontiers / skyline pruning ("is anything before me already
+    smaller?"), record-to-date series, monotone envelope checks.
 
     ``inclusive=False`` gives the EXCLUSIVE frame (strict
     predecessors only, SQL's ``ROWS BETWEEN UNBOUNDED PRECEDING AND 1
@@ -180,47 +110,6 @@ def running_extreme(
     """
     if agg not in ("min", "max"):
         raise ValueError("running_extreme supports agg in {'min', 'max'}")
-    from pyspark import StorageLevel
-
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    fa = F.min if agg == "min" else F.max
-    combine = F.least if agg == "min" else F.greatest
-    end = Window.currentRow if inclusive else -1
-
-    if num_partitions is None and use_small_frame_path(df):
-        w = Window.orderBy(*cols).rowsBetween(Window.unboundedPreceding, end)
-        return df.withColumn(out_col, fa(value_col).over(w))
-
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    # persist is load-bearing: repartitionByRange samples boundaries
-    # per plan instantiation (see ranked_running_sum).
-    ranged = df.repartitionByRange(num_partitions, *cols).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    pid = ranged.withColumn("__rx_pid", F.spark_partition_id())
-    totals = pid.groupBy("__rx_pid").agg(fa(value_col).alias("__rx_ext"))
-    # exclusive prefix extreme over <= num_partitions rows — the only
-    # partition-less window, frame bounded by config not data.
-    w_off = Window.orderBy("__rx_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "__rx_pid", fa("__rx_ext").over(w_off).alias("__rx_off")
-    )
-    w_in = (
-        Window.partitionBy("__rx_pid")
-        .orderBy(*cols)
-        .rowsBetween(Window.unboundedPreceding, end)
-    )
-    local = fa(value_col).over(w_in)
-    return (
-        pid.join(F.broadcast(offsets), "__rx_pid")
-        .withColumn(
-            out_col,
-            F.when(local.isNull(), F.col("__rx_off"))
-            .when(F.col("__rx_off").isNull(), local)
-            .otherwise(combine(local, F.col("__rx_off"))),
-        )
-        .drop("__rx_pid", "__rx_off")
+    return _prefix_scan(
+        df, order_cols, [(agg, value_col, inclusive)], lambda m: {out_col: m}
     )

@@ -9,11 +9,9 @@ replays the assignment bit-for-bit, and re-running the pipeline after
 adding rows never reassigns existing ones (the property that matters
 when a 100 TB corpus is split incrementally).
 
-``pack_sequences`` is the exception: packing is an ordered prefix-sum,
-so it reuses the stats-gated strategy of
-``planner/surrogate.with_surrogate_id`` — a single-partition window
-below the size threshold, a range-exchange + per-partition offsets
-path above it.
+``rank_filter`` and ``pack_sequences`` are the exceptions: a rank and
+a packing are ordered prefix scans, so both ride
+``planner/surrogate._prefix_scan``.
 """
 
 from __future__ import annotations
@@ -22,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..conf import checkpoint as _checkpoint
+from ..planner.surrogate import _prefix_scan, with_surrogate_id
 
 __all__ = [
     "unit_hash",
@@ -175,7 +174,6 @@ def rank_filter(
     order_cols: list,
     keep_frac: float,
     rank_col: str | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Keep the best ``keep_frac`` of the corpus under ``ORDER BY
     order_cols`` — the exact-percentile quality gate ("train on the top
@@ -188,20 +186,16 @@ def rank_filter(
     (``approxQuantile``) make the kept set irreproducible across runs
     and engines; this operator is oracle-replayable row-for-row.
 
-    Scale strategy is ``with_surrogate_id`` (planner/surrogate.py)
-    verbatim: below the stats threshold a single-partition window,
-    above it ONE range exchange + per-partition offsets — the same
-    cost as any global sort of the frame. The total count rides the
-    rank frame (a 1-row aggregate broadcast), so the whole gate is one
-    wide shuffle end-to-end. With ``rank_col`` set the global rank is
-    kept in the output (useful for curriculum ordering downstream).
+    The rank is ``with_surrogate_id`` (planner/surrogate.py): below
+    the stats threshold a single-partition window, above it ONE range
+    exchange + per-partition offsets — the same cost as any global
+    sort of the frame. The total count rides the rank frame (a 1-row
+    aggregate broadcast), so the whole gate is one wide shuffle
+    end-to-end. With ``rank_col`` set the global rank is kept in the
+    output (useful for curriculum ordering downstream).
     """
-    from ..planner.surrogate import with_surrogate_id
-
     out_rank = rank_col or "__rk_rank"
-    ranked = with_surrogate_id(
-        df, order_cols, id_col=out_rank, num_partitions=num_partitions
-    )
+    ranked = with_surrogate_id(df, order_cols, id_col=out_rank)
     total = df.select(F.count(F.lit(1)).alias("__rk_total"))
     kept = (
         ranked.crossJoin(F.broadcast(total))
@@ -220,7 +214,6 @@ def pack_sequences(
     order_col: str = "doc_id",
     budget: int = 8192,
     bin_col: str = "bin_id",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Pack ordered rows into fixed-budget bins (sequence packing for
     LLM training: documents -> training sequences of ~``budget``
@@ -231,61 +224,14 @@ def pack_sequences(
     window cumsum, and every bin's cost is ~``budget`` (a bin overflows
     by at most one row, the standard contiguous-fill packing
     approximation; rows with ``cost > budget`` get a bin of their own).
-
-    Scale strategy mirrors ``with_surrogate_id`` (planner/surrogate.py):
-    below the stats threshold a single-partition window computes the
-    prefix sum directly; above it the frame is range-partitioned by
-    ``order_col`` once, per-partition cost totals (one tiny aggregate)
-    are exclusive-prefix-summed and broadcast back, and the
-    within-partition running sum comes from a window whose partition
-    key is the range-partition id — one wide exchange total, same as
-    any global sort."""
-    from pyspark import StorageLevel
-
-    from ..planner.surrogate import use_small_frame_path
-
-    cum_excl_name = "__pk_cum"
-    if num_partitions is None and use_small_frame_path(df):
-        w = (
-            Window.orderBy(order_col)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        cum = F.coalesce(F.sum(cost_col).over(w), F.lit(0))
-        return df.withColumn(
-            bin_col, F.floor(cum / F.lit(float(budget))).cast("bigint")
-        )
-
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-    # persist is load-bearing: range boundaries are sampled per plan
-    # instantiation (see surrogate.py) — the totals branch and the
-    # assign branch must observe one partitioning
-    ranged = (
-        df.repartitionByRange(num_partitions, F.col(order_col))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    pid = ranged.withColumn("__pk_pid", F.spark_partition_id())
-    totals = pid.groupBy("__pk_pid").agg(F.sum(cost_col).alias("__pk_tot"))
-    w_off = Window.orderBy("__pk_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "__pk_pid",
-        F.coalesce(F.sum("__pk_tot").over(w_off), F.lit(0)).alias("__pk_off"),
-    )
-    # the within-partition window hash-exchanges on the partition id —
-    # one extra narrow shuffle of (row, pid); acceptable because rows
-    # stay grouped exactly as ranged, and AQE splits any skewed pid
-    w_in = (
-        Window.partitionBy("__pk_pid")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = F.coalesce(F.sum(cost_col).over(w_in), F.lit(0)) + F.col("__pk_off")
-    return (
-        pid.join(F.broadcast(offsets), "__pk_pid")
-        .withColumn(bin_col, F.floor(cum / F.lit(float(budget))).cast("bigint"))
-        .drop("__pk_pid")
+    The exclusive prefix sum is one ``planner/surrogate._prefix_scan``."""
+    return _prefix_scan(
+        df,
+        [order_col],
+        [("sum", cost_col, False)],
+        lambda s: {
+            bin_col: F.floor(F.coalesce(s, F.lit(0)) / F.lit(float(budget))).cast("bigint")
+        },
     )
 
 

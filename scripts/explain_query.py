@@ -24,6 +24,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as entrymod
+from omop_etl_spark.planner import surrogate
 
 
 def main() -> None:
@@ -45,8 +46,6 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     if force:
-        from omop_etl_spark.planner import surrogate
-
         surrogate._SMALL_FRAME_BYTES = 0
 
     df = entrymod.queries()[name](spark, sf_dir)
@@ -70,11 +69,11 @@ def main() -> None:
         if re.search(r"\bWindow\b", line) and "partitionBy" not in line:
             # physical Window prints partition spec inline; empty spec
             # shows as 'Window [..], [ord..]' with only two groups.
-            # Per-partition-count offset frames (the *_pid prefix-sum
-            # aggregates) are bounded by config — not flagged, same
-            # rule as the plan scanner.
+            # Per-partition-count offset frames (the prefix scan's
+            # aggregates over surrogate.PARTITION_ID_COL) are bounded
+            # by config — not flagged, same rule as the plan scanner.
             groups = re.findall(r"\[[^\]]*\]", line)
-            if len(groups) == 2 and "_pid" not in line:
+            if len(groups) == 2 and surrogate.PARTITION_ID_COL not in line:
                 flags.append("partition-less Window: " + line.strip()[:110])
     print("red flags:", flags or "none")
     spark.stop()

@@ -1,3 +1,4 @@
+import contextlib
 import shutil
 import tempfile
 
@@ -44,3 +45,27 @@ def engine(spark):
     for (view,) in spark.sql("SHOW VIEWS IN default").select("viewName").collect():
         spark.catalog.dropTempView(view)
     return Engine(spark)
+
+
+@pytest.fixture()
+def scan_path(spark):
+    """``scan_path(path, partitions)``: a context manager that forces the
+    stats gate of ``planner/surrogate`` onto ``"window"`` (the
+    single-partition window) or ``"range"`` (the distributed range
+    scan) and sets ``spark.sql.shuffle.partitions``, restoring both on
+    exit. Frames built from Python lists estimate as huge, so without
+    it they always take the range path."""
+    from omop_etl_spark.planner import surrogate
+
+    @contextlib.contextmanager
+    def force(path, partitions=4):
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(surrogate, "_SMALL_FRAME_BYTES", {"window": 1 << 63, "range": 0}[path])
+            spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+            try:
+                yield
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", old)
+
+    return force

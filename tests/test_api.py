@@ -117,3 +117,37 @@ def test_fastapi_app_round_trip_when_available():
     resp = client.post("/api/translate", json=yaml.safe_load(RULE))
     assert resp.status_code == 200
     assert "CREATE TABLE omop.person_copy" in resp.json()["script"]
+
+
+def test_cli_validate_and_engine_read_one_required_columns_csv(
+    tmp_path, capsys, engine, spark
+):
+    """``cli validate``, the API and ``Engine.load_required_columns``
+    read the CSV with one reader and judge it with one rule: the
+    surrogate pk is populated by the skeleton phase, never missing."""
+    from test_etl_fixtures import COPY_RULES, seed_cerner
+
+    from omop_etl_spark.api import load_required_columns_csv
+    from omop_etl_spark.cli import main
+    from omop_etl_spark.rules.loader import load_rules_dir
+
+    rules = tmp_path / "rules"
+    rules.mkdir()
+    (rules / "baz.yaml").write_text(COPY_RULES)  # pk id; populates alpha, beta
+    required = tmp_path / "required.csv"
+    required.write_text("table,column\nbaz,id\nBaz, gamma \n")
+
+    assert main(["validate", "--rules", str(rules), "--required-columns", str(required)]) == 1
+    out = capsys.readouterr().out
+    assert "baz: WARNING missing required columns: ['gamma']" in out
+    assert "'id'" not in out
+
+    want = {"baz": {"id", "gamma"}}
+    assert load_required_columns_csv(required) == want
+    engine.load_required_columns(required)
+    assert engine.required_columns == want
+    seed_cerner(engine, spark)
+    # the required filter drops rows with a NULL id (none) and skips
+    # gamma, which the target table does not have
+    out_df = engine.run(load_rules_dir(rules), apply_required_filter=True)["baz"]
+    assert sorted(r.id for r in out_df.collect()) == [1, 2, 3]

@@ -200,7 +200,7 @@ def test_stream_hll_registers_prefix_equals_batch(spark, tmp_path):
 
 
 # ---------------------------------------------------- running extreme
-def test_running_extreme_matches_window_both_paths(spark):
+def test_running_extreme_matches_window_both_paths(spark, scan_path):
     from omop_etl_spark.operators.rank import running_extreme
 
     rng = random.Random(5)
@@ -211,50 +211,51 @@ def test_running_extreme_matches_window_both_paths(spark):
         want_excl.append((k, mn))
         mn = v if mn is None else min(mn, v)
         want_incl.append((k, mn))
-    for npart in (None, 7):
-        got_i = {
-            (r["k"], r["run_min"])
-            for r in running_extreme(
-                df, [F.col("k").asc()], "v", num_partitions=npart
-            ).collect()
-        }
-        got_e = {
-            (r["k"], r["run_min"])
-            for r in running_extreme(
-                df, [F.col("k").asc()], "v", inclusive=False, num_partitions=npart
-            ).collect()
-        }
-        assert got_i == set(want_incl), f"inclusive npart={npart}"
-        assert got_e == set(want_excl), f"exclusive npart={npart}"
+    for path, npart in (("window", 4), ("range", 7)):
+        with scan_path(path, npart):
+            got_i = {
+                (r["k"], r["run_min"])
+                for r in running_extreme(df, [F.col("k").asc()], "v").collect()
+            }
+            got_e = {
+                (r["k"], r["run_min"])
+                for r in running_extreme(
+                    df, [F.col("k").asc()], "v", inclusive=False
+                ).collect()
+            }
+        assert got_i == set(want_incl), f"inclusive {path}"
+        assert got_e == set(want_excl), f"exclusive {path}"
 
 
-def test_running_extreme_max_and_validation(spark):
+def test_running_extreme_max_and_validation(spark, scan_path):
     from omop_etl_spark.operators.rank import running_extreme
 
     df = spark.createDataFrame([(1, 5), (2, 3), (3, 9)], "k long, v long")
-    got = {
-        (r["k"], r["rmax"])
-        for r in running_extreme(
-            df, [F.col("k").asc()], "v", out_col="rmax", agg="max", num_partitions=2
-        ).collect()
-    }
+    with scan_path("range", 2):
+        got = {
+            (r["k"], r["rmax"])
+            for r in running_extreme(
+                df, [F.col("k").asc()], "v", out_col="rmax", agg="max"
+            ).collect()
+        }
     assert got == {(1, 5), (2, 5), (3, 9)}
     with pytest.raises(ValueError):
         running_extreme(df, ["k"], "v", agg="avg")
 
 
 # ------------------------------------------------------------ skyline
-def test_skyline_equals_dominance_bruteforce(spark):
+def test_skyline_equals_dominance_bruteforce(spark, scan_path):
     from omop_etl_spark.operators.rank import running_extreme
 
     rng = random.Random(11)
     pts = list({(rng.randint(0, 40), rng.randint(0, 40)) for _ in range(300)})
     df = spark.createDataFrame(pts, "x long, y long")
-    sl = running_extreme(
-        df, [F.col("x").asc(), F.col("y").asc()], "y", out_col="pm",
-        inclusive=False, num_partitions=5,
-    ).filter(F.col("pm").isNull() | (F.col("pm") > F.col("y")))
-    got = {(r["x"], r["y"]) for r in sl.collect()}
+    with scan_path("range", 5):
+        sl = running_extreme(
+            df, [F.col("x").asc(), F.col("y").asc()], "y", out_col="pm",
+            inclusive=False,
+        ).filter(F.col("pm").isNull() | (F.col("pm") > F.col("y")))
+        got = {(r["x"], r["y"]) for r in sl.collect()}
     want = {
         (x, y)
         for x, y in pts

@@ -420,8 +420,10 @@ def _children(n):
 def _is_row_bounding(n):
     """Nodes that provably collapse their input to a bounded row count:
     limits, scalar aggregates, and per-partition-count aggregates
-    (grouping on spark_partition_id — the prefix-sum offset frames of
-    surrogate.py / sampling.py / rank.py, <= shuffle-partition rows)."""
+    (grouping on the range-partition id — the prefix-scan offset frames
+    of planner/surrogate._prefix_scan, <= shuffle-partition rows)."""
+    from omop_etl_spark.planner.surrogate import PARTITION_ID_COL
+
     name = n.nodeName()
     if name in ("GlobalLimit", "LocalLimit"):
         return True
@@ -430,7 +432,7 @@ def _is_row_bounding(n):
         if ge.isEmpty():
             return True
         gs = ge.toString()
-        if "_pid" in gs or "SPARK_PARTITION_ID" in gs.upper():
+        if PARTITION_ID_COL in gs or "SPARK_PARTITION_ID" in gs.upper():
             return True
     return False
 

@@ -117,9 +117,10 @@ def test_simhash_banding_property(spark, doc_texts):
     st.lists(st.integers(-1000, 1000), min_size=1, max_size=30),
     st.integers(1, 6),
 )
-def test_surrogate_ids_are_rank(spark, values, parts):
+def test_surrogate_ids_are_rank(spark, scan_path, values, parts):
     df = spark.createDataFrame([(v,) for v in values], "k int")
-    out = with_surrogate_id(df, ["k"], num_partitions=parts).collect()
+    with scan_path("range", parts):
+        out = with_surrogate_id(df, ["k"]).collect()
     assert sorted(r.id for r in out) == list(range(1, len(values) + 1))
     # id order must agree with key order (ties interchangeable)
     by_id = sorted(out, key=lambda r: r.id)

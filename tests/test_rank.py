@@ -13,6 +13,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from omop_etl_spark.operators.rank import ranked_running_sum
+from omop_etl_spark.planner import surrogate
 
 
 def _reference(rows, key=lambda r: (-r[1], r[0])):
@@ -33,24 +34,24 @@ def frame(spark):
     return rows, spark.createDataFrame(rows, "k long, v long")
 
 
-def test_distributed_matches_reference(spark, frame):
+def test_distributed_matches_reference(spark, frame, scan_path):
     rows, df = frame
-    got = (
-        ranked_running_sum(
-            df,
-            [F.col("v").desc(), F.col("k").asc()],
-            "v",
-            rank_col="r",
-            cum_col="c",
-            num_partitions=8,  # pins the distributed path
+    with scan_path("range", 8):
+        got = (
+            ranked_running_sum(
+                df,
+                [F.col("v").desc(), F.col("k").asc()],
+                "v",
+                rank_col="r",
+                cum_col="c",
+            )
+            .orderBy("r")
+            .collect()
         )
-        .orderBy("r")
-        .collect()
-    )
     assert [(x.k, x.v, x.r, x.c) for x in got] == _reference(rows)
 
 
-def test_distributed_matches_single_partition_window(spark, frame):
+def test_distributed_matches_single_partition_window(spark, frame, scan_path):
     _, df = frame
     w = Window.orderBy(F.col("v").asc(), F.col("k").desc())
     wf = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -60,41 +61,46 @@ def test_distributed_matches_single_partition_window(spark, frame):
         .orderBy("r")
         .collect()
     )
-    got = (
-        ranked_running_sum(
-            df,
-            [F.col("v").asc(), F.col("k").desc()],
-            "v",
-            rank_col="r",
-            cum_col="c",
-            num_partitions=8,
+    with scan_path("range", 8):
+        got = (
+            ranked_running_sum(
+                df,
+                [F.col("v").asc(), F.col("k").desc()],
+                "v",
+                rank_col="r",
+                cum_col="c",
+            )
+            .orderBy("r")
+            .collect()
         )
-        .orderBy("r")
-        .collect()
-    )
     assert [(x.k, x.v, x.r, x.c) for x in got] == [
         (x.k, x.v, x.r, x.c) for x in expected
     ]
 
 
-def test_distributed_path_has_no_global_window(spark, frame):
+def test_distributed_path_has_no_global_window(spark, frame, scan_path):
     """The distributed plan's only partition-less window input is the
-    per-partition totals frame (≤ num_partitions rows)."""
+    per-partition totals frame (≤ shuffle-partition-count rows)."""
     _, df = frame
-    out = ranked_running_sum(
-        df, [F.col("v").desc(), "k"], "v", num_partitions=8
-    )
+    with scan_path("range", 8):
+        out = ranked_running_sum(df, [F.col("v").desc(), "k"], "v")
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    # every Window node either partitions by the range-partition id or
-    # consumes the bounded totals aggregate
-    for line in plan.splitlines():
-        if "Window [" in line and "__rk_pid" not in line:
-            assert "__rk_cnt" in line or "__rk_sum" in line, line
+    windows = [line for line in plan.splitlines() if "Window [" in line]
+    # one window partitions by the range-partition id, the other orders
+    # the bounded per-partition totals by it
+    assert len(windows) == 2, plan
+    for line in windows:
+        assert surrogate.PARTITION_ID_COL in line, line
 
 
 def test_small_frame_gate_uses_plain_window(spark):
-    df = spark.createDataFrame([(1, 10), (2, 5)], "k long, v long")
+    # a VALUES relation carries a real size estimate (a frame built
+    # from a Python list estimates as huge and takes the range path)
+    df = spark.sql("SELECT * FROM VALUES (1L, 10L), (2L, 5L) AS t(k, v)")
+    assert surrogate.use_small_frame_path(df)
     out = ranked_running_sum(df, ["v"], "v")
-    assert "repartitionByRange" not in out._jdf.queryExecution().toString().lower()
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert surrogate.PARTITION_ID_COL not in plan, plan
+    assert "RepartitionByExpression" not in plan, plan
     rows = out.orderBy("rank").collect()
     assert [(r["rank"], r["cum_sum"]) for r in rows] == [(1, 5), (2, 15)]

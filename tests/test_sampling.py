@@ -101,13 +101,14 @@ def test_pack_sequences_bin_invariants(spark):
             assert end >= (b + 1) * budget
 
 
-def test_pack_sequences_distributed_path_matches_window_path(spark):
+def test_pack_sequences_distributed_path_matches_window_path(spark, scan_path):
     docs = _docs(spark, n=600)
-    small = pack_sequences(docs, cost_col="n_chars", budget=1000)
-    dist = pack_sequences(docs, cost_col="n_chars", budget=1000, num_partitions=5)
-    s = sorted((r["doc_id"], r["bin_id"]) for r in small.collect())
-    d = sorted((r["doc_id"], r["bin_id"]) for r in dist.collect())
-    assert s == d
+    got = {}
+    for path in ("window", "range"):
+        with scan_path(path, 5):
+            packed = pack_sequences(docs, cost_col="n_chars", budget=1000)
+            got[path] = sorted((r["doc_id"], r["bin_id"]) for r in packed.collect())
+    assert got["window"] == got["range"]
 
 
 def test_pack_sequences_oversized_row_gets_own_bin(spark):
@@ -179,18 +180,17 @@ def test_rank_filter_exact_cut_and_tiebreak(spark):
     assert {7, 17, 27, 37, 47} <= ids and 57 not in ids
 
 
-def test_rank_filter_distributed_path_matches_window_path(spark):
+def test_rank_filter_distributed_path_matches_window_path(spark, scan_path):
     from omop_etl_spark.operators.sampling import rank_filter
 
     rows = [(i, float((i * 37) % 101)) for i in range(500)]
     df = spark.createDataFrame(rows, "doc_id long, score double")
     order = [F.col("score").desc(), "doc_id"]
-    small = sorted(r["doc_id"] for r in rank_filter(df, order, 0.3).collect())
-    dist = sorted(
-        r["doc_id"]
-        for r in rank_filter(df, order, 0.3, num_partitions=7).collect()
-    )
-    assert small == dist and len(small) == 150
+    got = {}
+    for path in ("window", "range"):
+        with scan_path(path, 7):
+            got[path] = sorted(r["doc_id"] for r in rank_filter(df, order, 0.3).collect())
+    assert got["window"] == got["range"] and len(got["window"]) == 150
 
 
 def test_ntile_by_matches_global_ntile(spark):
