@@ -590,10 +590,6 @@ WHERE price_rank <= 3
 """
 
 
-# _q_agg_rollup (ROLLUP subtotals over lineitem, r10) RETIRED in r15
-# (VERDICT r14 #6, hold the registry at 216 while adding gates): its
-# grouping-sets/Expand/GROUPING() surface is a strict subset of the
-# still-registered agg_cube gate.
 def _q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # INTERSECT/EXCEPT as DataFrame operators (distinct set semantics)
     o = _source(spark, sf_dir, "orders")
@@ -2302,11 +2298,6 @@ FROM documents
 """
 
 
-# _q_multimodal_frames (fake_resizer + every-4th-frame fan-out, r11)
-# RETIRED in r15 (VERDICT r14 #4/#6): superseded as the resize gate by
-# _q_multimodal_real_resize below, which drives REAL pixels through
-# png_resizer; the frame-sampling fan-out keeps direct pytest coverage
-# (tests/test_streaming_multimodal.py::test_sample_frames_fanout).
 def _q_multimodal_real_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL bilinear resize, oracle-checked on PIXELS (VERDICT r14 #4):
     a deterministic synthetic 16x16 gray PNG per document — pixel(y,x)
@@ -3280,12 +3271,6 @@ ORDER BY count DESC, ngram ASC LIMIT 200
 """
 
 
-# _q_docs_curate (strip->exact-dedup->chunk composition, r11) RETIRED
-# in r15 to hold the registry at 216 while adding the third streaming
-# gate: every stage it composed keeps its own gate (docs_curate_full
-# for the pipeline composition incl. strip+dedup, docs_chunk /
-# docs_cdc_chunks for chunking), and pipelines.curate_corpus stays
-# pytest-covered.
 def _q_docs_curate_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPLETE curation pipeline (VERDICT r5 #5): token gate ->
     boilerplate strip -> decontaminate against a benchmark slice
@@ -3872,28 +3857,6 @@ WHERE o.o_orderdate >= TIMESTAMP '1997-01-01'
                 AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
 GROUP BY o_orderpriority
 """
-
-
-# _q_filter_revenue (TPC-H Q6 scan->pushed-filter->scalar aggregate,
-# r10) RETIRED in r16 (VERDICT r15 #2, hold the registry at 216 while
-# gating the three remaining streaming operators): its surface is a
-# strict subset of the still-registered agg_pricing_summary gate (same
-# pushed-filter lineitem scan, plus groupBy + multi-aggregate), and
-# filter pushdown is asserted plan-wide by tests/test_plan_quality.py.
-
-
-# _q_returned_items (TPC-H Q10 join->groupBy->top-20, r10) RETIRED in
-# r16 (VERDICT r15 #2): its l⋈o⋈c⋈broadcast(nation) -> grouped-sum ->
-# TakeOrderedAndProject shape is covered by the still-registered
-# agg_shipping_priority (Q3: l⋈o⋈c grouped-sum top-10) and
-# agg_top_customers (customer-grain top-k) gates.
-
-
-# _q_promo_revenue_share (TPC-H Q14 join + conditional-share, r10)
-# RETIRED in r16 (VERDICT r15 #2): its join + CASE-conditional share
-# surface is a subset of the still-registered agg_market_share (Q8:
-# multi-join conditional share) and agg_shipped_last (Q12: two-way
-# conditional sums) gates.
 
 
 # ---------------------------------------------------------------------------

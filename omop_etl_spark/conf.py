@@ -7,6 +7,7 @@ via ``SparkSession.builder.config`` as usual.
 
 from __future__ import annotations
 
+from pathlib import Path
 from typing import TYPE_CHECKING
 
 if TYPE_CHECKING:  # pragma: no cover - typing only
@@ -247,6 +248,10 @@ def recommended_conf(cores: int = 32) -> dict[str, str]:
       ``might_contain`` into the fact scan — rows that cannot match
       never reach the shuffle. Inert at bench scale by design;
       plan-asserted in ``tests/test_plan_quality.py``.
+    * ``executorEnv.PYTHONPATH`` is the directory that holds this
+      package, so Python workers can import it whatever the driver's
+      working directory (a pandas UDF pickles the package's functions
+      by reference).
     """
     return {
         "spark.sql.adaptive.enabled": "true",
@@ -258,6 +263,7 @@ def recommended_conf(cores: int = 32) -> dict[str, str]:
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         "spark.sql.parquet.compression.codec": "snappy",
         "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+        "spark.executorEnv.PYTHONPATH": str(Path(__file__).resolve().parents[1]),
     }
 
 

@@ -17,10 +17,8 @@ __all__ = [
     "bpe_token_count",
     "token_signature",
     "punct_ratio",
-    "stopword_ratio",
     "mean_token_length",
     "quality_score",
-    "lang_scores",
     "pii_scrub",
     "pii_counts",
     "STOPWORDS",
@@ -80,14 +78,6 @@ def punct_ratio(text: Column | str) -> Column:
     return F.when(F.length(c) > 0, F.length(stripped) / F.length(c)).otherwise(
         F.lit(0.0)
     )
-
-
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    """Fraction of tokens that are stopwords of ``lang``."""
-    toks = tokens(text)
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
-    return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
 
 
 def mean_token_length(text: Column | str) -> Column:
@@ -161,18 +151,3 @@ def fingerprint(text: Column | str) -> Column:
     """Deterministic document fingerprint: md5 of the order-insensitive
     token signature — identical in any engine with md5."""
     return F.md5(token_signature(text))
-
-
-def lang_scores(text: Column | str) -> Column:
-    """Map of language → stopword-hit count; argmax is the language-ID
-    heuristic (n-gram-free variant suited to whitespace languages)."""
-    def hit(ws: tuple[str, ...]):
-        sw = F.array(*[F.lit(w) for w in ws])
-        return lambda t: F.array_contains(sw, F.lower(t))
-
-    return F.map_from_arrays(
-        F.array(*[F.lit(k) for k in STOPWORDS]),
-        F.array(
-            *[F.size(F.filter(tokens(text), hit(ws))) for ws in STOPWORDS.values()]
-        ),
-    )

@@ -19,7 +19,6 @@ __all__ = [
     "token_shingles",
     "jaccard_pairs",
     "containment_pairs",
-    "minhash_signature",
     "minhash_lsh_pairs",
     "minhash_lsh_join",
     "simhash_text",
@@ -367,7 +366,6 @@ def jaccard_pairs(
     return _verify_jaccard(df, cand, id_col, text_col, n, threshold)
 
 
-
 def _containment_candidates(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -527,39 +525,6 @@ def _affine_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signature(
-    shingles: Column, num_hashes: int = 16, seed: int = 42
-) -> Column:
-    """MinHash signature (array of ``num_hashes`` minima) over a shingle
-    array column.
-
-    Column-form convenience for inline expressions. Caveat: after
-    Catalyst collapses projections, the md5 base-hash subtree is
-    re-inlined into every per-hash fold, so corpus-scale signature
-    builds should use the relational explode + min-aggregate form
-    inside :func:`minhash_lsh_pairs` — note that path now uses a
-    JVM-native ``xxhash64``-derived base hash, so its signature VALUES
-    differ from this md5-based form (same family, same banding
-    behavior, not interchangeable bit-for-bit). Fully deterministic
-    (seeded params, md5 base hash).
-    """
-    base = F.transform(
-        shingles, lambda g: _md5_hash(g, 0).bitwiseAND(F.lit(_MERSENNE_P))
-    )
-
-    def rehash(a: int, b: int):
-        # closure factory: a default-arg lambda would change the arity
-        # PySpark infers for higher-order functions
-        return lambda h: (h * a + b) % _MERSENNE_P
-
-    return F.array(
-        *[
-            F.array_min(F.transform(base, rehash(a, b)))
-            for a, b in _affine_params(num_hashes, seed)
-        ]
-    )
-
-
 def _banded_signatures(
     df: DataFrame,
     id_col: str,
@@ -574,8 +539,8 @@ def _banded_signatures(
     rows are distinct by construction).
 
     Relational build: explode shingles, base-hash each ONCE, then one
-    map-side-combined aggregate with ``num_hashes`` min() columns. (The
-    Column-form :func:`minhash_signature` inlines the md5 subtree into
+    map-side-combined aggregate with ``num_hashes`` min() columns. (A
+    Column-form signature would re-inline the base-hash subtree into
     every per-hash fold after Catalyst collapses projections — the same
     num_hashes-fold blowup simhash_signatures avoids.)
 

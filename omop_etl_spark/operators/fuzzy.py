@@ -22,48 +22,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["fuzzy_self_match", "fuzzy_join"]
-
-
-def fuzzy_join(
-    left: DataFrame,
-    right: DataFrame,
-    text_col: str,
-    block_on: Sequence[str] | None = None,
-    max_distance: int = 2,
-    suffixes: tuple[str, str] = ("_a", "_b"),
-) -> DataFrame:
-    """Inner join rows whose ``text_col`` values are within
-    ``max_distance`` Levenshtein edits, candidate-limited to equal
-    blocking keys.
-
-    ``block_on`` entries are column names present on BOTH sides
-    (pre-compute derived blocking keys — a prefix, a soundex, a length
-    band — as columns first). Omitting it would be a cross join and is
-    refused; pass ``block_on=[]`` explicitly to force a full compare
-    on tiny inputs."""
-    if block_on is None:
-        raise ValueError(
-            "fuzzy_join without blocking keys is a cross join; pass "
-            "block_on=[...] (or [] explicitly for tiny inputs)"
-        )
-    a, b = left.alias("a"), right.alias("b")
-    la, lb = suffixes
-    cond = F.lit(True)
-    for c in block_on:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    ta, tb = F.col(f"a.{text_col}"), F.col(f"b.{text_col}")
-    cond = (
-        cond
-        & (F.abs(F.length(ta) - F.length(tb)) <= max_distance)
-        & (F.levenshtein(ta, tb) <= max_distance)
-    )
-    out = a.join(b, cond, "inner")
-    return out.select(
-        *[F.col(f"a.{c}").alias(f"{c}{la}") for c in left.columns],
-        *[F.col(f"b.{c}").alias(f"{c}{lb}") for c in right.columns],
-        F.levenshtein(ta, tb).alias("edit_distance"),
-    )
+__all__ = ["fuzzy_self_match"]
 
 
 def fuzzy_self_match(

@@ -26,7 +26,6 @@ from ..conf import checkpoint as _checkpoint
 from .util import collect_bounded, literal_frame, sql_div, sql_fit
 
 __all__ = [
-    "out_degrees",
     "pagerank",
     "count_triangles",
     "bfs_hops",
@@ -35,13 +34,6 @@ __all__ = [
     "markov_stationary",
     "cooccurrence_topk_similar",
 ]
-
-
-def out_degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Out-degree per source node: one map-side-combined aggregate."""
-    return edges.groupBy(F.col(src).alias("node")).agg(
-        F.count(F.lit(1)).alias("out_degree")
-    )
 
 
 def pagerank(

@@ -21,7 +21,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["zorder_key", "zorder_repartition"]
+__all__ = ["zorder_key"]
 
 
 def _interleave(cols: list[Column], bits: int) -> Column:
@@ -96,21 +96,3 @@ def zorder_key(
         .withColumn(out_col, _interleave(normed, bits))
         .drop(*drop)
     )
-
-
-def zorder_repartition(
-    df: DataFrame,
-    cols: Sequence[str],
-    num_partitions: int,
-    bits: int = 16,
-) -> DataFrame:
-    """Range-partition by the Morton key (then drop it): the write-side
-    half of ``OPTIMIZE ZORDER BY``. Each output file covers a compact
-    Z-curve segment, so its parquet footer min/max on every ``cols``
-    member is tight and scans with predicates on any of them prune.
-
-    One range exchange (sampling pass + shuffle) — the same cost as any
-    global sort, which a clustering rewrite fundamentally is.
-    """
-    keyed = zorder_key(df, cols, bits=bits, out_col="__zkey")
-    return keyed.repartitionByRange(num_partitions, "__zkey").drop("__zkey")

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..conf import checkpoint as _checkpoint
 
-__all__ = ["DQRule", "dq_profile", "load_dq_rules"]
+__all__ = ["DQRule", "dq_profile"]
 
 
 @dataclass(frozen=True)
@@ -195,65 +195,3 @@ def dq_profile(tables: Mapping[str, DataFrame], rules: Sequence[DQRule]) -> Data
         F.col("n_violations").cast("bigint").alias("n_violations"),
         (F.col("n_violations") == 0).cast("int").alias("passed"),
     )
-
-
-def load_dq_rules(yaml_text: str) -> list[DQRule]:
-    """Parse declarative DQ rules from YAML — the same rules-as-config
-    posture as the engine's ETL surface (the reference ships its
-    validation rules in workbooks/YAML, not code).
-
-    Schema::
-
-        rules:
-          - name: orders_status_domain
-            table: orders
-            kind: in_set
-            column: o_orderstatus
-            values: [O, F, P]
-          - name: lineitem_order_fk
-            table: lineitem
-            kind: fk
-            column: l_orderkey
-            ref_table: orders
-            ref_column: o_orderkey
-          - name: orders_price_range
-            table: orders
-            kind: range
-            column: o_totalprice
-            lo: 0.0
-
-    Unknown keys raise (typos must not silently weaken a check).
-    """
-    import yaml
-
-    doc = yaml.safe_load(yaml_text)
-    if not isinstance(doc, dict) or "rules" not in doc:
-        raise ValueError("DQ YAML must be a mapping with a 'rules' list")
-    known = {
-        "name", "table", "kind", "column", "values",
-        "lo", "hi", "ref_table", "ref_column",
-    }
-    out: list[DQRule] = []
-    for i, r in enumerate(doc["rules"]):
-        extra = set(r) - known
-        if extra:
-            raise ValueError(f"rule #{i}: unknown keys {sorted(extra)}")
-        for req in ("name", "table", "kind", "column"):
-            if req not in r:
-                raise ValueError(f"rule #{i}: missing required key {req!r}")
-        out.append(
-            DQRule(
-                name=r["name"],
-                table=r["table"],
-                kind=r["kind"],
-                col=r["column"],
-                values=tuple(r.get("values", ())),
-                lo=r.get("lo"),
-                hi=r.get("hi"),
-                ref_table=r.get("ref_table", ""),
-                ref_col=r.get("ref_column", ""),
-            )
-        )
-    if not out:
-        raise ValueError("DQ YAML contains no rules")
-    return out

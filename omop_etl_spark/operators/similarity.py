@@ -6,17 +6,16 @@ Two tiers, both DataFrame-native:
   set, score every (query, corpus) pair with a JVM-side fold (no Python
   UDF), keep the per-query top k with a window. Scales linearly in the
   corpus (the shuffle carries only Q×N scored ids, not vectors).
-* :func:`simhash_buckets` / :func:`lsh_topk` — approximate scale path:
-  sign-random-projection (SimHash) buckets computed from a
-  deterministic seed; candidates only join within a bucket, turning the
-  O(Q·N) scan into bucket-local work. Recall is tunable via
-  ``num_bits``/``num_tables``.
+* :func:`lsh_topk` — approximate scale path: sign-random-projection
+  (SimHash) buckets computed from a deterministic seed; candidates only
+  join within a bucket, turning the O(Q·N) scan into bucket-local
+  work. Recall is tunable via ``num_bits``/``num_probes``/``num_tables``.
 
 Design for 100 TB: vectors never leave their partition for scoring
 (broadcast joins); the only wide shuffle is the final per-query top-k,
 which is id+score rows. For billion-scale corpora, IVF-style coarse
-quantization can reuse :func:`simhash_buckets` with a learned
-partitioner; out of scope here.
+quantization (:func:`ivf_topk`) replaces the random hyperplanes with
+learned k-means centroids.
 """
 
 from __future__ import annotations
@@ -34,8 +33,6 @@ __all__ = [
     "rrf_fuse",
     "cosine_pairs",
     "scoped_cosine_pairs",
-    "simhash_buckets",
-    "simhash_probe_buckets",
     "lsh_topk",
     "ivf_assign",
     "ivf_topk_probe",
@@ -354,7 +351,7 @@ def cosine_pairs(
     paths). The default at-scale router for semantic dedup is
     :func:`scoped_cosine_pairs` (SemDeDup: k-means scoping divides the
     quadratic by k); for recall-tunable sub-quadratic candidates use
-    :func:`simhash_buckets`. Do NOT point this at an unbounded corpus.
+    :func:`lsh_topk`. Do NOT point this at an unbounded corpus.
 
     The contract is ENFORCED, not just documented: the input is
     counted up front and anything over ``max_rows`` raises
@@ -372,8 +369,8 @@ def cosine_pairs(
     numpy matmul — Arrow-batched ``applyInPandas``, never a per-row
     Python UDF. Memory per task is two blocks (tune B so a block fits);
     shuffle volume is B× the narrow (id, vec) projection. For
-    recall-tunable sub-quadratic candidates, pre-bucket with
-    :func:`simhash_buckets` instead.
+    recall-tunable sub-quadratic candidates, use :func:`lsh_topk`
+    instead.
     """
     if max_rows is not None:
         # bound check on the PRE-spread source, capped at max_rows + 1
@@ -385,7 +382,7 @@ def cosine_pairs(
             raise ValueError(
                 f"cosine_pairs is the exact O(N^2) all-pairs baseline and "
                 f"got more than max_rows={max_rows} rows. Use "
-                f"scoped_cosine_pairs (SemDeDup) or simhash_buckets at "
+                f"scoped_cosine_pairs (SemDeDup) or lsh_topk at "
                 f"scale, or pass an explicit larger max_rows / "
                 f"max_rows=None to opt in to the quadratic join."
             )
@@ -677,94 +674,6 @@ def scoped_cosine_pairs(
     return out.select("id_a", "id_b", F.round("__s", round_digits).alias("score"))
 
 
-def simhash_buckets(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    num_bits: int = 16,
-    dim: int = 64,
-    seed: int = 42,
-    out_col: str = "bucket",
-) -> DataFrame:
-    """Sign-random-projection bucket id per vector.
-
-    Hyperplanes are generated on the driver from ``seed`` (numpy RNG)
-    and embedded as literals — identical on every executor and across
-    runs. The bucket is the integer formed by the sign bits of the
-    ``num_bits`` projections.
-    """
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((num_bits, dim))
-    projs = _projections(F.col(vec_col), planes)
-    return df.withColumn(out_col, _sign_bucket(projs).cast("bigint"))
-
-
-def _projections(vec: Column, planes) -> list[Column]:
-    """One JVM-side dot product per hyperplane (literal coefficients)."""
-    v = _as_double(vec)
-    return [
-        F.aggregate(
-            F.zip_with(
-                v, F.array(*[F.lit(float(x)) for x in row]), lambda a, b: a * b
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for row in planes
-    ]
-
-
-def _sign_bucket(projs: list[Column]) -> Column:
-    bucket = F.lit(0)
-    for p in projs:
-        bucket = bucket * 2 + F.when(p >= 0, F.lit(1)).otherwise(F.lit(0))
-    return bucket
-
-
-def simhash_probe_buckets(
-    vec: Column | str,
-    num_bits: int = 16,
-    dim: int = 64,
-    seed: int = 42,
-    num_probes: int = 4,
-) -> Column:
-    """Multi-probe bucket list (``array<bigint>``) for a query vector.
-
-    Multi-probe LSH (Lv et al., VLDB'07): beyond the vector's own
-    sign-bucket, also probe the buckets obtained by flipping the
-    ``num_probes - 1`` bits with the SMALLEST projection margin — the
-    hyperplanes the vector sits closest to, i.e. the buckets its true
-    neighbors most likely fell into. Raises recall (and rescues queries
-    whose home bucket is sparse) without more hash tables.
-
-    Meant for the small (query) side: the projection fold is re-inlined
-    into every probe expression by Catalyst, so cost is
-    ``num_probes × num_bits`` folds per row — fine for queries, wasteful
-    for a corpus (which needs only its single home bucket)."""
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((num_bits, dim))
-    c = F.col(vec) if isinstance(vec, str) else vec
-    projs = _projections(c, planes)
-    base = _sign_bucket(projs).cast("bigint")
-    margins = F.array_sort(
-        F.array(
-            *[
-                F.struct(F.abs(p).alias("m"), F.lit(i).alias("i"))
-                for i, p in enumerate(projs)
-            ]
-        )
-    )
-    weights = F.array(*[F.lit(1 << (num_bits - 1 - i)) for i in range(num_bits)])
-    flips = F.transform(
-        F.slice(margins, 1, max(num_probes - 1, 0)),
-        lambda s: base.bitwiseXOR(F.element_at(weights, s["i"] + 1).cast("bigint")),
-    )
-    return F.concat(F.array(base), flips)
-
-
 def _ivf_centroids(num_centroids: int, dim: int, seed: int):
     """Seeded unit-norm centroid matrix (dim × C). Drawn on the driver
     and closed over into the assignment UDF — deterministic across
@@ -933,9 +842,9 @@ def lsh_topk(
     SimHash buckets, then exact cosine rerank. Same output shape as
     :func:`cosine_topk`; recall < 1 by construction. Two recall levers:
 
-    * ``num_probes`` — multi-probe (:func:`simhash_probe_buckets`):
-      each query also checks the buckets reached by flipping its
-      smallest-margin bits (capped at ``num_bits + 1`` probes), so
+    * ``num_probes`` — multi-probe: each query also checks the buckets
+      reached by flipping its smallest-margin bits (capped at
+      ``num_bits + 1`` probes), so
       queries in sparse home buckets still draw candidates from
       adjacent buckets instead of returning fewer than ``k`` rows.
     * ``num_tables`` — independent hash tables from derived seeds;

@@ -102,15 +102,3 @@ def two_stage_agg(
         .drop("__salt")
     )
     return staged.groupBy(*keys).agg(*final)
-
-
-def skew_profile(df: DataFrame, keys: Sequence[str], top: int = 10) -> DataFrame:
-    """Diagnostic: per-key row counts of the ``top`` heaviest keys plus
-    their share of the table — run before choosing a strategy."""
-    total = df.count()
-    counts = df.groupBy(*list(keys)).agg(F.count(F.lit(1)).alias("n_rows"))
-    return (
-        counts.orderBy(F.desc("n_rows"))
-        .limit(top)
-        .withColumn("share", F.round(F.col("n_rows") / F.lit(total), 4))
-    )

@@ -43,10 +43,6 @@ def load_rules_dir(path: str | Path) -> list[TableSpec | DependencySpec]:
     return topo_sort(specs)
 
 
-def _spec_key(spec: TableSpec | DependencySpec) -> str | None:
-    return spec.name
-
-
 def topo_sort(
     specs: Iterable[TableSpec | DependencySpec],
 ) -> list[TableSpec | DependencySpec]:

@@ -1,18 +1,10 @@
-from .docs import flag_stream_neardups, read_docs_stream
 from .events import (
-    EVENTS_SCHEMA,
-    dq_monitor_stream,
-    enrich_stream,
-    hourly_counts,
-    read_events_stream,
     read_table_stream,
     sessionize,
     sessionize_batch,
-    sliding_counts,
     stream_burst_dedup,
     stream_cdc_state,
     stream_dedup,
-    stream_interval_join,
     stream_interval_union,
     stream_kmv_distinct,
     stream_latest_state,
@@ -20,21 +12,12 @@ from .events import (
 )
 
 __all__ = [
-    "EVENTS_SCHEMA",
-    "dq_monitor_stream",
-    "enrich_stream",
-    "flag_stream_neardups",
-    "hourly_counts",
-    "read_docs_stream",
-    "read_events_stream",
     "read_table_stream",
     "sessionize",
     "sessionize_batch",
-    "sliding_counts",
     "stream_burst_dedup",
     "stream_cdc_state",
     "stream_dedup",
-    "stream_interval_join",
     "stream_interval_union",
     "stream_kmv_distinct",
     "stream_latest_state",

@@ -4,11 +4,9 @@ The reference has no streaming surface (SURVEY §2.1 — verified); this
 module is the green-field Spark-native extension for the ``events``
 table shape (``event_id, ts, user_id, event_type, value, props``):
 
-* :func:`read_events_stream` — file-source stream over parquet with the
-  nanosecond-timestamp shim shared with the batch reader.
-* :func:`hourly_counts` — watermarked tumbling-window aggregation whose
-  *semantics match the batch* ``events_hourly`` gate query, so a
-  stream's final result can be verified against the batch oracle.
+* :func:`read_table_stream` — file-source stream over any parquet
+  table, with the nanosecond-timestamp shim shared with the batch
+  reader.
 * :func:`sessionize` — session windows per user (gap-based), the
   canonical stateful-streaming pattern.
 
@@ -25,47 +23,22 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StructType
 
-from ..sources.reader import EVENTS_NS_COLUMNS, enable_nanos_compat, normalize_timestamps
+from ..sources.reader import enable_nanos_compat
 
 __all__ = [
-    "EVENTS_SCHEMA",
     "read_table_stream",
-    "read_events_stream",
-    "hourly_counts",
-    "sliding_counts",
     "sessionize",
     "sessionize_batch",
     "stream_dedup",
-    "enrich_stream",
-    "stream_interval_join",
     "stream_kmv_distinct",
     "stream_interval_union",
     "stream_logq_buckets",
-    "dq_monitor_stream",
     "stream_latest_state",
     "stream_cdc_state",
     "stream_burst_dedup",
 ]
-
-#: schema of the raw parquet with ns timestamps surfaced as long
-EVENTS_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", LongType()),  # epoch nanos (nanosAsLong)
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
 
 
 def read_table_stream(
@@ -80,8 +53,8 @@ def read_table_stream(
     (``spark.table(name).schema`` starts no job); without one it is
     taken from a batch read of the same path, whose schema inference
     runs one Spark job over the parquet footers. Table-specific column
-    normalization stays with the callers — :func:`read_events_stream`
-    layers the ``ts`` timestamp-encoding shim on top of this.
+    normalization stays with the callers — the gates layer
+    ``sources.normalize_timestamps`` on top of this.
     """
     enable_nanos_compat(spark)
     if schema is None:
@@ -92,86 +65,6 @@ def read_table_stream(
         reader = reader.option("pathGlobFilter", p.name)
         path = str(p.parent)
     return reader.load(path)
-
-
-def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
-    """File-source stream over an events parquet path
-    (:func:`read_table_stream`) with the ``ts`` column normalized by
-    :func:`~omop_etl_spark.sources.reader.normalize_timestamps`, the
-    function every batch reader uses — rather than hard-code one
-    timestamp encoding (the round-4 outage: the testdata moved from
-    ``timestamp[ns]`` to ``timestamp[us]``-no-tz), the shim adapts to
-    the footer schema.
-    """
-    return normalize_timestamps(
-        read_table_stream(spark, path), EVENTS_NS_COLUMNS["events"]
-    )
-
-
-def hourly_counts(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """Tumbling 1-hour windows per event_type: count, distinct-ish user
-    count and exact value cents — late data beyond ``watermark`` is
-    dropped, bounding state.
-
-    ``approx_count_distinct`` replaces the batch ``countDistinct``
-    (exact distinct needs unbounded per-window state in a stream — the
-    documented batch/stream delta).
-    """
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.approx_count_distinct("user_id").alias("n_users_approx"),
-            F.sum(F.floor(F.col("value") * 100).cast("bigint")).alias("value_cents"),
-        )
-        .select(
-            F.col("win.start").cast("string").alias("hour_ts"),
-            "event_type",
-            "n_events",
-            "n_users_approx",
-            "value_cents",
-        )
-    )
-
-
-def sliding_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """SLIDING event-time windows per event_type — the overlapping-
-    window shape tumbling ``hourly_counts`` can't express (each event
-    lands in ``window/slide`` windows; a 1h/15m slide gives the
-    4x-overlapped rolling rate every alerting dashboard wants).
-
-    Structured Streaming's ``window(ts, windowDuration, slide)``
-    assigns the overlapping windows MAP-SIDE (no self-join, no
-    re-scan per offset); watermarking bounds state exactly as in the
-    tumbling case — per-key state is ``window/slide`` concurrent
-    windows instead of 1, still constant.  The batch twin is the
-    same ``F.window`` expression on a static frame
-    (tests/test_streaming_multimodal.py pins stream == batch).
-    """
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(
-            F.window("ts", window, slide).alias("win"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.floor(F.col("value") * 100).cast("bigint")).alias("value_cents"),
-        )
-        .select(
-            F.col("win.start").cast("string").alias("win_start"),
-            "event_type",
-            "n_events",
-            "value_cents",
-        )
-    )
 
 
 def sessionize(
@@ -261,65 +154,6 @@ def stream_dedup(
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
-
-
-def enrich_stream(
-    stream: DataFrame,
-    dim: DataFrame,
-    on: list[str],
-    how: str = "left",
-    broadcast: bool = True,
-) -> DataFrame:
-    """Stream-static enrichment join: every micro-batch equi-joins the
-    (re-read) static dimension. With ``broadcast=True`` the dimension
-    ships to executors once per micro-batch — no stream-side shuffle,
-    which is the only stream-static plan that holds up when the stream
-    side is wide and hot. Stateless: no watermark required."""
-    d = F.broadcast(dim) if broadcast else dim
-    return stream.join(d, on, how)
-
-
-def stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[tuple[str, str]],
-    left_ts: str,
-    right_ts: str,
-    lower: str = "0 seconds",
-    upper: str = "30 minutes",
-    watermark: str = "1 hour",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream join bounded by an event-time interval: match
-    right rows with ``right_ts ∈ [left_ts - lower, left_ts + upper]``
-    and equal ``on`` keys. Both sides are watermarked, and the
-    interval bound is what lets Spark expire join state — an unbounded
-    stream-stream join would buffer both streams forever. State per
-    key ≈ rows inside ``watermark + interval`` only.
-
-    ``how`` may be ``"inner"`` (default), ``"left_outer"``, or
-    ``"full_outer"``: with an outer side, a left row with NO interval
-    match emits null-padded ONCE the watermark has passed its match
-    window — i.e. the row is provably unmatchable, the only moment a
-    stream can say "no partner will ever arrive". Until then it sits
-    in state; expect outer results one watermark-advance later than
-    inner results (asserted in tests/test_incremental_replay.py).
-
-    Column names must be disjoint between the two inputs (rename
-    before calling); the equi keys are ``(left_col, right_col)``
-    pairs. This is the streaming twin of
-    :func:`...operators.temporal.range_join`."""
-    if how not in ("inner", "left_outer", "full_outer"):
-        raise ValueError(f"unsupported join type: {how}")
-    l_wm = left.withWatermark(left_ts, watermark)
-    r_wm = right.withWatermark(right_ts, watermark)
-    cond = (
-        (F.col(right_ts) >= F.col(left_ts) - F.expr(f"INTERVAL {lower}"))
-        & (F.col(right_ts) <= F.col(left_ts) + F.expr(f"INTERVAL {upper}"))
-    )
-    for lc, rc in on:
-        cond = cond & (F.col(lc) == F.col(rc))
-    return l_wm.join(r_wm, cond, how)
 
 
 def sessionize_batch(
@@ -549,39 +383,6 @@ def stream_logq_buckets(
     from ..operators.sketches import logq_buckets
 
     return logq_buckets(events, [key_col], value_col, m=m)
-
-
-def dq_monitor_stream(
-    stream: DataFrame,
-    rules,
-    table_name: str,
-    sink,
-):
-    """Per-micro-batch data-quality monitoring: each batch runs the
-    same declarative rule set as the batch engine
-    (``operators.quality.dq_profile``) and hands the rules-sized report
-    (plus ``batch_id``) to ``sink(report_df, batch_id)`` — alerting,
-    metrics export, or a quarantine decision.
-
-    ``foreachBatch`` is the right integration point: the report frame
-    is O(rules) rows per batch regardless of batch size, all row-local
-    rules fold into one conditional-aggregate pass over the batch, and
-    the sink callable runs on the driver where it can act (abort the
-    query, page someone) — exactly what a declarative streaming
-    aggregation could not do.
-
-    Returns the ``DataStreamWriter`` (caller adds trigger/start), so
-    checkpointing and restart semantics stay in the caller's hands.
-    """
-    from ..operators.quality import dq_profile
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        report = dq_profile({table_name: batch_df}, rules).withColumn(
-            "batch_id", F.lit(batch_id).cast("bigint")
-        )
-        sink(report, batch_id)
-
-    return stream.writeStream.foreachBatch(process)
 
 
 def stream_latest_state(

@@ -433,3 +433,76 @@ def test_external_lookup_from_csv(engine, spark, tmp_path):
     engine.register_csv("external.vocabulary", csv, "id int, name string")
     out = engine.run([load_rules_text(EXTERNAL_RULES)])["baz"]
     assert rows(out, "id") == [(1, "vocab1", 4), (2, "vocab2", 5), (3, "vocab3", 9)]
+
+
+# --- natural-key semantics -------------------------------------------------
+#
+# The mapping phase gives every key-source row its own surrogate id
+# (the reference's INSERT … SELECT into a serial), and a column rule is
+# an UPDATE joined on the natural key. These pin what follows from that
+# for keys the reference never deduplicates or null-checks.
+
+KEY_RULES = """
+name: baz
+primary_key:
+  name: id
+  sources:
+    foo_pk:
+      table: foo
+      columns:
+        id: integer
+columns:
+  - name: alpha
+    tables: [foo]
+    expression: foo.alpha
+"""
+
+
+def test_duplicate_natural_key_gets_two_ids_and_both_get_the_value(engine, spark):
+    engine.register_df(
+        "cerner.foo",
+        spark.createDataFrame([(1, "a"), (1, "a"), (2, "c")], "id int, alpha string"),
+    )
+    out = engine.run([load_rules_text(KEY_RULES)])["baz"]
+    assert rows(spark.table("mapping.baz"), "id") == [(1, 1), (2, 1), (3, 2)]
+    assert rows(out, "id") == [(1, "a"), (2, "a"), (3, "c")]
+
+
+def test_null_natural_key_gets_an_id_and_never_matches_a_rule(engine, spark):
+    engine.register_df(
+        "cerner.foo",
+        spark.createDataFrame([(None, "z"), (1, "a")], "id int, alpha string"),
+    )
+    out = engine.run([load_rules_text(KEY_RULES)])["baz"]
+    assert rows(spark.table("mapping.baz"), "id") == [(1, None), (2, 1)]
+    # `foo.id = <key>` is never true for a NULL key: the rule leaves it NULL
+    assert rows(out, "id") == [(1, None), (2, "a")]
+
+
+def test_key_matched_by_two_source_rows_takes_the_min(engine, spark):
+    """Postgres's ``UPDATE … FROM`` takes an arbitrary one of several
+    matching rows; the engine resolves that deterministically with
+    ``min``. A known divergence from the reference, pinned here."""
+    engine.register_df("cerner.foo", spark.createDataFrame([(1,), (2,)], "id int"))
+    engine.register_df(
+        "cerner.bar",
+        spark.createDataFrame([(1, 10), (1, 5), (2, 7)], "id int, v int"),
+    )
+    rules = """
+name: baz
+primary_key:
+  name: id
+  sources:
+    foo_pk:
+      table: foo
+      columns:
+        id: integer
+columns:
+  - name: v
+    tables: [foo, bar]
+    constraints:
+      - foo.id = bar.id
+    expression: bar.v
+"""
+    out = engine.run([load_rules_text(rules)])["baz"]
+    assert rows(out, "id") == [(1, 5), (2, 7)]

@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from omop_etl_spark.operators.fuzzy import fuzzy_join, fuzzy_self_match
+from omop_etl_spark.operators.fuzzy import fuzzy_self_match
 
 
 @pytest.fixture(scope="module")
@@ -41,24 +41,6 @@ def test_self_match_distance_threshold(spark, names):
     # lev("acme corp","acme inc") = 4 qualifies; "acme corp." is 5
     assert (1, 3) in got
     assert (2, 3) not in got
-
-
-def test_fuzzy_join_two_tables_and_suffixes(spark, names):
-    other = spark.createDataFrame(
-        [(10, "acme korp", "a"), (11, "zzz", "z")],
-        "id bigint, name string, blk string",
-    )
-    out = fuzzy_join(
-        names, other, text_col="name", block_on=["blk"], max_distance=1
-    )
-    got = sorted((r["id_a"], r["id_b"], r["edit_distance"]) for r in out.collect())
-    # only id 1 matches: id 2 is distance 2, id 6 has a different block
-    assert got == [(1, 10, 1)]
-
-
-def test_fuzzy_join_requires_blocking(spark, names):
-    with pytest.raises(ValueError):
-        fuzzy_join(names, names, text_col="name")
 
 
 def test_fuzzy_join_no_cartesian_in_plan(spark, names):

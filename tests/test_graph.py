@@ -4,7 +4,7 @@ Python reference, plus structural properties."""
 import pytest
 from pyspark.sql import functions as F
 
-from omop_etl_spark.operators.graph import out_degrees, pagerank
+from omop_etl_spark.operators.graph import pagerank
 
 SCALE = 1_000_000
 
@@ -75,14 +75,6 @@ def test_pagerank_checkpointing_same_result(spark):
         for r in pagerank(df, iterations=4, checkpoint_every=2).collect()
     }
     assert plain == ckpt
-
-
-def test_out_degrees(spark):
-    df = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("b", "c")], "src string, dst string"
-    )
-    got = {r.node: r.out_degree for r in out_degrees(df).collect()}
-    assert got == {"a": 2, "b": 1}
 
 
 def test_unigram_and_rare_tokens_match_python(spark):

@@ -1,13 +1,7 @@
 """Multi-batch incremental-equals-batch replay (VERDICT r6 #6).
 
-Two surfaces:
+Surfaces:
 
-* ``streaming.docs.flag_stream_neardups`` fed 3 real parquet
-  micro-batches (maxFilesPerTrigger=1): after every batch N, the
-  cumulative stream emissions must equal the batch-mode
-  ``minhash_lsh_join(base_hash='md5')`` rerun over the union of files
-  <= N — the stream-static join is stateless, so each prefix replays
-  exactly.
 * ``pipelines.curate_batch_incremental`` applied batch-at-a-time with
   the accepted output folded into the corpus: accepted docs join the
   dedup frontier (later near-dups of them are dropped), rejected docs
@@ -16,76 +10,6 @@ Two surfaces:
 """
 
 import os
-
-from pyspark.sql import functions as F
-
-DOCS = "/root/testdata/sf0.001/documents.parquet"
-
-
-def test_stream_neardups_three_microbatch_prefixes_replay_in_batch(
-    spark, tmp_path
-):
-    from omop_etl_spark.operators.dedup import minhash_lsh_join
-    from omop_etl_spark.streaming.docs import flag_stream_neardups
-
-    batch_docs = spark.read.parquet(DOCS)
-    corpus = batch_docs.filter(F.col("doc_id") % 7 != 0).persist()
-    incoming = batch_docs.filter(F.col("doc_id") % 7 == 0)
-
-    # three micro-batch files, thirds by doc_id, mtime-ordered so the
-    # file source processes them in a known order
-    d = tmp_path / "in"
-    d.mkdir()
-    splits = [
-        incoming.filter((F.col("doc_id") % 21) == 0),
-        incoming.filter((F.col("doc_id") % 21) == 7),
-        incoming.filter((F.col("doc_id") % 21) == 14),
-    ]
-    paths = []
-    for i, part in enumerate(splits):
-        p = d / f"b{i}.parquet"
-        part.toPandas().to_parquet(p)
-        os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
-        paths.append(p)
-
-    stream = (
-        spark.readStream.schema(batch_docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(str(d))
-    )
-    emitted = []  # (batch_id, doc_id, ex_id, jaccard)
-
-    def capture(bdf, bid):
-        for r in bdf.collect():
-            emitted.append((bid, r["doc_id"], r["ex_id"], r["jaccard"]))
-
-    q = (
-        flag_stream_neardups(stream, corpus, threshold=0.8)
-        .writeStream.foreachBatch(capture)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(240)
-    batch_ids = sorted({bid for bid, *_ in emitted})
-    assert len({bid for bid, *_ in emitted}) >= 1
-    n_batches = max(batch_ids) + 1
-    assert n_batches == 3, f"expected 3 micro-batches, saw {n_batches}"
-
-    for upto in range(3):
-        prefix = spark.read.parquet(*[str(p) for p in paths[: upto + 1]])
-        want = {
-            (r.in_id, r.ex_id): r.jaccard
-            for r in minhash_lsh_join(
-                prefix, corpus, threshold=0.8, base_hash="md5"
-            ).collect()
-        }
-        got = {
-            (doc, ex): j for bid, doc, ex, j in emitted if bid <= upto
-        }
-        assert got == want, f"prefix {upto}: stream != batch replay"
-    assert len(emitted) > 0
-    corpus.unpersist()
 
 
 def _cbi(spark, batch_rows, corpus_df):
@@ -228,72 +152,6 @@ def test_stream_burst_dedup_jvm_engine_equals_batch(spark, tmp_path):
         ).collect()
     )
     assert got == want == [1, 4, 10, 11, 20, 21, 30]
-
-
-def test_stream_interval_join_left_outer_emits_unmatched_after_watermark(
-    spark, tmp_path
-):
-    """A left row with no interval partner must emit null-padded once
-    the watermark passes its match window — and the matched + null
-    rows together equal the batch left join."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from omop_etl_spark.streaming.events import stream_interval_join
-
-    t0 = dt.datetime(2024, 1, 1)
-    sec = lambda s: t0 + dt.timedelta(seconds=s)  # noqa: E731
-    # left: l1 matches r1 within 60s; l2 has no partner ever
-    left_rows = [
-        {"lk": ["u1", "u2"], "lts": [sec(0), sec(10)], "lid": [1, 2]},
-        # a late left batch pushes the watermark far past l1/l2's windows
-        {"lk": ["u3"], "lts": [sec(100000)], "lid": [3]},
-    ]
-    right_rows = [
-        {"rk": ["u1"], "rts": [sec(30)], "rid": [101]},
-        {"rk": ["u3"], "rts": [sec(100010)], "rid": [103]},
-    ]
-    import os
-
-    ld, rd = tmp_path / "l", tmp_path / "r"
-    ld.mkdir(); rd.mkdir()
-    for i, b in enumerate(left_rows):
-        p = ld / f"f{i}.parquet"
-        pd.DataFrame(b).astype({"lts": "datetime64[us]"}).to_parquet(p)
-        os.utime(p, (1_700_000_000 + i,) * 2)
-    for i, b in enumerate(right_rows):
-        p = rd / f"f{i}.parquet"
-        pd.DataFrame(b).astype({"rts": "datetime64[us]"}).to_parquet(p)
-        os.utime(p, (1_700_000_000 + i,) * 2)
-
-    ls = (
-        spark.readStream.schema("lk string, lts timestamp, lid long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(ld))
-    )
-    rs = (
-        spark.readStream.schema("rk string, rts timestamp, rid long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(rd))
-    )
-    out = stream_interval_join(
-        ls, rs, on=[("lk", "rk")], left_ts="lts", right_ts="rts",
-        lower="0 seconds", upper="60 seconds", watermark="10 seconds",
-        how="left_outer",
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sij_lo")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(240)
-    got = {(r.lid, r.rid) for r in spark.table("sij_lo").collect()}
-    # l1 matched r1; l2 unmatched -> null; l3 matched r103
-    assert (1, 101) in got and (3, 103) in got
-    assert (2, None) in got, f"unmatched left row never emitted: {got}"
 
 
 def test_stream_cdc_with_deletes_three_batch_prefix_equals_apply_cdc(

@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from omop_etl_spark.operators.layout import zorder_key, zorder_repartition
+from omop_etl_spark.operators.layout import zorder_key
 
 
 def _grid(spark, n=16):
@@ -49,13 +49,6 @@ def test_zorder_key_bits_overflow_raises(spark):
     df = _grid(spark, 4)
     with pytest.raises(ValueError):
         zorder_key(df, ["x", "y"], bits=32)
-
-
-def test_zorder_repartition_partitions_cover_disjoint_ranges(spark):
-    df = zorder_repartition(_grid(spark, 16), ["x", "y"], num_partitions=4, bits=4)
-    assert df.rdd.getNumPartitions() == 4
-    assert df.count() == 256
-    assert set(df.columns) == {"x", "y"}
 
 
 def test_zorder_key_timestamp_column(spark):

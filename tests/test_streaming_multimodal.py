@@ -1,17 +1,28 @@
 """Streaming (availableNow → memory sink) and multimodal plumbing tests."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from omop_etl_spark.operators.multimodal import (
     decode_and_extract,
     fake_decoder,
     with_media_metadata,
 )
-from omop_etl_spark.sources import read_parquet_table
-from omop_etl_spark.streaming import hourly_counts, read_events_stream, sessionize
+from omop_etl_spark.sources import (
+    EVENTS_NS_COLUMNS,
+    normalize_timestamps,
+    read_parquet_table,
+)
+from omop_etl_spark.streaming import read_table_stream, sessionize
 
 EVENTS = "/root/testdata/sf0.001/events.parquet"
+
+
+def _events_stream(spark):
+    """The events file-source stream, normalized the way the registry
+    gates' ``_stream_source`` does it."""
+    return normalize_timestamps(
+        read_table_stream(spark, EVENTS), EVENTS_NS_COLUMNS["events"]
+    )
 
 
 def _run_stream(df, name):
@@ -28,107 +39,13 @@ def _run_stream(df, name):
     return name
 
 
-def test_streaming_hourly_matches_batch(spark):
-    """The stream's final windowed counts equal the batch aggregation —
-    same semantics, verified end-to-end through a real streaming query."""
-    stream = read_events_stream(spark, EVENTS)
-    _run_stream(hourly_counts(stream, watermark="0 seconds"), "hourly_t")
-    got = {
-        (r.hour_ts, r.event_type): (r.n_events, r.value_cents)
-        for r in spark.table("hourly_t").collect()
-    }
-
-    batch = (
-        read_parquet_table(spark, EVENTS, ns_columns=["ts"])
-        .groupBy(
-            F.date_trunc("hour", "ts").cast("string").alias("hour_ts"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.floor(F.col("value") * 100).cast("bigint")).alias("value_cents"),
-        )
-    )
-    want = {
-        (r.hour_ts, r.event_type): (r.n_events, r.value_cents)
-        for r in batch.collect()
-    }
-    assert got == want and len(got) > 0
-
-
 def test_streaming_sessionize_runs(spark):
-    stream = read_events_stream(spark, EVENTS)
+    stream = _events_stream(spark)
     _run_stream(sessionize(stream, gap="10 minutes", watermark="0 seconds"), "sess_t")
     rows = spark.table("sess_t").collect()
     assert len(rows) > 0
     r = rows[0]
     assert r.session_start <= r.session_end and r.n_events >= 1
-
-
-def _run_stream_append(df, name):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return name
-
-
-def test_stream_static_enrichment_matches_batch(spark):
-    from omop_etl_spark.streaming import enrich_stream
-
-    dim = spark.createDataFrame(
-        [(i, f"seg_{i % 3}") for i in range(200)], "user_id bigint, segment string"
-    )
-    stream = read_events_stream(spark, EVENTS).select("event_id", "user_id")
-    _run_stream_append(enrich_stream(stream, dim, ["user_id"]), "enrich_t")
-    got = {
-        (r.event_id, r.segment) for r in spark.table("enrich_t").collect()
-    }
-    batch = read_parquet_table(spark, EVENTS, ns_columns=["ts"]).select(
-        "event_id", "user_id"
-    ).join(dim, ["user_id"], "left")
-    want = {(r.event_id, r.segment) for r in batch.collect()}
-    assert got == want and len(got) > 0
-
-
-def test_stream_interval_join_matches_batch(spark):
-    from omop_etl_spark.streaming import stream_interval_join
-
-    def split(df):
-        purchases = df.filter(F.col("event_type") == "purchase").select(
-            F.col("event_id").alias("p_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        clicks = df.filter(F.col("event_type") == "click").select(
-            F.col("event_id").alias("c_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        return purchases, clicks
-
-    sp, sc = split(read_events_stream(spark, EVENTS))
-    joined = stream_interval_join(
-        sp, sc, on=[("p_user", "c_user")], left_ts="p_ts", right_ts="c_ts",
-        lower="0 seconds", upper="2 hours", watermark="0 seconds",
-    )
-    _run_stream_append(joined.select("p_id", "c_id"), "ivj_t")
-    got = {(r.p_id, r.c_id) for r in spark.table("ivj_t").collect()}
-
-    bp, bc = split(read_parquet_table(spark, EVENTS, ns_columns=["ts"]))
-    want = {
-        (r.p_id, r.c_id)
-        for r in bp.join(
-            bc,
-            (F.col("p_user") == F.col("c_user"))
-            & (F.col("c_ts") >= F.col("p_ts"))
-            & (F.col("c_ts") <= F.col("p_ts") + F.expr("INTERVAL 2 HOURS")),
-        ).collect()
-    }
-    assert got == want and len(got) > 0
 
 
 def test_multimodal_metadata_and_decode(spark):
@@ -158,7 +75,7 @@ def test_multimodal_decode_stub_raises_without_decoder(spark):
         decode_and_extract(df, decoder=None).collect()
 
 
-def _make_png(width, height, n_frames=None):
+def _make_png(width, height):
     """Generate a REAL RGB PNG with stdlib only (zlib + struct)."""
     import struct
     import zlib
@@ -176,61 +93,12 @@ def _make_png(width, height, n_frames=None):
         b"\x00" + bytes((x * 7 + y * 13) % 256 for x in range(3 * width))
         for y in range(height)
     )
-    out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-    if n_frames is not None:
-        out += chunk(b"acTL", struct.pack(">II", n_frames, 0))
-    out += chunk(b"IDAT", zlib.compress(scanlines)) + chunk(b"IEND", b"")
-    return out
-
-
-def _make_wav(nchannels, sampwidth, nframes):
-    import io
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(nchannels)
-        w.setsampwidth(sampwidth)
-        w.setframerate(8000)
-        w.writeframes(bytes(i % 251 for i in range(nchannels * sampwidth * nframes)))
-    return buf.getvalue()
-
-
-def test_real_png_wav_decoders_distributed(spark):
-    """png_decoder/wav_decoder parse REAL generated media through the
-    same mapInPandas plumbing the fake uses (VERDICT r10 #5)."""
-    from omop_etl_spark.operators.multimodal import media_decoder
-
-    png = _make_png(5, 3)
-    apng = _make_png(4, 2, n_frames=7)
-    wav = _make_wav(2, 2, 100)
-    df = spark.createDataFrame(
-        [
-            (1, bytearray(png), "image"),
-            (2, bytearray(apng), "image"),
-            (3, bytearray(wav), "audio"),
-        ],
-        "media_id bigint, payload binary, media_type string",
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", zlib.compress(scanlines))
+        + chunk(b"IEND", b"")
     )
-    rows = {r.media_id: r for r in decode_and_extract(df, decoder=media_decoder).collect()}
-    assert (rows[1].width, rows[1].height, rows[1].n_frames) == (5, 3, 1)
-    assert (rows[2].width, rows[2].height, rows[2].n_frames) == (4, 2, 7)
-    # audio mapping: width=channels, height=bits/sample, n_frames=PCM frames
-    assert (rows[3].width, rows[3].height, rows[3].n_frames) == (2, 16, 100)
-    # content-derived: same payload decodes to the same feature hash,
-    # different pixel data to a different one
-    assert rows[1].feature_hash != rows[2].feature_hash
-    again = {r.media_id: r for r in decode_and_extract(df, decoder=media_decoder).collect()}
-    assert rows[1].feature_hash == again[1].feature_hash
-
-
-def test_png_decoder_rejects_garbage():
-    from omop_etl_spark.operators.multimodal import png_decoder, wav_decoder
-
-    with pytest.raises(ValueError, match="not a PNG"):
-        png_decoder(b"definitely not a png")
-    with pytest.raises(ValueError, match="not a WAV"):
-        wav_decoder(b"definitely not a wav")
 
 
 def test_png_pixels_unfilters_all_filter_types():
@@ -281,6 +149,13 @@ def test_png_pixels_unfilters_all_filter_types():
     assert (png_pixels(payload) == base).all()
 
 
+def test_png_decoder_rejects_garbage():
+    from omop_etl_spark.operators.multimodal import png_pixels
+
+    with pytest.raises(ValueError, match="not a PNG"):
+        png_pixels(b"definitely not a png")
+
+
 def test_png_resizer_bilinear_exact():
     """The stdlib+numpy resize path (VERDICT r12 #5): encode
     round-trip preserves pixels AND the filter-0 feature hash,
@@ -289,7 +164,6 @@ def test_png_resizer_bilinear_exact():
     import numpy as np
 
     from omop_etl_spark.operators.multimodal import (
-        png_decoder,
         png_encode,
         png_pixels,
         png_resizer,
@@ -305,8 +179,8 @@ def test_png_resizer_bilinear_exact():
     rt = png_encode(px)
     assert (png_pixels(rt) == px).all()
     # _make_png writes filter-0 scanlines, png_encode does too → the
-    # stdlib png_decoder's filtered-bytes hash must agree
-    assert png_decoder(rt)["feature_hash"] == png_decoder(png)["feature_hash"]
+    # filtered bytes, and so the whole encoding, must agree
+    assert rt == png
     assert (png_pixels(png_resizer(png, 6, 4)) == px).all()
     quad = png_encode(
         np.array(
@@ -315,24 +189,22 @@ def test_png_resizer_bilinear_exact():
         )
     )
     assert (png_pixels(png_resizer(quad, 1, 1)).ravel() == 100).all()
-    d = png_decoder(png_resizer(png, 3, 2))
-    assert (d["width"], d["height"]) == (3, 2)
+    assert png_pixels(png_resizer(png, 3, 2)).shape == (2, 3, 3)
     with pytest.raises(ValueError, match="dims"):
         png_resizer(png, 0, 2)
 
 
 def test_media_resizer_bad_dims_raise_before_dispatch():
-    """ADVICE r13: media_resizer validates target dims BEFORE the
-    magic-byte dispatch — a caller bug raises the clear dims message
-    on any payload, instead of the PNG branch swallowing it and the
-    Pillow fallback resurfacing it as 'install Pillow'."""
-    from omop_etl_spark.operators.multimodal import media_resizer
+    """ADVICE r13: the resizer validates target dims BEFORE it parses
+    the payload — a caller bug raises the clear dims message on any
+    payload, not a decode error."""
+    from omop_etl_spark.operators.multimodal import png_resizer
 
     png = _make_png(4, 3)
     for payload in (png, b"\xff\xd8\xff\xe0not-a-real-jpeg", b""):
         for w, h in ((0, 2), (2, 0), (-1, 5)):
             with pytest.raises(ValueError, match="dims"):
-                media_resizer(payload, w, h)
+                png_resizer(payload, w, h)
 
 
 def test_resize_media_png_resizer_distributed(spark):
@@ -341,8 +213,8 @@ def test_resize_media_png_resizer_distributed(spark):
     comes back a decodable PNG at the target dims with bilinear
     content, not a stub hash."""
     from omop_etl_spark.operators.multimodal import (
-        media_resizer,
-        png_decoder,
+        png_pixels,
+        png_resizer,
         resize_media,
     )
 
@@ -350,43 +222,18 @@ def test_resize_media_png_resizer_distributed(spark):
     df = spark.createDataFrame(
         rows, "media_id long, payload binary, media_type string"
     )
-    # media_resizer dispatches these PNGs to png_resizer — no Pillow
-    out = resize_media(df, 5, 4, resizer=media_resizer).collect()
+    out = resize_media(df, 5, 4, resizer=png_resizer).collect()
     assert len(out) == 3
     for r in out:
-        meta = png_decoder(bytes(r["payload"]))
-        assert (meta["width"], meta["height"]) == (5, 4)
+        height, width = png_pixels(bytes(r["payload"])).shape[:2]
+        assert (width, height) == (5, 4)
         assert (r["width"], r["height"]) == (5, 4)
-
-
-def test_pil_adapter_decodes_generated_png(spark):
-    """Runs only where Pillow is installed (absent in this container);
-    asserts the import-gated adapter agrees with the stdlib parser."""
-    pytest.importorskip("PIL")
-    from omop_etl_spark.operators.multimodal import pil_decoder, png_decoder
-
-    png = _make_png(6, 4)
-    got, want = pil_decoder(png), png_decoder(png)
-    assert (got["width"], got["height"]) == (want["width"], want["height"]) == (6, 4)
-
-
-def test_pil_adapter_gated_when_absent():
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("Pillow installed; the gate is exercised elsewhere")
-    except ImportError:
-        pass
-    from omop_etl_spark.operators.multimodal import pil_decoder
-
-    with pytest.raises(NotImplementedError, match="Pillow"):
-        pil_decoder(_make_png(2, 2))
 
 
 def test_stream_dedup_first_seen_wins(spark):
     from omop_etl_spark.streaming import stream_dedup
 
-    stream = read_events_stream(spark, EVENTS)
+    stream = _events_stream(spark)
     # ttl_minutes=None: an armed processing-time TTL keeps AvailableNow
     # scheduling no-data batches until the TTL fires, so a TTL'd replay
     # never terminates (the r16 gate hang) — None is the replay mode
@@ -418,7 +265,7 @@ def test_stream_dedup_ttl_emits_then_is_stopped(spark):
 
     from omop_etl_spark.streaming import stream_dedup
 
-    stream = read_events_stream(spark, EVENTS)
+    stream = _events_stream(spark)
     n_users = (
         read_parquet_table(spark, EVENTS, ns_columns=["ts"])
         .select("user_id").distinct().count()
@@ -453,22 +300,6 @@ def _media(spark):
     return with_media_metadata(raw, media_type="video")
 
 
-def test_resize_media_plumbing(spark):
-    import hashlib
-
-    from omop_etl_spark.operators.multimodal import fake_resizer, resize_media
-
-    out = {r.media_id: r for r in resize_media(_media(spark), 64, 64,
-                                               resizer=fake_resizer).collect()}
-    assert set(out) == {1, 2, 3}
-    for mid, payload in [(1, b"aaa"), (2, b"bbbb"), (3, b"")]:
-        r = out[mid]
-        assert (r.width, r.height) == (64, 64)
-        assert bytes(r.payload) == fake_resizer(payload, 64, 64)
-        # resized payload is content-derived, not pass-through
-        assert bytes(r.payload) != payload
-
-
 def test_resize_media_requires_decoder(spark):
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import PythonException
@@ -477,122 +308,3 @@ def test_resize_media_requires_decoder(spark):
 
     with pytest.raises((PythonException, Py4JJavaError)):
         resize_media(_media(spark), 64, 64).collect()
-
-
-def test_sample_frames_fanout(spark):
-    from omop_etl_spark.operators.multimodal import (
-        fake_frame_extractor,
-        sample_frames,
-    )
-
-    rows = sample_frames(
-        _media(spark), every_n=4, extractor=fake_frame_extractor
-    ).collect()
-    by_media = {}
-    for r in rows:
-        by_media.setdefault(r.media_id, []).append(r)
-    for mid, payload in [(1, b"aaa"), (2, b"bbbb"), (3, b"")]:
-        frames = fake_frame_extractor(payload, "video")
-        got = sorted(by_media[mid], key=lambda r: r.frame_idx)
-        # every 4th frame kept, indices 0,4,8..., hashes match the stub
-        assert [r.frame_idx for r in got] == list(range(0, len(frames), 4))
-        assert all(r.n_frames == len(frames) for r in got)
-        assert [r.frame_hash for r in got] == frames[::4]
-
-
-def test_stream_neardup_flags_match_batch_join(spark):
-    """The stream-static LSH flagger emits exactly the pairs the batch
-    minhash_lsh_join(base_hash='md5') produces on the same split —
-    bit-identical signatures, bands, bucket cap, and verification."""
-    from omop_etl_spark.operators.dedup import minhash_lsh_join
-    from omop_etl_spark.streaming.docs import (
-        flag_stream_neardups,
-        read_docs_stream,
-    )
-
-    DOCS = "/root/testdata/sf0.001/documents.parquet"
-    batch_docs = spark.read.parquet(DOCS)
-    corpus = batch_docs.filter(F.col("doc_id") % 7 != 0)
-
-    stream = read_docs_stream(spark, DOCS).filter(F.col("doc_id") % 7 == 0)
-    out = flag_stream_neardups(stream, corpus, threshold=0.8)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("neardup_t")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r.doc_id, r.ex_id): r.jaccard for r in spark.table("neardup_t").collect()
-    }
-
-    incoming = batch_docs.filter(F.col("doc_id") % 7 == 0)
-    want = {
-        (r.in_id, r.ex_id): r.jaccard
-        for r in minhash_lsh_join(
-            incoming, corpus, threshold=0.8, base_hash="md5"
-        ).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_streaming_sliding_matches_batch(spark):
-    """Sliding (overlapping) event-time windows: the stream's final
-    1h/15m windowed counts equal the identical F.window batch
-    aggregation — each event lands in exactly 4 windows, assigned
-    map-side in both modes."""
-    from omop_etl_spark.streaming import sliding_counts
-
-    stream = read_events_stream(spark, EVENTS)
-    _run_stream(
-        sliding_counts(stream, watermark="0 seconds"), "sliding_t"
-    )
-    got = {
-        (r.win_start, r.event_type): (r.n_events, r.value_cents)
-        for r in spark.table("sliding_t").collect()
-    }
-
-    batch = (
-        read_parquet_table(spark, EVENTS, ns_columns=["ts"])
-        .groupBy(
-            F.window("ts", "1 hour", "15 minutes").alias("win"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.floor(F.col("value") * 100).cast("bigint")).alias("value_cents"),
-        )
-        .select(
-            F.col("win.start").cast("string").alias("win_start"),
-            "event_type",
-            "n_events",
-            "value_cents",
-        )
-    )
-    want = {
-        (r.win_start, r.event_type): (r.n_events, r.value_cents)
-        for r in batch.collect()
-    }
-    assert got == want and len(got) > 0
-    # overlap sanity: total window-rows ~= 4x the tumbling hour count
-    hours = {k[0][:13] for k in got}
-    assert len(got) > len(hours)
-
-
-def test_media_decoder_dispatch_and_fallthrough():
-    """media_decoder routes PNG/WAV to the stdlib parsers by magic
-    bytes; anything else falls through to the Pillow adapter, which
-    (absent Pillow) raises the documented NotImplementedError."""
-    from omop_etl_spark.operators.multimodal import media_decoder
-
-    png = _make_png(3, 2)
-    assert media_decoder(png, "image")["width"] == 3
-    wav = _make_wav(1, 2, 10)
-    assert media_decoder(wav, "audio")["n_frames"] == 10
-    jpeg_ish = b"\xff\xd8\xff\xe0" + b"\x00" * 32
-    try:
-        import PIL  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError, match="Pillow"):
-            media_decoder(jpeg_ish, "image")

@@ -1,5 +1,5 @@
-"""Tests for JSONL/CSV ingestion, partitioned writes, and the
-streaming KMV sketch (batch/stream equivalence)."""
+"""Streaming sketches and state reducers: each stream's final result
+equals the batch operator's (batch/stream equivalence)."""
 
 import os
 import random
@@ -8,61 +8,21 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from omop_etl_spark.operators.sketches import kmv_distinct
-from omop_etl_spark.sources import read_csv, read_jsonl, write_partitioned
 
 EVENTS = "/root/testdata/sf0.001/events.parquet"
 
 
-def test_read_jsonl_clean_and_corrupt(spark, tmp_path):
-    p = tmp_path / "docs.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "hello", "lang": "en", "source": "web", "n_chars": 5}\n'
-        '{"doc_id": 2, "text": "salut", "lang": "fr", "source": "web", "n_chars": 5}\n'
-        "{this is not json}\n"
-    )
-    df = read_jsonl(spark, str(p))
-    rows = df.collect()
-    assert len(rows) == 3
-    corrupt = [r for r in rows if r["_corrupt_record"] is not None]
-    assert len(corrupt) == 1 and corrupt[0]["doc_id"] is None
-    clean = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-    assert sorted(r["doc_id"] for r in clean.collect()) == [1, 2]
-
-
-def test_read_csv_explicit_schema(spark, tmp_path):
-    p = tmp_path / "t.csv"
-    p.write_text("id,name,score\n1,alpha,2.5\n2,beta,oops_not_a_number\n3,gamma,7.0\n")
-    df = read_csv(spark, str(p), "id bigint, name string, score double")
-    rows = {r["id"]: r for r in df.collect() if r["id"] is not None}
-    assert rows[1]["score"] == 2.5
-    bad = [r for r in df.collect() if r["_corrupt_record"] is not None]
-    assert len(bad) == 1
-
-
-def test_write_partitioned_prunes_on_read(spark, tmp_path):
-    df = spark.createDataFrame(
-        [Row(doc_id=i, source=("web" if i % 2 else "book"), n=i) for i in range(100)]
-    )
-    out = str(tmp_path / "part")
-    write_partitioned(df, out, ["source"], max_records_per_file=10)
-    # directory layout is hive-style
-    assert os.path.isdir(os.path.join(out, "source=web"))
-    back = spark.read.parquet(out).filter(F.col("source") == "web")
-    assert back.count() == 50
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "source" in plan
-    # maxRecordsPerFile bounded the shard size
-    files = [
-        f for f in os.listdir(os.path.join(out, "source=web")) if f.endswith(".parquet")
-    ]
-    assert len(files) >= 5
-
-
 def test_stream_kmv_matches_batch(spark):
-    from omop_etl_spark.sources import read_parquet_table
-    from omop_etl_spark.streaming import read_events_stream, stream_kmv_distinct
+    from omop_etl_spark.sources import (
+        EVENTS_NS_COLUMNS,
+        normalize_timestamps,
+        read_parquet_table,
+    )
+    from omop_etl_spark.streaming import read_table_stream, stream_kmv_distinct
 
-    stream = read_events_stream(spark, EVENTS)
+    stream = normalize_timestamps(
+        read_table_stream(spark, EVENTS), EVENTS_NS_COLUMNS["events"]
+    )
     q = (
         stream_kmv_distinct(stream, "event_type", "user_id", k=32)
         .writeStream.format("memory")
@@ -122,62 +82,6 @@ def test_stream_kmv_state_is_bounded_across_batches(spark, tmp_path):
     ests = sorted(r["est_distinct"] for r in rows)
     assert want["est_distinct"] in ests
     assert final["n_kept"] == 16
-
-
-def test_ingest_stats_counts_partial_and_full_corruption(spark, tmp_path):
-    from omop_etl_spark.sources import ingest_stats
-
-    p = tmp_path / "mixed.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "ok", "lang": "en", "source": "web", "n_chars": 2}\n'
-        '{"doc_id": "notint", "text": "partial", "lang": "en", "source": "web", "n_chars": 7}\n'
-        "garbage line\n"
-    )
-    df = read_jsonl(spark, str(p))
-    row = ingest_stats(df).collect()[0]
-    assert row["n_rows"] == 3
-    assert row["n_corrupt"] == 2  # partial type failure + full garbage
-    assert row["n_unparsed"] == 1  # only the garbage line parsed nothing
-
-
-def test_dq_monitor_stream_reports_per_batch(spark, tmp_path):
-    import pandas as pd
-
-    from omop_etl_spark.operators.quality import DQRule
-    from omop_etl_spark.streaming import dq_monitor_stream
-
-    d = tmp_path / "dq_in"
-    d.mkdir()
-    pd.DataFrame({"k": [1, 2, 3], "v": [1.0, -5.0, 2.0]}).to_parquet(d / "f1.parquet")
-    pd.DataFrame({"k": [4, 4, 5], "v": [None, 3.0, 9.0]}).to_parquet(d / "f2.parquet")
-
-    stream = (
-        spark.readStream.schema("k long, v double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    rules = [
-        DQRule("v_nonneg", "batch", "range", "v", lo=0.0),
-        DQRule("k_unique", "batch", "unique", "k"),
-    ]
-    reports = []
-
-    def sink(report, batch_id):
-        reports.append({(r["rule_name"]): r.asDict() for r in report.collect()})
-
-    q = dq_monitor_stream(stream, rules, "batch", sink).trigger(
-        availableNow=True
-    ).start()
-    q.awaitTermination(120)
-    assert len(reports) == 2
-    merged_viol = sorted(
-        (b["v_nonneg"]["n_violations"], b["k_unique"]["n_violations"])
-        for b in reports
-    )
-    # one batch has the -5.0 (range violation), the other has null v +
-    # duplicate k=4 (range counts NULL as violation; unique counts both rows)
-    assert merged_viol == [(1, 0), (1, 2)]
-    assert all(b["v_nonneg"]["n_rows"] == 3 for b in reports)
 
 
 def test_stream_latest_state_survives_out_of_order_batches(spark, tmp_path):
@@ -264,48 +168,6 @@ def test_stream_latest_state_max_struct_recovery(spark, tmp_path):
     # a: ord tie 7 — the non-NULL value wins in state AND in recovery;
     # b: higher ord wins; c: higher ord wins even with a NULL value
     assert got == {"a": (7, "tie_a"), "b": (9, "new_b"), "c": (2, None)}
-
-
-def test_read_fixed_width(spark, tmp_path):
-    from omop_etl_spark.sources import read_fixed_width
-
-    p = tmp_path / "fw.txt"
-    p.write_text(
-        "00123Alice     019.5\n"
-        "00456Bob       BADNUM\n"
-        "00789          003.25\n"
-    )
-    df = read_fixed_width(
-        spark,
-        str(p),
-        [("id", 1, 5, "bigint"), ("name", 6, 15, "string"), ("score", 16, 21, "double")],
-    )
-    rows = {r["id"]: r for r in df.collect()}
-    assert rows[123]["name"] == "Alice" and rows[123]["score"] == 19.5
-    assert rows[456]["score"] is None  # bad numeric -> NULL, not a killed task
-    assert rows[789]["name"] is None  # all-blank field -> NULL
-
-
-def test_load_dq_rules_yaml(spark):
-    from omop_etl_spark.operators.quality import dq_profile, load_dq_rules
-    from pyspark.sql import Row
-
-    yaml_text = """
-rules:
-  - {name: s_domain, table: t, kind: in_set, column: s, values: [x, y]}
-  - {name: n_range, table: t, kind: range, column: n, lo: 0}
-"""
-    rules = load_dq_rules(yaml_text)
-    df = spark.createDataFrame([Row(s="x", n=1), Row(s="z", n=-2)])
-    out = {r["rule_name"]: r["n_violations"] for r in dq_profile({"t": df}, rules).collect()}
-    assert out == {"s_domain": 1, "n_range": 1}
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown keys"):
-        load_dq_rules("rules:\n  - {name: a, table: t, kind: not_null, column: c, typo: 1}")
-    with _pytest.raises(ValueError, match="missing required"):
-        load_dq_rules("rules:\n  - {name: a, table: t, kind: not_null}")
 
 
 def test_stream_latest_state_tie_resolution_batching_independent(spark, tmp_path):
