@@ -248,6 +248,12 @@ def recommended_conf(cores: int = 32) -> dict[str, str]:
       ``might_contain`` into the fact scan — rows that cannot match
       never reach the shuffle. Inert at bench scale by design;
       plan-asserted in ``tests/test_plan_quality.py``.
+    * The generated-class cache (``codegen.cache.maxEntries``, a static
+      conf) holds 1024 classes, not Spark's 100. One ``etl_omop`` pass
+      of the benchmark compiles about 250 distinct classes, so with
+      the default LRU every warm pass recompiled all of them with
+      Janino, and the JIT compiled them again. At 1024 a warm pass
+      compiles 16–38, for 2.6 MB more Metaspace (4 cores, sf0.01).
     * ``executorEnv.PYTHONPATH`` is the directory that holds this
       package, so Python workers can import it whatever the driver's
       working directory (a pandas UDF pickles the package's functions
@@ -263,6 +269,7 @@ def recommended_conf(cores: int = 32) -> dict[str, str]:
         "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
         "spark.sql.parquet.compression.codec": "snappy",
         "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+        "spark.sql.codegen.cache.maxEntries": "1024",
         "spark.executorEnv.PYTHONPATH": str(Path(__file__).resolve().parents[1]),
     }
 

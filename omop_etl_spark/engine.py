@@ -13,26 +13,92 @@ Pipeline ordering mirrors the reference (``__main__.py:56-88``): all
 dependencies first, then every table's initialization (pre_init →
 mapping build → post_init), and only then every table's column phase —
 the phase barrier that lets FK remaps read any other table's
-``mapping.*`` frame.
+``mapping.*`` frame. After the barrier each column phase reads only
+``mapping.*`` tables and sources, so :meth:`Engine.run` builds every
+target plan first, serially and each under its own ``USE`` (``spark.sql``
+analyzes eagerly, so a rule on a missing table or column fails here, as
+a :class:`~omop_etl_spark.rules.model.RuleError`, before any
+``omop.*`` table is written). It then runs all catalog statements for
+the ``omop.*`` tables, and only then submits the ``saveAsTable`` calls
+to a thread pool, so the writes' Spark jobs overlap.
 """
 
 from __future__ import annotations
 
 import logging
+import shutil
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 from typing import Callable, Iterable, Sequence
+from urllib.parse import urlparse
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from .api import load_required_columns_csv
 from .dialect import is_plpgsql_script, translate
 from .planner.compiler import TARGET_SCHEMA, TableCompiler
 from .rules.loader import load_rules_dir, resolve_default_schemas, topo_sort
-from .rules.model import DependencySpec, TableSpec
+from .rules.model import DependencySpec, ExpressionRule, RuleError, TableSpec
 
 __all__ = ["Engine"]
 
 log = logging.getLogger(__name__)
+
+
+class _Catalog:
+    """The catalog statements the engine sends. One :meth:`Engine.run`
+    shares one instance, so within a run each schema is created and
+    located once and ``USE`` is sent only when the schema changes.
+    Outside a run every call gets a fresh instance: nothing is cached
+    across runs, where the caller may drop or switch databases."""
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self.schemas: set[str] = set()
+        self.locations: dict[str, str | None] = {}
+        self.current: str | None = None
+
+    def ensure_schema(self, schema: str) -> None:
+        if schema not in self.schemas:
+            self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {schema}")
+            self.schemas.add(schema)
+
+    def use(self, schema: str | None) -> None:
+        if schema and schema != self.current:
+            self.ensure_schema(schema)
+            self.spark.sql(f"USE {schema}")
+            self.current = schema
+
+    def _location(self, schema: str) -> str | None:
+        if schema not in self.locations:
+            try:
+                rows = self.spark.sql(f"DESCRIBE DATABASE {schema}").filter(
+                    "info_name = 'Location'"
+                ).collect()
+                self.locations[schema] = rows[0]["info_value"] if rows else None
+            except Exception:  # noqa: BLE001 - best-effort cleanup
+                self.locations[schema] = None
+        return self.locations[schema]
+
+    def clear_table(self, qualified_name: str) -> None:
+        """Drop ``qualified_name`` so an overwrite ``saveAsTable`` also
+        survives an orphaned warehouse directory: a table absent from
+        the (in-memory) catalog whose managed location still exists on
+        disk from a previous session raises LOCATION_ALREADY_EXISTS —
+        drop both."""
+        schema, _, table = qualified_name.partition(".")
+        self.ensure_schema(schema)
+        self.spark.sql(f"DROP TABLE IF EXISTS {qualified_name}")
+        location = self._location(schema)
+        if location:
+            path = Path(urlparse(location).path) / table.lower()
+            if path.exists():
+                shutil.rmtree(path, ignore_errors=True)
+
+
+def _write(df: DataFrame, qualified_name: str) -> None:
+    df.write.mode("overwrite").format("parquet").saveAsTable(qualified_name)
 
 
 class Engine:
@@ -56,11 +122,13 @@ class Engine:
         # missing/empty lookup — fail fast like the reference's psql run
         # would; pass strict_scripts=False for the old warn-and-continue
         self.strict_scripts = strict_scripts
+        #: the catalog state :meth:`run` shares between its tables
+        self._run_catalog: _Catalog | None = None
 
     # -- catalog ------------------------------------------------------------
 
-    def _ensure_schema(self, schema: str) -> None:
-        self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {schema}")
+    def _catalog(self) -> _Catalog:
+        return self._run_catalog or _Catalog(self.spark)
 
     @staticmethod
     def _resolve_location(path: str | Path) -> str:
@@ -132,7 +200,7 @@ class Engine:
         fmt = fmt.lower()
         if fmt in ("parquet", "orc"):
             schema, _, _ = qualified_name.partition(".")
-            self._ensure_schema(schema)
+            self._catalog().ensure_schema(schema)
             self.spark.sql(f"DROP TABLE IF EXISTS {qualified_name}")
             self.spark.sql(
                 f"CREATE TABLE {qualified_name} USING {fmt} "
@@ -209,7 +277,7 @@ class Engine:
         query). Verified shuffle-free in tests/test_sources_sinks.py.
         """
         schema, _, _ = qualified_name.partition(".")
-        self._ensure_schema(schema)
+        self._catalog().ensure_schema(schema)
         self.spark.sql(f"DROP TABLE IF EXISTS {qualified_name}")
         (
             df.write.mode("overwrite")
@@ -252,27 +320,10 @@ class Engine:
         writer.save(str(Path(path)))
 
     def _overwrite_table(self, df: DataFrame, qualified_name: str) -> None:
-        """``saveAsTable`` with overwrite that also survives orphaned
-        warehouse directories: a table absent from the (in-memory)
-        catalog whose managed location still exists on disk from a
-        previous session raises LOCATION_ALREADY_EXISTS — drop both."""
-        import shutil
-        from urllib.parse import urlparse
-
-        schema, _, table = qualified_name.partition(".")
-        self._ensure_schema(schema)
-        self.spark.sql(f"DROP TABLE IF EXISTS {qualified_name}")
-        try:
-            db_loc = self.spark.sql(f"DESCRIBE DATABASE {schema}").filter(
-                "info_name = 'Location'"
-            ).collect()
-            if db_loc:
-                path = Path(urlparse(db_loc[0]["info_value"]).path) / table.lower()
-                if path.exists():
-                    shutil.rmtree(path, ignore_errors=True)
-        except Exception:  # noqa: BLE001 - best-effort cleanup
-            pass
-        df.write.mode("overwrite").format("parquet").saveAsTable(qualified_name)
+        """``saveAsTable`` with overwrite, after
+        :meth:`_Catalog.clear_table`."""
+        self._catalog().clear_table(qualified_name)
+        _write(df, qualified_name)
 
     def register_udf(self, name: str, fn: Callable, return_type: str) -> None:
         """Register a Python UDF usable from rule SQL — the portable
@@ -289,12 +340,11 @@ class Engine:
 
     # -- execution ----------------------------------------------------------
 
-    def _use(self, schema: str | None) -> None:
-        if schema:
-            self._ensure_schema(schema)
-            self.spark.sql(f"USE {schema}")
-
     def _run_scripts(self, spec: DependencySpec) -> None:
+        if spec.scripts and self._run_catalog is not None:
+            # a script may create, drop or switch databases: forget what
+            # this run knew of the catalog
+            self._run_catalog = _Catalog(self.spark)
         for script in spec.scripts:
             if is_plpgsql_script(script):
                 log.warning(
@@ -324,14 +374,14 @@ class Engine:
             self.temp_views.add(t.alias)
 
     def run_dependency(self, spec: DependencySpec) -> None:
-        self._use(spec.default_schema)
+        self._catalog().use(spec.default_schema)
         self._run_scripts(spec)
         self._run_temp_tables(spec.pre_init)
         self._run_temp_tables(spec.post_init)
 
     def initialize_table(self, spec: TableSpec) -> None:
         """pre_init → build + persist ``mapping.<t>`` → post_init."""
-        self._use(spec.default_schema)
+        self._catalog().use(spec.default_schema)
         self._run_scripts(spec)
         self._run_temp_tables(spec.pre_init)
         compiler = TableCompiler(self.spark, spec, self.temp_views)
@@ -345,17 +395,58 @@ class Engine:
     def process_table(
         self, spec: TableSpec, apply_required_filter: bool = False
     ) -> DataFrame:
-        """Column phase → persist + return ``omop.<t>``."""
-        self._use(spec.default_schema)
+        """Column phase → the analyzed, unwritten ``omop.<t>`` target
+        frame. An analysis error (a rule on a missing table or column)
+        is raised as :class:`RuleError` naming the rules file's stem,
+        the target table, the target column(s) whose match query fails
+        and the first line of Spark's message."""
+        self._catalog().use(spec.default_schema)
         compiler = TableCompiler(self.spark, spec, self.temp_views)
-        target = compiler.build_target()
+        try:
+            target = compiler.build_target()
+        except AnalysisException as exc:
+            cols = self._failing_columns(compiler)
+            where = f" column(s) {', '.join(cols)}" if cols else ""
+            first = (str(exc).strip().splitlines() or [""])[0]
+            raise RuleError(
+                f"{spec.file_stem or spec.name}: "
+                f"{TARGET_SCHEMA}.{spec.name}{where}: {first}"
+            ) from exc
         if apply_required_filter:
             for col in self.required_columns.get(spec.name.lower(), set()):
                 if col in (c.lower() for c in target.columns):
                     target = target.filter(target[col].isNotNull())
-        qualified = f"{TARGET_SCHEMA}.{spec.name}"
-        self._overwrite_table(target, qualified)
-        return self.spark.table(qualified)
+        return target
+
+    def _failing_columns(self, compiler: TableCompiler) -> list[str]:
+        """Target columns whose rule's match query fails analysis on
+        its own (only run on the error path)."""
+        cols: list[str] = []
+        for slot in compiler.enabled_slots():
+            if not isinstance(slot.rule, ExpressionRule):
+                continue
+            try:
+                self.spark.sql(compiler.match_sql(slot.rule))
+            except AnalysisException:
+                if slot.rule.name not in cols:
+                    cols.append(slot.rule.name)
+        return cols
+
+    def _write_all(self, targets: dict[str, DataFrame]) -> None:
+        """``saveAsTable`` every ``{qualified name: frame}`` from a pool
+        of at most ``defaultParallelism`` threads. Every write runs to
+        its end; then the first failure, in submission order, is raised
+        and any later ones are logged."""
+        if not targets:
+            return
+        workers = min(len(targets), self.spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(workers, thread_name_prefix="omop-write") as pool:
+            futures = [pool.submit(_write, df, name) for name, df in targets.items()]
+        errors = [f.exception() for f in futures if f.exception() is not None]
+        for exc in errors[1:]:
+            log.error("another omop.* write failed too", exc_info=exc)
+        if errors:
+            raise errors[0]
 
     def run(
         self,
@@ -363,16 +454,50 @@ class Engine:
         apply_required_filter: bool = False,
     ) -> dict[str, DataFrame]:
         """Run the full pipeline with the reference's phase barrier:
-        every initialization before any column phase."""
+        every initialization before any column phase.
+
+        After the barrier every table's target frame (with its
+        required-column filter) is built and analyzed, serially and
+        under its own ``USE``; then every ``omop.*`` table's catalog
+        statements run, serially; only then are the writes submitted
+        to a thread pool of ``min(len(tables), defaultParallelism)``
+        workers. Errors:
+
+        * a column-phase analysis error is a :class:`RuleError` raised
+          before any ``omop.*`` table is written;
+        * errors in the mapping phase (pre_init, the key sources,
+          post_init) still surface during init, table by table, after
+          the earlier tables' ``mapping.*`` writes: post_init views may
+          read an earlier table's ``mapping.*``, so that phase cannot
+          be built ahead;
+        * a write that fails at run time is raised after every other
+          write has finished; the first failure in table order wins.
+
+        Within one run each schema is created and located once, and
+        ``USE`` is sent only when the schema changes.
+        """
         ordered = resolve_default_schemas(topo_sort(list(specs)))
         tables = [s for s in ordered if isinstance(s, TableSpec)]
-        for spec in ordered:
-            if isinstance(spec, TableSpec):
-                self.initialize_table(spec)
-            else:
-                self.run_dependency(spec)
+        self._run_catalog = _Catalog(self.spark)
+        try:
+            for spec in ordered:
+                if isinstance(spec, TableSpec):
+                    self.initialize_table(spec)
+                else:
+                    self.run_dependency(spec)
+            targets = {
+                f"{TARGET_SCHEMA}.{spec.name}": self.process_table(
+                    spec, apply_required_filter
+                )
+                for spec in tables
+            }
+            for name in targets:
+                self._run_catalog.clear_table(name)
+        finally:
+            self._run_catalog = None
+        self._write_all(targets)
         return {
-            spec.name: self.process_table(spec, apply_required_filter)
+            spec.name: self.spark.table(f"{TARGET_SCHEMA}.{spec.name}")
             for spec in tables
         }
 

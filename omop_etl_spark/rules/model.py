@@ -27,7 +27,7 @@ YAML surface (reference parity):
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Mapping, Sequence, Union
 
 __all__ = [
@@ -229,6 +229,8 @@ class DependencySpec:
     post_init: Sequence[TempTableDef] = ()
     scripts: Sequence[str] = ()
     depends_on: Sequence[str] = ()
+    #: stem of the rules file the spec was loaded from, when known
+    file_stem: str | None = None
 
 
 @dataclass(frozen=True)
@@ -381,6 +383,7 @@ def parse_spec(raw: Mapping, name: str | None = None) -> TableSpec | DependencyS
         post_init=_parse_temp_tables(raw.get("post_init"), "post_init"),
         scripts=tuple(str(s) for s in raw.get("scripts") or ()),
         depends_on=tuple(str(d) for d in raw.get("depends_on") or ()),
+        file_stem=name,
     )
 
     if "name" not in raw or "primary_key" not in raw:

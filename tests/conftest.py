@@ -14,6 +14,11 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
+    from omop_etl_spark.conf import recommended_conf
+
+    # the generated-class cache size is a static conf the engine's
+    # sessions set; tests/test_work_budget.py pins the compiles it saves
+    codegen_cache = "spark.sql.codegen.cache.maxEntries"
     wh = tempfile.mkdtemp(prefix="spark-wh-")
     spark = (
         SparkSession.builder.master("local[4]")
@@ -22,6 +27,7 @@ def spark():
         .config("spark.sql.warehouse.dir", wh)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
+        .config(codegen_cache, recommended_conf()[codegen_cache])
         .appName("omop-etl-spark-tests")
         .getOrCreate()
     )

@@ -506,3 +506,111 @@ columns:
 """
     out = engine.run([load_rules_text(rules)])["baz"]
     assert rows(out, "id") == [(1, 5), (2, 7)]
+
+
+def _two_column_rules(name, source, expression, default_schema="cerner"):
+    return f"""
+name: {name}
+default_schema: {default_schema}
+primary_key:
+  name: id
+  sources:
+    pk:
+      table: {source}
+      columns:
+        id: integer
+columns:
+  - name: alpha
+    tables: [{source}]
+    expression: {source}.alpha
+  - name: beta
+    tables: [{source}]
+    expression: {expression}
+"""
+
+
+def test_bad_rule_in_last_table_writes_no_omop_table(engine, spark):
+    """Every target plan is built before the first ``omop.*`` write, so
+    a rule on a missing column fails the run with nothing written."""
+    from pyspark.errors import AnalysisException
+
+    from omop_etl_spark.rules.model import RuleError
+
+    seed_cerner(engine, spark)
+    specs = [
+        load_rules_text(COPY_RULES, name="baz"),
+        load_rules_text(
+            _two_column_rules("last", "bar", "bar.no_such_column"), name="last_rules"
+        ),
+    ]
+    with pytest.raises(RuleError, match=r"^last_rules: omop\.last column\(s\) beta: ") as err:
+        engine.run(specs)
+    assert "no_such_column" in str(err.value)
+    assert isinstance(err.value.__cause__, AnalysisException)
+    assert not spark.catalog.databaseExists("omop") or not spark.catalog.listTables("omop")
+
+
+def test_tables_in_two_default_schemas_match_their_own_runs(engine, spark):
+    """Each target is analyzed under its own ``USE`` before the pooled
+    writes, so bare names resolve as they do when each table runs
+    alone."""
+    engine.register_df(
+        "s1.src", spark.createDataFrame([(1, "a", 10), (2, "b", 20)], "id int, alpha string, beta int")
+    )
+    engine.register_df(
+        "s2.src",
+        spark.createDataFrame([(5, "x", 50), (7, "y", 70), (9, "z", 90)], "id int, alpha string, beta int"),
+    )
+    specs = [
+        load_rules_text(_two_column_rules("t1", "src", "src.beta", "s1")),
+        load_rules_text(_two_column_rules("t2", "src", "src.beta + 1", "s2")),
+    ]
+    together = {name: rows(df, "id") for name, df in engine.run(specs).items()}
+    alone = {spec.name: rows(engine.run([spec])[spec.name], "id") for spec in specs}
+    assert together == alone
+    assert together == {
+        "t1": [(1, "a", 10), (2, "b", 20)],
+        "t2": [(1, "x", 51), (2, "y", 71), (3, "z", 91)],
+    }
+
+
+def test_failed_write_waits_for_the_other_writes(engine, spark):
+    """A write that fails at run time is raised after the other pooled
+    writes finish, and no pool thread outlives the run."""
+    import threading
+
+    engine.register_df(
+        "cerner.wide",
+        spark.createDataFrame([(1, "a", 2**40)], "id int, alpha string, big bigint"),
+    )
+    seed_cerner(engine, spark)
+    specs = [
+        load_rules_text(_two_column_rules("bad", "wide", "CAST(wide.big AS INT)")),
+        load_rules_text(COPY_RULES),
+    ]
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        with pytest.raises(Exception, match="CAST_OVERFLOW"):
+            engine.run(specs)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert rows(spark.table("omop.baz"), "id") == [(1, "a", 8), (2, "c", 4), (3, "d", 6)]
+    assert not [t for t in threading.enumerate() if t.name.startswith("omop-write")]
+
+
+def test_script_that_switches_database_does_not_leak_into_the_next_table(engine, spark):
+    """``USE`` is skipped while the schema is unchanged, so a setup
+    script that switches database must make the next table send its
+    own ``USE`` again."""
+    seed_cerner(engine, spark)
+    engine.register_df(
+        "other.foo", spark.createDataFrame([(7, "z", 1, 1)], "id int, alpha string, beta int, gamma int")
+    )
+    specs = [
+        load_rules_text(COPY_RULES),
+        load_rules_text("scripts:\n  - USE other\n", name="switch"),
+        load_rules_text(_two_column_rules("after", "foo", "foo.beta")),
+    ]
+    out = engine.run(specs)
+    assert rows(out["after"], "id") == [(1, "a", 4), (2, "c", 5), (3, "d", 9)]

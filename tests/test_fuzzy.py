@@ -1,7 +1,6 @@
 """Blocked Levenshtein matching (omop_etl_spark/operators/fuzzy.py)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from omop_etl_spark.operators.fuzzy import fuzzy_self_match
 
@@ -43,7 +42,7 @@ def test_self_match_distance_threshold(spark, names):
     assert (2, 3) not in got
 
 
-def test_fuzzy_join_no_cartesian_in_plan(spark, names):
+def test_fuzzy_self_match_no_cartesian_in_plan(spark, names):
     out = fuzzy_self_match(
         names, id_col="id", text_col="name", block_on=["blk"]
     )
